@@ -1,8 +1,10 @@
 package graft
 
 import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.core.Identifier
 import graft.operators.GeoPipeline
@@ -59,23 +61,38 @@ object Importer {
         .getOrElse(Identifier.suggestTableName(path))
       val name = Identifier.resolveCollision(baseName, req.existingTables)
 
+      // ----- Spark-visible payload: Spark's file listing skips names
+      //       starting `_` or `.`, so a payload its file sources read is
+      //       read under a visible name inside the import's temp dir
+      val src = new File(path)
+      val hidden = src.getName.startsWith("_") || src.getName.startsWith(".")
+      val readPath =
+        if (!(hidden && SparkListed(ext))) path
+        else {
+          // an extracted payload is the import's own copy; a caller's file is not
+          val own = tempDir.isDefined
+          val dir = tempDir.getOrElse(Files.createTempDirectory("graft_import_").toFile)
+          tempDir = Some(dir)
+          val visible = Files.createTempFile(dir.toPath, "payload_", ext)
+          if (own) Files.move(src.toPath, visible, StandardCopyOption.REPLACE_EXISTING)
+          else Files.copy(src.toPath, visible, StandardCopyOption.REPLACE_EXISTING)
+          visible.toString
+        }
+
       // ----- Normalize + load, one branch per format (stage 3)
       val loaded: DataFrame = ext match {
-        case ".csv" => CsvImport.read(spark, path, req.inferTypes)
-        case ".xlsx" => XlsxImport.read(spark, path, req.inferTypes)
-        case ".ods" => OdsImport.read(spark, path, req.inferTypes)
-        case ".xls" => XlsImport.read(spark, path, req.inferTypes)
-        case ".shp" => Shapefile.read(spark, path)
-        case ".kml" => KmlImport.read(spark, path)
-        case ".json" | ".js" | ".geojson" => GeoJsonImport.read(spark, path)
-        case ".gpx" => GpxImport.read(spark, path)
-        case ".tif" | ".tiff" => GeoTiff.read(spark, path) // S10: tiled raster
+        case ".csv" => CsvImport.read(spark, readPath, req.inferTypes)
+        case ".xlsx" => XlsxImport.read(spark, readPath, req.inferTypes)
+        case ".ods" => OdsImport.read(spark, readPath, req.inferTypes)
+        case ".xls" => XlsImport.read(spark, readPath, req.inferTypes)
+        case ".shp" => Shapefile.read(spark, readPath)
+        case ".kml" => KmlImport.read(spark, readPath)
+        case ".json" | ".js" | ".geojson" => GeoJsonImport.read(spark, readPath)
+        case ".gpx" => GpxImport.read(spark, readPath)
+        case ".tif" | ".tiff" => GeoTiff.read(spark, readPath) // S10: tiled raster
         case other =>
           throw new UnsupportedOperationException(s"unsupported format $other")
       }
-
-      // ----- Empty guard (P5, importer.rb:203-206)
-      if (loaded.isEmpty) throw new EmptyTableException(s"The file $path is empty")
 
       // ----- Column sanitization (P1) — readers emit raw source names
       val named = GeoPipeline.sanitizeColumns(loaded)
@@ -89,7 +106,10 @@ object Importer {
       val withGeom1 = GeoPipeline.georeference(withGeom0)
       val geo = GeoPipeline.reprojectTo4326(withGeom1)
 
-      val rows = geo.count()
+      // ----- Empty guard (P5, importer.rb:203-206) from the final count:
+      //       every step since the load preserves rows
+      val rows = countRows(geo)
+      if (rows == 0) throw new EmptyTableException(s"The file $path is empty")
       log += s"imported $rows rows into $name"
       // D7 divergence: the reference deletes temp files eagerly because the
       // data now lives in Postgres; our result DataFrame may still scan the
@@ -102,6 +122,20 @@ object Importer {
       tempDir.foreach(Archive.cleanup) // failed import: clean eagerly (D6/D7)
       throw e
     }
+  }
+
+  /** Payload extensions whose readers list files through Spark's file sources. */
+  private val SparkListed = Set(".csv", ".json", ".js", ".geojson")
+
+  /** Row count in one Spark job. `Dataset.count()` plans partial
+    * aggregate → exchange → final aggregate, which adaptive execution
+    * runs as two jobs; the rows of an empty projection are counted with
+    * no exchange. Column pruning drops every derived column from it, as
+    * it does for `count()`. A tracked SQL execution, so query listeners
+    * and observations see the action. */
+  private def countRows(df: DataFrame): Long = {
+    val qe = df.select().queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("count"))(qe.toRdd.count())
   }
 
   private def extOf(path: String): String = {

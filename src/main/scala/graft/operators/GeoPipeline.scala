@@ -56,10 +56,12 @@ object GeoPipeline {
   }
 
   /** First-row GeoJSON sniff used to decide whether to run decodeGeoJson
-    * (importer.rb:262-268 — a LIMIT 1 probe). */
+    * (importer.rb:262-268 — a LIMIT 1 probe). Only text can hold GeoJSON,
+    * so a `the_geom` of any other type (the EWKB binary the geometry
+    * readers emit) is decided from the schema, without the probe. */
   def theGeomLooksLikeGeoJson(df: DataFrame): Boolean =
-    df.columns.contains("the_geom") && {
-      df.select(col("the_geom").cast(StringType)).limit(1).collect()
+    df.schema.exists(f => f.name == "the_geom" && f.dataType.isInstanceOf[StringType]) && {
+      df.select(col("the_geom")).limit(1).collect()
         .headOption.flatMap(r => Option(r.getString(0)))
         .exists(s => graft.core.geo.Geometry.fromGeoJson(s).isDefined)
     }

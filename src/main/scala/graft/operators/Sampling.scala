@@ -306,11 +306,14 @@ object Sampling {
     // re-derives the pruned projection from the source — one column-
     // pruned scan, not a leak per invocation in a long-lived session)
     val proj = df.select(col(idCol), col(scoreCol), col(tokCol))
-    val needCache = scoreRange.isEmpty
+    val needCache = scoreRange.isEmpty && np > 1
     val in = if (needCache) proj.cache() else proj
     // descending cut points c_1 ≥ … ≥ c_{np-1}; bucket = |{i : c_i > s}|,
-    // so the best scores get bucket 0 and ties always share a bucket
+    // so the best scores get bucket 0 and ties always share a bucket.
+    // One partition has no cut points, and approxQuantile returns null
+    // for an empty probability list
     val cuts: Seq[Double] = scoreRange match {
+      case _ if np == 1 => Seq.empty
       case Some((lo, hi)) =>
         (1 until np).map(i => hi - (hi - lo) * i / np)
       case None =>

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.geo.{Geometry, LineString, MultiLineString, MultiPoint, MultiPolygon, Point => GPoint, Polygon => GPolygon, GeometryCollection}
+import graft.functions.GeoFunctions.st_asgeojson
 
 /**
  * Export sinks (SURVEY.md §2.1 S11-S13, reference exporter.rb:43-161):
@@ -117,17 +118,19 @@ object Exporter {
       throw new java.io.IOException(s"publish $tmp -> $finalPath failed")
   }
 
-  /** S11: CSV zip — archive holds `<name>.csv` (exporter.rb:53-73). */
+  /** S11: CSV zip — archive holds `<name>.csv` (exporter.rb:53-73);
+    * geometry cells hold GeoJSON text (see `csvFrame`). */
   def exportCsv(df: DataFrame, name: String,
       dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
     val path = outPath(dir, name)
     val zipFile = s"$path.zip"
+    val rows = csvFrame(df)
     val zos = archiveStream(new FileOutputStream(zipFile))
     try {
       zos.putNextEntry(new ZipEntry(s"$name.csv"))
       val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8))
       w.println(df.columns.map(csvCell).mkString(","))
-      df.toLocalIterator().forEachRemaining { row =>
+      rows.toLocalIterator().forEachRemaining { row =>
         w.println(df.columns.indices.map { i =>
           val v = row.get(i)
           if (v == null) "" else csvCell(v.toString)
@@ -144,6 +147,18 @@ object Exporter {
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
 
+  /** The rows the CSV sinks write: binary columns hold EWKB geometry,
+    * written as GeoJSON text, the CartoDB export convention that the
+    * importer decodes back into geometry. */
+  private def csvFrame(df: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(df.sparkSession)
+    // by position: imported tables can repeat a column name
+    val byPos = df.toDF(df.columns.indices.map(i => s"_$i"): _*)
+    byPos.select(df.schema.fields.toIndexedSeq.zip(byPos.columns).map { case (f, c) =>
+      if (f.dataType == BinaryType) st_asgeojson(col(c)) else col(c)
+    }: _*).toDF(df.columns.toIndexedSeq: _*)
+  }
+
   /**
    * Distributed variant of the CSV export: EXECUTORS serialize the rows
    * (`df.write.csv` part files, RFC-4180 doubled-quote style to match
@@ -159,7 +174,7 @@ object Exporter {
       dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
     val (fs, path) = outPathFs(hadoopConf(df), dir, name)
     val partsDir = new Path(path.getParent, path.getName + "_parts")
-    df.write
+    csvFrame(df).write
       .option("header", "false")
       .option("emptyValue", "")
       .option("escape", "\"") // doubled-quote escaping, like csvCell
@@ -206,7 +221,7 @@ object Exporter {
     val confSer = new SerializableHadoopConf(conf)
     val header = df.columns.map(csvCell).mkString(",") + "\n"
     val cols = df.columns
-    val counts = df.repartition(shards).rdd.mapPartitionsWithIndex { (pid, rows) =>
+    val counts = csvFrame(df).repartition(shards).rdd.mapPartitionsWithIndex { (pid, rows) =>
       val p = new Path(outDirStr, f"$name-$pid%05d.zip")
       val pfs = p.getFileSystem(confSer.value)
       val tmp = attemptTmp(p)

@@ -28,8 +28,7 @@ class ExportSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("distributed csv export == driver-funnel export, byte-compatible archive") {
-    import org.apache.spark.sql.functions.col
-    val df = imported.drop("the_geom")
+    val df = imported
     val d1 = tmp
     val funnel = Exporter.exportCsv(df, "borders", d1)
     val dist = Exporter.exportCsvDistributed(df, "borders", d1)
@@ -52,6 +51,43 @@ class ExportSpec extends AnyFunSuite with SparkTestBase {
     val back = Importer.importFile(spark, Importer.ImportRequest(
       importFromFile = Some(dist.path)))
     assert(back.rowsImported == df.count())
+  }
+
+  test("csv export writes geometry as GeoJSON text; re-import gives the same geometry") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.GeoFunctions.st_asgeojson
+    def geojson(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(st_asgeojson(col("the_geom"))).collect().map(_.getString(0)).toSeq.sorted
+    // rmnp.kml's table repeats the column name `name`
+    for (f <- Seq("EjemploVizzuality.zip", "rmnp.kml")) {
+      val src = Importer.importFile(spark, Importer.ImportRequest(
+        importFromFile = Some(fx(f))))
+      val r = Exporter.exportCsv(src.df, src.name, tmp)
+      val back = Importer.importFile(spark, Importer.ImportRequest(
+        importFromFile = Some(r.path)))
+      assert(back.rowsImported == src.rowsImported, f)
+      val want = geojson(src.df)
+      assert(want.forall(_ != null), f)
+      assert(geojson(back.df) == want, f)
+    }
+  }
+
+  test("csv export of a table named with a leading underscore re-imports") {
+    val src = Importer.importFile(spark, Importer.ImportRequest(
+      importFromFile = Some(fx("110m-glaciated-areas.zip"))))
+    assert(src.name == "_110m_glaciated_areas")
+    val r = Exporter.exportCsv(src.df, src.name, tmp)
+    // the archive as exported, and its payload passed directly
+    val csv = java.nio.file.Paths.get(tmp, s"${src.name}.csv")
+    java.nio.file.Files.write(csv, zipEntries(r.path)(s"${src.name}.csv"))
+    for (p <- Seq(r.path, csv.toString)) {
+      val back = Importer.importFile(spark, Importer.ImportRequest(
+        importFromFile = Some(p)))
+      assert(back.rowsImported == src.rowsImported, p)
+      assert(back.name == src.name, p)
+      assert(back.importType == ".csv", p)
+    }
+    assert(java.nio.file.Files.exists(csv), "the caller's file is left in place")
   }
 
   test("import then export kml (export_spec.rb:24-40)") {

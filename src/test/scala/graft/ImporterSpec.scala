@@ -72,7 +72,95 @@ class ImporterSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("empty.csv raises and creates nothing (import_spec.rb:23-34)") {
-    intercept[Exception] { imp("empty.csv") }
+    intercept[Importer.EmptyTableException] { imp("empty.csv") }
+  }
+
+  test("header-only inputs raise EmptyTableException and leave no extracted dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_header_only_")
+    // georeferenceable columns: the geometry dataflow runs over zero rows
+    val latlon = dir.resolve("points.csv")
+    java.nio.file.Files.writeString(latlon, "name,latitude,longitude\n")
+    intercept[Importer.EmptyTableException] {
+      Importer.importFile(spark, ImportRequest(importFromFile = Some(latlon.toString)))
+    }
+    // the same payload inside an archive: the failed import removes its extract dir
+    val zip = dir.resolve("points.zip")
+    val zos = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(zip))
+    try {
+      zos.putNextEntry(new java.util.zip.ZipEntry("points.csv"))
+      zos.write(java.nio.file.Files.readAllBytes(latlon)); zos.closeEntry()
+    } finally zos.close()
+    def extractDirs = Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .toSeq.flatten.filter(_.getName.startsWith("graft_unzip_")).map(_.getName).toSet
+    val before = extractDirs
+    intercept[Importer.EmptyTableException] {
+      Importer.importFile(spark, ImportRequest(importFromFile = Some(zip.toString)))
+    }
+    assert(extractDirs == before)
+    graft.sources.Archive.cleanup(dir.toFile)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. The
+    * listener bus delivers events in order, so once a sentinel job run
+    * afterwards has been seen, every job of `body` has been too. */
+  private def sparkJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"import-jobs-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "import", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.contains(sentinel) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener bus did not deliver the sentinel job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // Job counts are deterministic, so they pin the import's fixed cost:
+  // the geometry formats take one job (the count), GeoJSON adds its
+  // reader's schema-inference job, CSV and XLSX add their inference jobs,
+  // and only string `the_geom` pays the GeoJSON probe.
+  test("importFile Spark jobs per payload format") {
+    val want = Seq(
+      "EjemploVizzuality.zip" -> 1, // shp
+      "rmnp.kml" -> 1,
+      "route2.gpx" -> 1,
+      "simple.json" -> 2,
+      "ngos.xlsx" -> 3,
+      "clubbing.csv" -> 4,
+      "CartoDB_csv_export.zip" -> 5) // csv with GeoJSON the_geom text
+    imp("rmnp.kml") // warm the session before counting
+    val got = want.map { case (f, _) => f -> sparkJobs(imp(f)) }
+    assert(got == want)
+  }
+
+  test("importFile's row count reaches query execution listeners") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the sentinel job orders this after the listener saw the import
+      sparkJobs(imp("rmnp.kml"))
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.contains("count") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.contains("count"), seen.toArray.mkString(","))
   }
 
   test("pino.zip: payload-derived name (import_spec.rb:107-115)") {

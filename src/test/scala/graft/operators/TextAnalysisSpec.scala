@@ -725,6 +725,23 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("dsirSelect at one shuffle partition selects what it does at several") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val df = (0L until 40L).map(i => (i, s"w${i % 7} w${i % 5} w${i % 3} w${i % 11}"))
+      .toDF("doc_id", "text")
+    def run() = TextAnalysis.dsirSelect(df, df.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", buckets = 16, keepFrac = 0.25)
+      .orderBy(col("doc_id")).collect().toSeq
+    val many = run()
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    val one = try run() finally spark.conf.set(key, prev)
+    assert(one == many)
+    assert(one.count(_.getBoolean(2)) == 10)
+  }
+
   test("decontaminateScrub: quoted spans excised, clean majority kept, order preserved") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
