@@ -535,7 +535,7 @@ object SparkEntry {
     // idempotent). The dead-id list is tombstone-bounded by contract
     // (Seq API); 1-in-7 of the test corpus is far under
     // MaxBm25Tombstones.
-    if (TextAnalysis.deletedBm25Docs(s, idx).isEmpty) {
+    if (TextAnalysis.Bm25Snapshot(s, idx).dead.isEmpty) {
       val deadIds = t(s, dir, "documents").filter(col("doc_id") % 7 === 0)
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       TextAnalysis.deleteBm25Docs(s, idx, deadIds)
@@ -3147,7 +3147,7 @@ object SparkEntry {
       val idx = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_app_v1_" +
         fsTag(s, dir, "documents.parquet")
       val ready = graft.sinks.Versioned.currentVersion(s, idx).isDefined &&
-        TextAnalysis.liveSegments(s, idx).size == 2
+        TextAnalysis.Bm25Snapshot(s, idx).segments.size == 2
       if (!ready) {
         val p = new org.apache.hadoop.fs.Path(idx)
         val fs = p.getFileSystem(s.sessionState.newHadoopConf())
@@ -6018,7 +6018,9 @@ object SparkEntry {
            |       * sqrt(CAST(list_inner_product(nq.qv, nq.qv) AS DOUBLE))) AS cos_raw
            |  FROM shortlist s
            |  JOIN q qq ON qq.vec_id = s.query_id
-           |  JOIN q nq ON nq.vec_id = s.neighbor_id),
+           |  JOIN q nq ON nq.vec_id = s.neighbor_id
+           |  WHERE list_inner_product(qq.qv, qq.qv) > 0
+           |    AND list_inner_product(nq.qv, nq.qv) > 0),
            |rranked AS (
            |  SELECT query_id, neighbor_id, cos_raw,
            |    row_number() OVER (PARTITION BY query_id

@@ -1544,6 +1544,9 @@ object Similarity {
         "aggregate(zip_with(qvec, nvec, (a, b) -> a * b), 0L, (s, v) -> s + v)"))
       .withColumn("__qn", expr("aggregate(qvec, 0L, (s, v) -> s + v * v)"))
       .withColumn("__nn", expr("aggregate(nvec, 0L, (s, v) -> s + v * v)"))
+      // zero-norm guard (quantizedTopK's rule): a zero vector cannot
+      // match, and its cosine would divide by zero
+      .filter(col("__qn") > 0 && col("__nn") > 0)
       .withColumn("cos_i8", col("__dot").cast("double") /
         (sqrt(col("__qn").cast("double")) * sqrt(col("__nn").cast("double"))))
     val w = Window.partitionBy(col("query_id"))

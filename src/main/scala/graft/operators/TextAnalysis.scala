@@ -369,9 +369,7 @@ object TextAnalysis {
 
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
       queryText: String, k: Int): DataFrame = {
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
+    val terms = queryTerms(queryText)
     val toks = Par.ensureParallelism(df)
       .select(col(idCol).as("doc_id"),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("tok"))
@@ -549,15 +547,12 @@ object TextAnalysis {
       root: String, nBuckets: Int = 32): Option[String] = {
     val spark = df.sparkSession
     graft.sinks.Lease.withLease(spark, root) {
-      val (old, fence) = liveSegmentsWithFence(spark, root)
+      val snap = Bm25Snapshot(spark, root)
       val seg = writeBm25Segment(
-        buildPostings(df, idCol, textCol,
-          indexHasPositions(spark, root, old)),
-        root, nBuckets,
-        appendDocVals(df, idCol, indexDocValueCols(spark, root, old)))
-      commitSegments(spark, root, old ++ seg.toSeq, fence,
-        deletedBm25Docs(spark, root).toSeq,
-        deadBm25TermCorrections(spark, root))
+        buildPostings(df, idCol, textCol, indexHasPositions(snap)),
+        root, nBuckets, appendDocVals(df, idCol, indexDocValueCols(snap)))
+      commitSegments(spark, root, snap.segments ++ seg.toSeq, snap.fence,
+        snap.dead.toSeq, snap.deadTermCorrections)
       seg
     }
   }
@@ -565,24 +560,21 @@ object TextAnalysis {
   /** Appended segments must match the base layout: positional if the
     * index is positional (schema read from the first live segment's
     * manifest — no data scan). */
-  private def indexHasPositions(spark: SparkSession, root: String,
-      segs: Seq[String]): Boolean =
-    segs.headOption.exists(sg =>
-      graft.sinks.MergeTable.read(spark, s"$root/segs/$sg/postings")
+  private def indexHasPositions(snap: Bm25Snapshot): Boolean =
+    snap.tables("postings").headOption.exists(p =>
+      graft.sinks.MergeTable.read(snap.spark, p)
         .schema.fieldNames.contains("positions"))
 
   /** The doc-values columns of an existing index (None when the base
     * carries no docvals sidecar) — from the first live segment's schema,
     * no data scan. Appends must match the base layout, same contract as
     * [[indexHasPositions]]. */
-  private def indexDocValueCols(spark: SparkSession, root: String,
-      segs: Seq[String]): Option[Seq[String]] =
-    segs.headOption.flatMap { sg =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/segs/$sg/docvals")
-      if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+  private def indexDocValueCols(snap: Bm25Snapshot): Option[Seq[String]] =
+    snap.tables("docvals").headOption.flatMap { dv =>
+      val p = new org.apache.hadoop.fs.Path(dv)
+      if (!p.getFileSystem(snap.spark.sessionState.newHadoopConf()).exists(p))
         None
-      else Some(graft.sinks.MergeTable
-        .read(spark, s"$root/segs/$sg/docvals")
+      else Some(graft.sinks.MergeTable.read(snap.spark, dv)
         .schema.fieldNames.toSeq.filterNot(_ == "doc_id"))
     }
 
@@ -615,21 +607,18 @@ object TextAnalysis {
       nBuckets: Int = 32): Boolean = {
     val spark = df.sparkSession
     graft.sinks.Lease.withLease(spark, root) {
-      val (old, fence) = liveSegmentsWithFence(spark, root)
-      if (fence.exists(_ >= batchId)) false
+      val snap = Bm25Snapshot(spark, root)
+      if (snap.fence.exists(_ >= batchId)) false
       else {
         val seg = writeBm25Segment(
-          buildPostings(df, idCol, textCol,
-            indexHasPositions(spark, root, old)),
-          root, nBuckets,
-          appendDocVals(df, idCol, indexDocValueCols(spark, root, old)))
+          buildPostings(df, idCol, textCol, indexHasPositions(snap)),
+          root, nBuckets, appendDocVals(df, idCol, indexDocValueCols(snap)))
         // An empty batch still advances the fence (segments unchanged):
         // the exactly-once invariant is "highest APPLIED batch id", and
         // an all-whitespace batch is applied by having nothing to add —
         // the old post-publish `require` killed the stream (ADVICE r14).
-        commitSegments(spark, root, old ++ seg.toSeq, Some(batchId),
-          deletedBm25Docs(spark, root).toSeq,
-          deadBm25TermCorrections(spark, root))
+        commitSegments(spark, root, snap.segments ++ seg.toSeq, Some(batchId),
+          snap.dead.toSeq, snap.deadTermCorrections)
         true
       }
     }
@@ -658,10 +647,7 @@ object TextAnalysis {
     graft.sinks.Lease.withLease(spark, root) {
       import graft.sinks.Versioned
       val named = Versioned.listVersions(spark, root).flatMap { case (v, _) =>
-        Versioned.readSmallText(spark,
-          new org.apache.hadoop.fs.Path(s"$root/$v", SegmentsFile))
-          .toSeq.flatMap(_.split('\n').map(_.trim)
-            .filter(l => l.nonEmpty && !l.startsWith("#")))
+        Bm25Snapshot.segmentsFile(spark, root, v).toSeq.flatMap(_._1)
       }.toSet
       val segsDir = new org.apache.hadoop.fs.Path(s"$root/segs")
       val fs = segsDir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -687,37 +673,30 @@ object TextAnalysis {
   def compactBm25Index(spark: SparkSession, root: String,
       nBuckets: Int = 32): Int =
     graft.sinks.Lease.withLeaseHeartbeat(spark, root) {
-    import graft.sinks.MergeTable
-    val (old, fence) = liveSegmentsWithFence(spark, root)
-    val dead = deletedBm25Docs(spark, root)
-    if (old.isEmpty || (old.size <= 1 && dead.isEmpty)) old.size
+    val snap = Bm25Snapshot(spark, root)
+    val old = snap.segments
+    if (old.isEmpty || (old.size <= 1 && snap.dead.isEmpty)) old.size
     else {
-      val union = old.map(sg =>
-        MergeTable.read(spark, s"$root/segs/$sg/postings"))
-        .reduce(_.unionByName(_))
-      val survivors =
-        if (dead.isEmpty) union
-        else union.filter(!col("doc_id").isin(dead.toSeq: _*))
       // the docvals sidecar compacts with the postings: union the live
       // segments' sidecars, drop tombstoned docs, republish under the
       // merged segment — filtered serves stay exact across the merge
-      val dv = indexDocValueCols(spark, root, old).map { _ =>
-        val u = old.map(sg =>
-          MergeTable.read(spark, s"$root/segs/$sg/docvals"))
-          .reduce(_.unionByName(_))
-        if (dead.isEmpty) u
-        else u.filter(!col("doc_id").isin(dead.toSeq: _*))
-      }
-      val seg = writeBm25Segment(survivors, root, nBuckets, dv)
+      val seg = writeBm25Segment(liveTable(snap, "postings"), root, nBuckets,
+        indexDocValueCols(snap).map(_ => liveTable(snap, "docvals")))
       // deletes deliberately NOT carried: the merged segment holds only
       // survivors and its stats row is exact again — the Lucene merge.
       // A fully-tombstoned index compacts to an EMPTY segment list (the
       // documented escape when MaxBm25Tombstones is hit — ADVICE r14);
       // serves on an empty manifest return empty results.
-      commitSegments(spark, root, seg.toSeq, fence)
+      commitSegments(spark, root, seg.toSeq, snap.fence)
       old.size
     }
   }
+
+  /** A whole segment table (postings or docvals) of every segment,
+    * unioned, tombstoned docs dropped — what compaction and merge keep. */
+  private def liveTable(snap: Bm25Snapshot, table: String): DataFrame =
+    snap.mask(snap.tables(table).map(graft.sinks.MergeTable.read(snap.spark, _))
+      .reduce(_.unionByName(_)))
 
   /**
    * Cross-index MERGE — Lucene's IndexWriter.addIndexes: union every
@@ -740,64 +719,39 @@ object TextAnalysis {
   def mergeBm25Indexes(spark: SparkSession, sources: Seq[String],
       dest: String, nBuckets: Int = 32): Unit =
     graft.sinks.Lease.withLeaseHeartbeat(spark, dest) {
-      import graft.sinks.MergeTable
       require(sources.nonEmpty, "no source indexes")
-      require(graft.sinks.Versioned.currentVersion(spark, dest).isEmpty,
+      require(!Bm25Snapshot.exists(spark, dest),
         s"$dest already holds an index — merge targets a fresh root " +
           "(in-place consolidation is compactBm25Index)")
-      // One manifest version per source, captured UP FRONT and threaded
-      // through every read (segments, tombstones — and via the pinned
-      // segment list all postings/docvals, which are immutable files):
-      // without the pin, each read re-resolved the LIVE version, so a
-      // concurrent append/delete/compact on a source could pair the new
-      // manifest's postings with the old delete set — an inconsistent
-      // merged snapshot (ADVICE r17). The merge holds only dest's lease
-      // by design: sources stay serveable AND appendable throughout;
-      // the pin makes that safe.
-      val pins = sources.map { root =>
-        root -> Some(graft.sinks.Versioned.currentVersion(spark, root)
-          .getOrElse(throw new IllegalStateException(
-            s"$root has no committed index manifest")))
-      }
-      val perSource = pins.map { case (root, pin) =>
-        val (segs, _) = liveSegmentsWithFence(spark, root, pin)
-        val dead = deletedBm25Docs(spark, root, pin)
-        val u = segs.map(sg =>
-          MergeTable.read(spark, s"$root/segs/$sg/postings"))
-          .reduce(_.unionByName(_))
-        val live =
-          if (dead.isEmpty) u
-          else u.filter(!col("doc_id").isin(dead.toSeq: _*))
-        (root, segs, dead, live)
-      }
-      val posFlags = perSource
-        .map(_._4.schema.fieldNames.contains("positions")).distinct
+      // One snapshot per source, resolved UP FRONT and read through for
+      // every table (segments, tombstones — and via the pinned segment
+      // list all postings/docvals, which are immutable files): resolving
+      // per read would let a concurrent append/delete/compact on a source
+      // pair the new manifest's postings with the old delete set — an
+      // inconsistent merged snapshot (ADVICE r17). The merge holds only
+      // dest's lease by design: sources stay serveable AND appendable
+      // throughout; the snapshot makes that safe.
+      val snaps = sources.map(Bm25Snapshot(spark, _))
+      val lives = snaps.map(liveTable(_, "postings"))
+      val posFlags = lives
+        .map(_.schema.fieldNames.contains("positions")).distinct
       require(posFlags.size == 1,
         "sources disagree on positions= — a mixed merge would silently " +
           "break phrase serves on half the corpus")
-      val merged = perSource.map(_._4).reduce(_.unionByName(_))
-      val perCounts = perSource.map(_._4.select(col("doc_id"))
+      val merged = lives.reduce(_.unionByName(_))
+      val perCounts = lives.map(_.select(col("doc_id"))
         .distinct().count())
       val mergedCount = merged.select(col("doc_id")).distinct().count()
       require(mergedCount == perCounts.sum,
         s"doc-id overlap across sources (union ${perCounts.sum} ids, " +
           s"distinct $mergedCount) — merge requires disjoint id spaces")
-      val dvCols = perSource.map { case (root, segs, _, _) =>
-        indexDocValueCols(spark, root, segs)
-      }
+      val dvCols = snaps.map(indexDocValueCols)
       require(dvCols.map(_.isDefined).distinct.size == 1 &&
         dvCols.flatten.map(_.toSet).distinct.size <= 1,
         "sources disagree on the docvals sidecar — merge them " +
           "identically-shaped or not at all")
-      val dv = dvCols.head.map { _ =>
-        perSource.map { case (root, segs, dead, _) =>
-          val u = segs.map(sg =>
-            MergeTable.read(spark, s"$root/segs/$sg/docvals"))
-            .reduce(_.unionByName(_))
-          if (dead.isEmpty) u
-          else u.filter(!col("doc_id").isin(dead.toSeq: _*))
-        }.reduce(_.unionByName(_))
-      }
+      val dv = dvCols.head.map(_ =>
+        snaps.map(liveTable(_, "docvals")).reduce(_.unionByName(_)))
       val seg = writeBm25Segment(merged, dest, nBuckets, dv)
       commitSegments(spark, dest, seg.toSeq)
     }
@@ -933,18 +887,17 @@ object TextAnalysis {
       pred: Column => Column): DataFrame = {
     import graft.sinks.MergeTable
     import spark.implicits._
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty) // fully-compacted-away index: nothing to probe
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty) // fully-compacted-away index: nothing to probe
       return Seq.empty[(String, Long, Long)].toDF("tok", "n_docs", "n_occ")
-    val dead = deletedBm25Docs(spark, root)
     val corr =
-      if (dead.isEmpty) None else deadBm25TermCorrections(spark, root)
-    val dictReady = (dead.isEmpty || corr.isDefined) && segs.forall(sg =>
-      MergeTable.read(spark, s"$root/segs/$sg/terms")
-        .schema.fieldNames.contains("occ"))
+      if (snap.dead.isEmpty) None else snap.deadTermCorrections
+    val dictReady = (snap.dead.isEmpty || corr.isDefined) &&
+      snap.tables("terms").forall(t =>
+        MergeTable.read(spark, t).schema.fieldNames.contains("occ"))
     if (dictReady) {
-      val dict = segs.map(sg =>
-        MergeTable.readRange(spark, s"$root/segs/$sg/terms", lower, upper))
+      val dict = snap.tables("terms").map(t =>
+        MergeTable.readRange(spark, t, lower, upper))
         .reduce(_.unionByName(_))
       val counts = dict
         .filter(pred(col("tok")) && col("tok") =!= Bm25StatsKey)
@@ -968,14 +921,10 @@ object TextAnalysis {
       }
       corrected.orderBy(col("tok"))
     } else {
-      val posts = segs.map(sg =>
-        MergeTable.readRange(spark, s"$root/segs/$sg/postings",
-          lower, upper))
-        .reduce(_.unionByName(_))
-      val alive =
-        if (dead.isEmpty) posts
-        else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-      alive.filter(pred(col("tok")))
+      snap.mask(snap.tables("postings").map(p =>
+        MergeTable.readRange(spark, p, lower, upper))
+        .reduce(_.unionByName(_)))
+        .filter(pred(col("tok")))
         .groupBy(col("tok"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum(col("tf")).cast("long").as("n_occ"))
@@ -996,16 +945,16 @@ object TextAnalysis {
     import spark.implicits._
     val pat = pattern.trim
     require(pat.nonEmpty, "empty pattern")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val pre = regexLiteralPrefix(pat)
     val (lo, hi) =
       if (pre.isEmpty) (None, None)
       else (Some(pre), prefixSuccessor(pre))
     val rx = s"^(?:$pat)$$"
-    val keyRows = segs.flatMap { sg =>
-      MergeTable.readRange(spark, s"$root/segs/$sg/terms", lo, hi)
+    val keyRows = snap.tables("terms").flatMap { t =>
+      MergeTable.readRange(spark, t, lo, hi)
         .filter(col("tok").rlike(rx) && col("tok") =!= Bm25StatsKey)
         .select(col("tok"), col("dfc"))
         .limit(MaxPrefixExpansion + 1).collect().toSeq
@@ -1015,7 +964,7 @@ object TextAnalysis {
     require(dfc.size <= MaxPrefixExpansion,
       s"regexp '$pat' expands to ${dfc.size} terms — past the " +
         s"$MaxPrefixExpansion budget; tighten the pattern")
-    scoreExpandedTerms(spark, root, segs, dfc, k)
+    scoreExpandedTerms(snap, dfc, k)
   }
 
   /** Expansion budget for wildcard SCORING queries — the Lucene
@@ -1044,16 +993,14 @@ object TextAnalysis {
    */
   def bm25ServePrefixTopK(spark: SparkSession, root: String,
       prefix: String, k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val p = prefix.toLowerCase.trim
     require(p.nonEmpty, "empty prefix")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
     // stage 1: dictionary expansion; stage 2: the scoring serve over it
-    scoreExpandedTerms(spark, root, segs,
-      expandPrefixTerms(spark, root, segs, p), k)
+    scoreExpandedTerms(snap, expandPrefixTerms(snap, p), k)
   }
 
   /** Dictionary expansion for `pre*` — (term → summed df) from each
@@ -1063,14 +1010,14 @@ object TextAnalysis {
     * segment returning more than the budget already proves the
     * expansion too broad — the collect is bounded even for `a*`.
     * Shared by [[bm25ServePrefixTopK]] and [[queryStringTopK]]. */
-  private def expandPrefixTerms(spark: SparkSession, root: String,
-      segs: Seq[String], p: String): Map[String, Long] = {
+  private def expandPrefixTerms(snap: Bm25Snapshot,
+      p: String): Map[String, Long] = {
     import graft.sinks.MergeTable
     val upper = prefixSuccessor(p)
     // per-segment bands (each budget-limited) union into ONE collect job
     // — the per-segment collect loop paid |segments| job round-trips
-    val keyRows = segs.map { sg =>
-      MergeTable.readRange(spark, s"$root/segs/$sg/terms", Some(p), upper)
+    val keyRows = snap.tables("terms").map { t =>
+      MergeTable.readRange(snap.spark, t, Some(p), upper)
         .filter(col("tok").startsWith(p) && col("tok") =!= Bm25StatsKey)
         .select(col("tok"), col("dfc"))
         .limit(MaxPrefixExpansion + 1)
@@ -1092,9 +1039,8 @@ object TextAnalysis {
     * (ADVICE r18). One dictionary band scan, no postings. */
   private[graft] def prefixExpansionCount(spark: SparkSession,
       root: String, stem: String): Int = {
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty) 0
-    else expandPrefixTerms(spark, root, segs, stem).size
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty) 0 else expandPrefixTerms(snap, stem).size
   }
 
   /** Stage 2 shared by every MultiTermQuery SCORING serve (prefix /
@@ -1106,34 +1052,19 @@ object TextAnalysis {
     * from scoring keeps every wildcard flavor's cost model identical:
     * expansion ∝ its dictionary band, scoring ∝ the expanded terms'
     * postings. */
-  private def scoreExpandedTerms(spark: SparkSession, root: String,
-      segs: Seq[String], dfc: Map[String, Long], k: Int): DataFrame = {
-    import graft.sinks.MergeTable
+  private def scoreExpandedTerms(snap: Bm25Snapshot,
+      dfc: Map[String, Long], k: Int): DataFrame = {
+    val spark = snap.spark
     import spark.implicits._
     val terms = dfc.keys.toSeq.sorted
     if (terms.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val statsRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok",
-      Seq(Bm25StatsKey).toDF("tok"))
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val idf = bm25Idf(nDocs, dfc, terms).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
-    alive
+    val st = snap.termStats(Nil)
+    val idf = bm25Idf(st.nDocs, dfc, terms).toDF("tok", "idf")
+    snap.livePostings(terms)
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .groupBy(col("doc_id"))
@@ -1181,9 +1112,9 @@ object TextAnalysis {
 
   /** All segments' suffix bands in ONE collect job (per-segment budget
     * limits preserved inside each union branch). */
-  private def suffixBandRows(spark: SparkSession, root: String,
-      segs: Seq[String], suffix: String): Seq[org.apache.spark.sql.Row] =
-    segs.map(sg => suffixBandFrame(spark, root, sg, suffix))
+  private def suffixBandRows(snap: Bm25Snapshot,
+      suffix: String): Seq[org.apache.spark.sql.Row] =
+    snap.segments.map(sg => suffixBandFrame(snap.spark, snap.root, sg, suffix))
       .reduce(_.unionByName(_)).collect().toSeq
 
   /**
@@ -1201,24 +1132,22 @@ object TextAnalysis {
    */
   def suffixSearch(spark: SparkSession, root: String,
       suffix: String): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val sx = suffix.toLowerCase.trim
     require(sx.nonEmpty, "empty suffix")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(String, Long, Long)].toDF("tok", "n_docs", "n_occ")
-    val rows = suffixBandRows(spark, root, segs, sx)
+    val rows = suffixBandRows(snap, sx)
     val expanded = rows.map(_.getString(0)).distinct.sorted
     require(expanded.size <= MaxPrefixExpansion,
       s"suffix '*$sx' expands to ${expanded.size} terms — past the " +
         s"$MaxPrefixExpansion budget; narrow the suffix")
     if (expanded.isEmpty)
       return Seq.empty[(String, Long, Long)].toDF("tok", "n_docs", "n_occ")
-    val dead = deletedBm25Docs(spark, root)
     val corr =
-      if (dead.isEmpty) None else deadBm25TermCorrections(spark, root)
-    if ((dead.isEmpty || corr.isDefined) &&
+      if (snap.dead.isEmpty) None else snap.deadTermCorrections
+    if ((snap.dead.isEmpty || corr.isDefined) &&
         rows.forall(r => !r.isNullAt(2))) {
       // dictionary path: the band rows ARE the answer (driver fold is
       // expansion-budget-bounded by construction); with live tombstones
@@ -1237,13 +1166,7 @@ object TextAnalysis {
         }.filter(_._2 > 0)
         .toSeq.sortBy(_._1).toDF("tok", "n_docs", "n_occ")
     } else {
-      val posts = segs.map(sg =>
-        MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-          expanded.toDF("tok"))).reduce(_.unionByName(_))
-      val alive =
-        if (dead.isEmpty) posts
-        else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-      alive.groupBy(col("tok"))
+      snap.livePostings(expanded).groupBy(col("tok"))
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum(col("tf")).cast("long").as("n_occ"))
         .orderBy(col("tok"))
@@ -1261,20 +1184,19 @@ object TextAnalysis {
     import spark.implicits._
     val sx = suffix.toLowerCase.trim
     require(sx.nonEmpty, "empty suffix")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    scoreExpandedTerms(spark, root, segs,
-      expandSuffixTerms(spark, root, segs, sx), k)
+    scoreExpandedTerms(snap, expandSuffixTerms(snap, sx), k)
   }
 
   /** Dictionary expansion for `*suf` — (term → summed df) via the
     * reversed dictionary's band scan ([[suffixBandRows]]), budget-
     * checked. Shared by [[bm25ServeSuffixTopK]] and
     * [[queryStringTopK]]. */
-  private def expandSuffixTerms(spark: SparkSession, root: String,
-      segs: Seq[String], sx: String): Map[String, Long] = {
-    val rows = suffixBandRows(spark, root, segs, sx)
+  private def expandSuffixTerms(snap: Bm25Snapshot,
+      sx: String): Map[String, Long] = {
+    val rows = suffixBandRows(snap, sx)
     val dfc = rows.groupBy(_.getString(0))
       .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
     require(dfc.size <= MaxPrefixExpansion,
@@ -1297,18 +1219,16 @@ object TextAnalysis {
    */
   def bm25ServeInfixTopK(spark: SparkSession, root: String,
       prefix: String, suffix: String, k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val p = prefix.toLowerCase.trim
     val sx = suffix.toLowerCase.trim
     require(p.nonEmpty && sx.nonEmpty,
       "infix wildcard needs a non-empty prefix AND suffix (use the " +
         "prefix/suffix serves for one-sided patterns)")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    scoreExpandedTerms(spark, root, segs,
-      expandInfixTerms(spark, root, segs, p, sx), k)
+    scoreExpandedTerms(snap, expandInfixTerms(snap, p, sx), k)
   }
 
   /** Dictionary expansion for `pre*suf` — per segment, the forward
@@ -1318,12 +1238,13 @@ object TextAnalysis {
     * The length guard `|tok| ≥ |pre| + |suf|` rejects overlapping
     * spans, matching SQL `LIKE 'pre%suf'` exactly. Shared by
     * [[bm25ServeInfixTopK]] and [[queryStringTopK]]. */
-  private def expandInfixTerms(spark: SparkSession, root: String,
-      segs: Seq[String], p: String, sx: String): Map[String, Long] = {
+  private def expandInfixTerms(snap: Bm25Snapshot, p: String,
+      sx: String): Map[String, Long] = {
     import graft.sinks.MergeTable
+    val (spark, root) = (snap.spark, snap.root)
     // per-segment intersections (each budget-limited) union into ONE
     // collect job, like every other expansion
-    val rows = segs.map { sg =>
+    val rows = snap.segments.map { sg =>
       val a = MergeTable.readRange(spark, s"$root/segs/$sg/terms",
           Some(p), prefixSuccessor(p))
         .filter(col("tok").startsWith(p) && col("tok") =!= Bm25StatsKey)
@@ -1368,28 +1289,27 @@ object TextAnalysis {
    */
   def bm25ServeFuzzyTopK(spark: SparkSession, root: String,
       term: String, k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val q = term.toLowerCase.trim
     require(q.nonEmpty && !q.exists(_.isWhitespace),
       "fuzzy serve takes a single term")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    scoreExpandedTerms(spark, root, segs,
-      expandFuzzyTerms(spark, root, segs, q), k)
+    scoreExpandedTerms(snap, expandFuzzyTerms(snap, q), k)
   }
 
   /** Dictionary expansion for `term~1` — (term → summed df) from the
     * two-band candidate scan (forward q[0] band ∪ reversed rev(q[1:])
     * band) filtered by codegen'd `levenshtein ≤ 1`. Shared by
     * [[bm25ServeFuzzyTopK]] and [[queryStringTopK]]. */
-  private def expandFuzzyTerms(spark: SparkSession, root: String,
-      segs: Seq[String], q: String): Map[String, Long] = {
+  private def expandFuzzyTerms(snap: Bm25Snapshot,
+      q: String): Map[String, Long] = {
     import graft.sinks.MergeTable
+    val (spark, root) = (snap.spark, snap.root)
     // per-segment two-band candidates (each deduped + budget-limited)
     // union into ONE collect job, like every other expansion
-    val rows = segs.map { sg =>
+    val rows = snap.segments.map { sg =>
       val a = MergeTable.readRange(spark, s"$root/segs/$sg/terms",
           Some(q.take(1)), prefixSuccessor(q.take(1)))
         .filter(col("tok") =!= Bm25StatsKey)
@@ -1448,40 +1368,20 @@ object TextAnalysis {
    */
   def bm25ServeTopKAnd(spark: SparkSession, root: String,
       queryText: String, k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     lastAndServeAudit = None
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(terms)
+    val dfc = st.dfc
     // MUST: a required term absent from the index ⇒ no doc can qualify —
     // decided from the dictionary alone, zero postings read
     if (!terms.forall(dfc.contains))
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val idf = bm25Idf(nDocs, dfc.toMap, terms).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val idf = bm25Idf(st.nDocs, dfc, terms).toDF("tok", "idf")
+    val alive = snap.livePostings(terms)
     val tMin = terms.minBy(t => (dfc(t), t))
     val cand0 = alive.filter(col("tok") === tMin).select(col("doc_id"))
     // broadcast gate: same size class as the MaxScore candidate build
@@ -1499,7 +1399,7 @@ object TextAnalysis {
     restricted
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .groupBy(col("doc_id"))
@@ -1531,7 +1431,6 @@ object TextAnalysis {
   def bm25ServeTopKNot(spark: SparkSession, root: String,
       queryText: String, excludeText: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val terms = queryText.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).distinct.toSeq
@@ -1542,48 +1441,25 @@ object TextAnalysis {
     require(terms.intersect(exTerms).isEmpty,
       s"terms ${terms.intersect(exTerms).mkString(",")} are both scored " +
         "and prohibited — a MUST_NOT of a SHOULD term matches nothing")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    val idf = bm25Idf(nDocs, dfc.toMap, terms).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
+    val st = snap.termStats(terms)
+    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
     // NOTE (ADVICE r16 low): the exclusion set deliberately skips the
     // tombstone mask — dead docs in `excluded` are harmless because the
-    // SCORING side (`alive`) is dead-filtered before the anti-join, so
-    // an excluded-and-dead doc is absent from the left side anyway.
-    // If a refactor ever flips this anti-join's sides or scores from
-    // `postings` directly, the mask must move here too.
-    val excluded = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        exTerms.toDF("tok")))
-      .reduce(_.unionByName(_))
-      .select(col("doc_id")).distinct()
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    // SCORING side (`livePostings`) is dead-filtered before the
+    // anti-join, so an excluded-and-dead doc is absent from the left
+    // side anyway. If a refactor ever flips this anti-join's sides or
+    // scores from unmasked `postings`, the mask must move here too.
+    val excluded = snap.postings(exTerms).select(col("doc_id")).distinct()
     // no forced broadcast: an excluded term can be the corpus' most
     // common word, so its doc set is unbounded — AQE picks the join
     // strategy from the actual exclusion size at runtime
-    alive.join(excluded, Seq("doc_id"), "left_anti")
+    snap.livePostings(terms).join(excluded, Seq("doc_id"), "left_anti")
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .groupBy(col("doc_id"))
@@ -1607,7 +1483,6 @@ object TextAnalysis {
   def bm25BoostingTopK(spark: SparkSession, root: String,
       positiveText: String, negativeText: String, negBoost1000: Long,
       k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(negBoost1000 >= 0, s"negative boost $negBoost1000 < 0")
     val posTerms = positiveText.toLowerCase.trim.split("\\s+")
@@ -1616,21 +1491,15 @@ object TextAnalysis {
       .filter(_.nonEmpty).distinct.toSeq
     require(posTerms.nonEmpty && negTerms.nonEmpty,
       "boosting needs both a positive and a negative query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val scored = bm25ScoreFrame(spark, root, posTerms, asOf) match {
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, posTerms) match {
       case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
       case Some(f) => f
     }
     // the negative side needs MATCHING only, not scores: one postings
     // probe reduced to a distinct doc set (dead docs harmless — the
     // scoring side is dead-filtered before this join)
-    val negDocs = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        negTerms.toDF("tok")))
-      .reduce(_.unionByName(_))
-      .select(col("doc_id")).distinct()
+    val negDocs = snap.postings(negTerms).select(col("doc_id")).distinct()
       .withColumn("__neg", lit(true))
     scored.join(negDocs, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
@@ -1653,9 +1522,8 @@ object TextAnalysis {
   def bm25ConstantScoreTopK(spark: SparkSession, root: String,
       queryText: String, boost1000: Long, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    matched.select(col("doc_id"), lit(boost1000).as("score"))
+    Bm25Snapshot(spark, root, asOf).matchedDocIds(queryTerms(queryText))
+      .select(col("doc_id"), lit(boost1000).as("score"))
       .orderBy(col("doc_id"))
       .limit(k)
   }
@@ -1674,42 +1542,21 @@ object TextAnalysis {
   def bm25TermsSetTopK(spark: SparkSession, root: String,
       queryText: String, msmSql: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(msmSql.trim.nonEmpty, "empty minimum_should_match expression")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    val idf = bm25Idf(nDocs, dfc.toMap, terms).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
-    val msm = bm25DocValues(spark, root, asOf)
+    val st = snap.termStats(terms)
+    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val alive = snap.livePostings(terms)
+    val msm = snap.docValues
       .select(col("doc_id"), expr(msmSql).cast("long").as("__msm"))
     alive
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .groupBy(col("doc_id"))
@@ -1733,40 +1580,20 @@ object TextAnalysis {
    */
   def bm25SpanFirstTopK(spark: SparkSession, root: String, term: String,
       end: Int, k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val t = term.toLowerCase.trim
     require(t.nonEmpty && !t.exists(_.isWhitespace),
       s"span_first takes one term, got '$term'")
     require(end >= 1, s"end must be positive, got $end")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (Seq(t) :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (tk, rs) => tk -> rs.map(_.getLong(1)).sum }
-    if (!dfc.contains(t))
+    val st = snap.termStats(Seq(t))
+    if (!st.dfc.contains(t))
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val idfV = bm25Idf(nDocs, dfc.toMap, Seq(t)).head._2
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        Seq(t).toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-    alive
+    val idfV = bm25Idf(st.nDocs, st.dfc, Seq(t)).head._2
+    val avg1000 = st.avg1000
+    snap.livePositions(Seq(t))
       .select(col("doc_id"), col("len"),
         size(filter(col("positions"), p => p < lit(end.toLong)))
           .cast("long").as("tf"))
@@ -1778,47 +1605,6 @@ object TextAnalysis {
       .select(col("doc_id"), (lit(idfV) * col("w")).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-  }
-
-  /** Shared stats header for the single-pseudo-term span serves: live
-    * segments, (N, avg1000), per-term df for `terms` — one dictionary
-    * readKeys. Returns None when the index is empty. */
-  private def spanStatsHeader(spark: SparkSession, root: String,
-      terms: Seq[String], asOf: Option[String])
-      : Option[(Seq[String], Long, Long, Map[String, Long])] = {
-    import graft.sinks.MergeTable
-    import spark.implicits._
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty) return None
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (tk, rs) => tk -> rs.map(_.getLong(1)).sum }
-    Some((segs, nDocs, totLen * 1000L / nDocs, dfc.toMap))
-  }
-
-  /** Positional postings for `terms`, tombstone-masked — the probe the
-    * span serves share. Requires a positions=true index. */
-  private def spanPostings(spark: SparkSession, root: String,
-      segs: Seq[String], terms: Seq[String],
-      asOf: Option[String]): DataFrame = {
-    import graft.sinks.MergeTable
-    import spark.implicits._
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    val dead = deletedBm25Docs(spark, root, asOf)
-    if (dead.isEmpty) posts
-    else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
   }
 
   /**
@@ -1854,14 +1640,13 @@ object TextAnalysis {
     require(dist >= 0, s"dist must be non-negative, got $dist")
     require(k >= 1, s"k must be positive, got $k")
     def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val (segs, nDocs, avg1000, dfc) =
-      spanStatsHeader(spark, root, Seq(inc, exc), asOf) match {
-        case None => return empty
-        case Some(h) => h
-      }
-    if (!dfc.contains(inc)) return empty
-    val idfV = bm25Idf(nDocs, dfc, Seq(inc)).head._2
-    val posts = spanPostings(spark, root, segs, Seq(inc, exc), asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty) return empty
+    val st = snap.termStats(Seq(inc, exc))
+    if (!st.dfc.contains(inc)) return empty
+    val idfV = bm25Idf(st.nDocs, st.dfc, Seq(inc)).head._2
+    val avg1000 = st.avg1000
+    val posts = snap.livePositions(Seq(inc, exc))
     val incPos = posts.filter(col("tok") === inc)
       .select(col("doc_id"), col("len"), col("positions").as("pos_a"))
     val excPos = posts.filter(col("tok") === exc)
@@ -1904,18 +1689,17 @@ object TextAnalysis {
     require(ts.nonEmpty, "span_or needs at least one term")
     require(k >= 1, s"k must be positive, got $k")
     def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val (segs, nDocs, avg1000, dfc) =
-      spanStatsHeader(spark, root, ts, asOf) match {
-        case None => return empty
-        case Some(h) => h
-      }
-    val present = ts.filter(dfc.contains)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty) return empty
+    val st = snap.termStats(ts)
+    val present = ts.filter(st.dfc.contains)
     if (present.isEmpty) return empty
     // the pseudo-term df: max member df (SynonymQuery — summing would
     // overcount docs holding several variants)
-    val idfV = bm25Idf(nDocs,
-      Map("__or__" -> present.map(dfc).max), Seq("__or__")).head._2
-    spanPostings(spark, root, segs, present, asOf)
+    val idfV = bm25Idf(st.nDocs,
+      Map("__or__" -> present.map(st.dfc).max), Seq("__or__")).head._2
+    val avg1000 = st.avg1000
+    snap.livePositions(present)
       .groupBy(col("doc_id"))
       .agg(first(col("len")).as("len"),
         size(array_distinct(flatten(collect_list(col("positions")))))
@@ -1966,17 +1750,16 @@ object TextAnalysis {
     require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
     require(k >= 1, s"k must be positive, got $k")
     def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val (segs, nDocs, avg1000, dfc) =
-      spanStatsHeader(spark, root, ts, asOf) match {
-        case None => return empty
-        case Some(h) => h
-      }
-    if (!ts.forall(dfc.contains)) return empty // every term REQUIRED
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty) return empty
+    val st = snap.termStats(ts)
+    if (!ts.forall(st.dfc.contains)) return empty // every term REQUIRED
     // SpanNear weight: the member idfs sum into one pseudo-term idf
     val idfV = ts.map(t =>
-      bm25Idf(nDocs, dfc, Seq(t)).head._2).sum
+      bm25Idf(st.nDocs, st.dfc, Seq(t)).head._2).sum
+    val avg1000 = st.avg1000
     val n = ts.size
-    val agg = spanPostings(spark, root, segs, ts, asOf)
+    val agg = snap.livePositions(ts)
       .groupBy(col("doc_id"))
       .agg(first(col("len")).as("len"),
         collect_list(struct(col("tok"), col("positions"))).as("tp"))
@@ -2029,9 +1812,7 @@ object TextAnalysis {
    */
   def searchHighlight(df: DataFrame, idCol: String, textCol: String,
       queryText: String, window: Int): DataFrame = {
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
+    val terms = queryTerms(queryText)
     require(window >= 1, "window must be positive")
     val qlit = typedLit(terms)
     val toks = Par.ensureParallelism(df)
@@ -2119,24 +1900,12 @@ object TextAnalysis {
   def bm25FacetCounts(spark: SparkSession, root: String,
       queryText: String, docValues: DataFrame, idCol: String,
       facetCol: String): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(String, Long)].toDF(facetCol, "n_docs")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
-    val matched = alive.select(col("doc_id")).distinct()
-    matched.join(docValues.select(col(idCol).as("doc_id"),
+    snap.matchedDocIds(terms).join(docValues.select(col(idCol).as("doc_id"),
         col(facetCol)), Seq("doc_id"))
       .groupBy(col(facetCol))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -2157,29 +1926,20 @@ object TextAnalysis {
    */
   def bm25MoreLikeThis(spark: SparkSession, root: String,
       docText: String, maxQueryTerms: Int, k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(maxQueryTerms >= 1, "maxQueryTerms must be positive")
     val toks = docText.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).toSeq
     require(toks.nonEmpty, "empty document")
     val tf = toks.groupBy(identity).map { case (t, o) => t -> o.size.toLong }
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (tf.keys.toSeq :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(tf.keys.toSeq)
+    val dfc = st.dfc
     // interestingness = tf(doc) · idf(corpus), both integers — terms
     // absent from the index carry no idf and cannot retrieve anything
-    val idf = bm25Idf(nDocs, dfc, dfc.keys.toSeq.sorted).toMap
+    val idf = bm25Idf(st.nDocs, dfc, dfc.keys.toSeq.sorted).toMap
     val picked = tf.toSeq
       .filter { case (t, _) => dfc.contains(t) }
       .map { case (t, f) => (t, f * idf(t)) }
@@ -2187,7 +1947,7 @@ object TextAnalysis {
       .take(maxQueryTerms).map(_._1)
     if (picked.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    bm25ServeTopK(spark, root, picked.mkString(" "), k)
+    bm25TopKFrame(snap, picked, k)
   }
 
   /**
@@ -2222,41 +1982,19 @@ object TextAnalysis {
       queryText: String, k: Int, asOf: Option[String],
       minShouldMatch: Int, useMax: Boolean,
       afterCursor: Option[(Long, Long)] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
+    val terms = queryTerms(queryText)
     require(minShouldMatch >= 1 && minShouldMatch <= terms.size,
       s"minimumShouldMatch $minShouldMatch out of [1, ${terms.size}]")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    val idf = bm25Idf(nDocs, dfc.toMap, terms).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
-    val contrib = alive
+    val st = snap.termStats(terms)
+    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val contrib = snap.livePostings(terms)
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
     val scoreCol =
@@ -2297,7 +2035,6 @@ object TextAnalysis {
   def bm25ServeTopKBool(spark: SparkSession, root: String,
       mustText: String, shouldText: String, mustNotText: String,
       k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     def toks(s: String): Seq[String] = s.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).distinct.toSeq
@@ -2309,45 +2046,22 @@ object TextAnalysis {
     require(scored.intersect(exTerms).isEmpty,
       s"terms ${scored.intersect(exTerms).mkString(",")} are both scored " +
         "and prohibited — such a query matches nothing")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (scored :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(scored)
+    val dfc = st.dfc
     // MUST decided from the dictionary alone, zero postings read
     if (!must.forall(dfc.contains))
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val idf = bm25Idf(nDocs, dfc.toMap, scored.filter(dfc.contains))
+    val idf = bm25Idf(st.nDocs, dfc, scored.filter(dfc.contains))
       .toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        scored.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val alive = snap.livePostings(scored)
     // MUST_NOT: anti-join before the aggregate (the NOT serve's shape)
     val admitted =
       if (exTerms.isEmpty) alive
-      else {
-        val excluded = segs.map(sg =>
-          MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-            exTerms.toDF("tok")))
-          .reduce(_.unionByName(_))
-          .select(col("doc_id")).distinct()
-        alive.join(excluded, Seq("doc_id"), "left_anti")
-      }
+      else alive.join(snap.postings(exTerms).select(col("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
     // MUST: cheapest-df seed semi-join (the AND serve's shape)
     val restricted =
       if (must.isEmpty) admitted
@@ -2363,7 +2077,7 @@ object TextAnalysis {
     restricted
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .groupBy(col("doc_id"))
@@ -2392,10 +2106,10 @@ object TextAnalysis {
   def bm25ServePhraseTopK(spark: SparkSession, root: String,
       phrase: String, k: Int): DataFrame = {
     import spark.implicits._
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    phraseScoreFrame(spark, root, segs, phrase)
+    phraseScoreFrame(snap, phrase)
       .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -2406,45 +2120,24 @@ object TextAnalysis {
     * with an absent term matches nothing, dictionary-decided). Factored
     * out so [[queryStringPhraseTopK]] can compose phrase clauses with
     * term scoring; [[bm25ServePhraseTopK]] is this frame + top-k. */
-  private def phraseScoreFrame(spark: SparkSession, root: String,
-      segs: Seq[String], phrase: String,
+  private def phraseScoreFrame(snap: Bm25Snapshot, phrase: String,
       restrictTo: Option[Seq[Long]] = None): Option[DataFrame] = {
-    import graft.sinks.MergeTable
-    import spark.implicits._
     val terms = phrase.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).toSeq
     require(terms.length >= 2, "phrase needs at least two tokens")
     val distinctTerms = terms.distinct
-    val keyDf = (distinctTerms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(distinctTerms)
     // a phrase with an absent term matches nothing — dictionary-decided
-    if (!distinctTerms.forall(dfc.contains))
+    if (!distinctTerms.forall(st.dfc.contains))
       return None
     // Lucene sums idf over all phrase POSITIONS (duplicates included:
     // "table table" carries 2·idf(table)) — replayed in the oracle.
     // bm25Idf gets the dup-bearing list so its large-N overflow guard
     // bounds the SUMMED worst case, not the distinct one.
-    val idfByTerm = bm25Idf(nDocs, dfc.toMap, terms).toMap
+    val idfByTerm = bm25Idf(st.nDocs, st.dfc, terms).toMap
     val idfSum = terms.map(idfByTerm).sum
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        distinctTerms.toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    val dead = deletedBm25Docs(spark, root)
-    val alive0 =
-      if (dead.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val avg1000 = st.avg1000
+    val alive0 = snap.livePositions(distinctTerms)
     // rescore restriction: a BOUNDED id list (the rescore window)
     // pushed into the postings read as an isin literal — the phrase
     // fold only ever sees window docs
@@ -2495,7 +2188,6 @@ object TextAnalysis {
    */
   def bm25ServePhrasePrefixTopK(spark: SparkSession, root: String,
       phrasePrefix: String, k: Int, maxExpansions: Int = 50): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val terms = phrasePrefix.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).toSeq
@@ -2504,52 +2196,33 @@ object TextAnalysis {
     require(maxExpansions >= 1, s"maxExpansions $maxExpansions < 1")
     val fixed = terms.init
     val stem = terms.last
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
     // ES max_expansions: the FIRST maxExpansions terms in dictionary
     // order (deterministic; the budgeted band scan already bounds it)
-    val expansion = expandPrefixTerms(spark, root, segs, stem)
+    val expansion = expandPrefixTerms(snap, stem)
       .toSeq.sortBy(_._1).take(maxExpansions)
     if (expansion.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val expToks = expansion.map(_._1)
     val distinctFixed = fixed.distinct
-    val keyDf = (distinctFixed :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    if (!distinctFixed.forall(dfc.contains)) // absent fixed token
+    val st = snap.termStats(distinctFixed)
+    if (!distinctFixed.forall(st.dfc.contains)) // absent fixed token
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
     // idf: fixed positions by their own df; the expanded position as
     // one pseudo-term at the max member df
     val lastKey = s"$stem*"
-    val dfAll = dfc.toMap + (lastKey -> expansion.map(_._2).max)
-    val idfByPos = bm25Idf(nDocs, dfAll, fixed :+ lastKey).toMap
+    val dfAll = st.dfc + (lastKey -> expansion.map(_._2).max)
+    val idfByPos = bm25Idf(st.nDocs, dfAll, fixed :+ lastKey).toMap
+    val avg1000 = st.avg1000
     val idfSum = (fixed :+ lastKey).map(idfByPos).sum
     // key set deduped: a fixed token can itself match the stem
     // ("sort so*") — a duplicate key would duplicate postings rows
     // into the per-doc fold (harmless today only because
     // array_intersect has set semantics; dedupe rather than rely on it)
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        (distinctFixed ++ expToks).distinct.toDF("tok")))
-      .reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-    val agg = alive.groupBy(col("doc_id"))
+    val agg = snap.livePositions((distinctFixed ++ expToks).distinct)
+      .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("tok"), col("positions"))).as("tp"),
         max(col("len")).as("len"))
     val shifted: Seq[Column] = fixed.zipWithIndex.map { case (t, i) =>
@@ -2602,12 +2275,12 @@ object TextAnalysis {
     require(!b.startsWith(p),
       s"termB '$b' matches the prefix '$p*' — a same-occurrence " +
         "self-pair is undefined; use distinct operands")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "n_pairs")
     val upper = prefixSuccessor(p)
-    val expanded = segs.flatMap { sg =>
-      MergeTable.readRange(spark, s"$root/segs/$sg/terms", Some(p), upper)
+    val expanded = snap.tables("terms").flatMap { t =>
+      MergeTable.readRange(spark, t, Some(p), upper)
         .filter(col("tok").startsWith(p)).select(col("tok"))
         .limit(MaxPrefixExpansion + 1).collect().map(_.getString(0)).toSeq
     }.distinct.sorted
@@ -2616,15 +2289,7 @@ object TextAnalysis {
     require(expanded.size <= MaxPrefixExpansion,
       s"prefix '$p*' expands to ${expanded.size} terms — past the " +
         s"$MaxPrefixExpansion budget; narrow the prefix")
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        (expanded :+ b).toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val alive = snap.livePositions(expanded :+ b)
     // Only docs containing termB can produce a pair, but the wildcard
     // side alone can match a large fraction of the corpus (every s*-doc
     // at 100× was the round-16 scale outlier: 9.1× wall-clock where
@@ -2670,9 +2335,8 @@ object TextAnalysis {
   def maybeCompactBm25(spark: SparkSession, root: String,
       maxSegments: Int = 8, maxDead: Int = 100000,
       nBuckets: Int = 32): Boolean = {
-    val segs = liveSegments(spark, root)
-    val dead = deletedBm25Docs(spark, root)
-    if (segs.size <= maxSegments && dead.size <= maxDead) false
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.segments.size <= maxSegments && snap.dead.size <= maxDead) false
     else { compactBm25Index(spark, root, nBuckets); true }
   }
 
@@ -2800,37 +2464,6 @@ object TextAnalysis {
     ()
   }
 
-  /** The current tombstone set (empty when the live version carries no
-    * deletes file). */
-  private[graft] def deletedBm25Docs(spark: SparkSession,
-      root: String, asOf: Option[String] = None): Set[Long] = {
-    import graft.sinks.Versioned
-    val v = asOf.getOrElse(Versioned.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"$root has no committed index manifest")))
-    Versioned.readSmallText(spark,
-      new org.apache.hadoop.fs.Path(s"$root/$v", DeletesFile))
-      .map(_.split('\n').map(_.trim).filter(_.nonEmpty)
-        .map(_.toLong).toSet)
-      .getOrElse(Set.empty)
-  }
-
-  /** The per-term dead-df corrections committed with the live version's
-    * tombstone set (VERDICT r15 #6), if the deletes went through a
-    * corrections-aware [[deleteBm25Docs]]: (tok, dfc_dead, occ_dead) —
-    * how many tombstoned docs contain each term and their summed tf.
-    * None on a correction-less version (legacy deletes, or no deletes);
-    * the wildcard COUNT serves then fall back to postings recounts. */
-  private[graft] def deadBm25TermCorrections(spark: SparkSession,
-      root: String, asOf: Option[String] = None): Option[DataFrame] = {
-    import graft.sinks.Versioned
-    val v = asOf.orElse(Versioned.currentVersion(spark, root))
-      .getOrElse(return None)
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$v", DeadTermsDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(dir)) Some(spark.read.parquet(dir.toString)) else None
-  }
-
   /**
    * Delete documents from the lexical index by tombstone — the LUCENE
    * CONTRACT, stated explicitly: deleted docs disappear from results
@@ -2857,19 +2490,17 @@ object TextAnalysis {
   def deleteBm25Docs(spark: SparkSession, root: String,
       ids: Seq[Long]): Int = graft.sinks.Lease.withLease(spark, root) {
     import graft.sinks.MergeTable
-    import spark.implicits._
-    val (segs, fence) = liveSegmentsWithFence(spark, root)
-    val prevDead = deletedBm25Docs(spark, root)
+    val snap = Bm25Snapshot(spark, root)
+    val prevDead = snap.dead
     val dead = prevDead ++ ids
     require(dead.size <= MaxBm25Tombstones,
       s"tombstone set ${dead.size} exceeds $MaxBm25Tombstones — compact first")
     val newIds = ids.toSet -- prevDead
-    val prev = deadBm25TermCorrections(spark, root)
+    val prev = snap.deadTermCorrections
     val corrections: Option[DataFrame] =
       if (newIds.isEmpty) prev.map(_.select("tok", "dfc_dead", "occ_dead"))
       else {
-        val posts = segs.map(sg =>
-          MergeTable.read(spark, s"$root/segs/$sg/postings"))
+        val posts = snap.tables("postings").map(MergeTable.read(spark, _))
           .reduce(_.unionByName(_))
         // small delete batches ride an IN-list; big ones (the cap is 1M
         // ids) a broadcast semi-join — a 100k-literal isin would
@@ -2906,29 +2537,167 @@ object TextAnalysis {
     // — the previous version's dead_terms parquet stays on disk until a
     // separate vacuum, segments are immutable, and the lease serializes
     // every other maintenance writer
-    commitSegments(spark, root, segs, fence, dead.toSeq, corrections)
+    commitSegments(spark, root, snap.segments, snap.fence, dead.toSeq,
+      corrections)
     dead.size
   }
 
-  private[graft] def liveSegments(spark: SparkSession,
-      root: String): Seq[String] =
-    liveSegmentsWithFence(spark, root)._1
+  /** The distinct lowercased terms of a whitespace-tokenized query. */
+  private def queryTerms(queryText: String): Seq[String] = {
+    val terms = queryText.toLowerCase.trim.split("\\s+")
+      .filter(_.nonEmpty).distinct.toSeq
+    require(terms.nonEmpty, "empty query")
+    terms
+  }
 
-  private[graft] def liveSegmentsWithFence(spark: SparkSession,
-      root: String, asOf: Option[String] = None)
-      : (Seq[String], Option[Long]) = {
-    import graft.sinks.Versioned
-    val v = asOf.getOrElse(Versioned.currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"$root has no committed index manifest — build incomplete or " +
-          "crashed before the commit; (re)build")))
-    val txt = Versioned.readSmallText(spark,
-      new org.apache.hadoop.fs.Path(s"$root/$v", SegmentsFile)).getOrElse(
-      throw new IllegalStateException(s"$root/$v has no $SegmentsFile"))
-    val lines = txt.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    val fence = lines.find(_.startsWith(FencePrefix))
-      .map(_.substring(FencePrefix.length).toLong)
-    (lines.filterNot(_.startsWith("#")), fence)
+  /** Dictionary statistics for a term set, summed over a snapshot's
+    * segments: N, Σlen, df per term, and the raw per-segment term rows
+    * (tok, dfc, tot, maxtf, minlen, occ, maxlen) that MaxScore's impact
+    * bounds read. */
+  private[graft] final case class Bm25TermStats(nDocs: Long, totLen: Long,
+      dfc: Map[String, Long], rows: Seq[org.apache.spark.sql.Row]) {
+    lazy val avg1000: Long = totLen * 1000L / nDocs
+  }
+
+  /**
+   * One point-in-time view of a segmented BM25 index, resolved once per
+   * request — Lucene's DirectoryReader. The version pointer is read once
+   * (or taken from `asOf`), that version's segments file gives the
+   * segment list and the exactly-once fence, and that version's
+   * tombstone set loads lazily, so a serve that never masks never reads
+   * the deletes file. Every read of a request goes through the same
+   * version: a compaction committing mid-serve cannot pair the old
+   * segments with the new, empty tombstone set. Segments are immutable,
+   * so an as-of snapshot of a retained version is index time travel.
+   */
+  private[graft] final class Bm25Snapshot private (val spark: SparkSession,
+      val root: String, val version: String, val segments: Seq[String],
+      val fence: Option[Long]) {
+    import graft.sinks.MergeTable
+    import spark.implicits._
+
+    def isEmpty: Boolean = segments.isEmpty
+
+    /** One path per segment to its `table` (postings, terms, docvals). */
+    def tables(table: String): Seq[String] =
+      segments.map(sg => s"$root/segs/$sg/$table")
+
+    /** This version's tombstones (empty when it has no deletes file). */
+    lazy val dead: Set[Long] =
+      graft.sinks.Versioned.readSmallText(spark,
+        new org.apache.hadoop.fs.Path(s"$root/$version", DeletesFile))
+        .map(_.split('\n').map(_.trim).filter(_.nonEmpty)
+          .map(_.toLong).toSet)
+        .getOrElse(Set.empty)
+
+    /** The per-term dead-df corrections committed with this version's
+      * tombstone set (VERDICT r15 #6), if the deletes went through a
+      * corrections-aware [[deleteBm25Docs]]: (tok, dfc_dead, occ_dead) —
+      * how many tombstoned docs contain each term and their summed tf.
+      * None on a correction-less version (legacy deletes, or no
+      * deletes); the wildcard COUNT serves then fall back to postings
+      * recounts. */
+    def deadTermCorrections: Option[DataFrame] = {
+      val dir = new org.apache.hadoop.fs.Path(s"$root/$version", DeadTermsDir)
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(dir)) Some(spark.read.parquet(dir.toString)) else None
+    }
+
+    /** One dictionary probe (collected in one job) for `terms` plus the
+      * corpus-scalars row of every segment. */
+    def termStats(terms: Seq[String]): Bm25TermStats = {
+      val tRows = MergeTable.collectKeys(spark, tables("terms"), "tok",
+        (terms :+ Bm25StatsKey).toDF("tok"))
+      val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
+      require(statsRows.size == segments.size,
+        s"$root: ${segments.size} live segments but ${statsRows.size} " +
+          "stats rows — segment corruption (the manifest names a segment " +
+          "whose terms table lost its scalars)")
+      val rows = tRows.filterNot(_.getString(0) == Bm25StatsKey)
+      Bm25TermStats(statsRows.map(_.getLong(1)).sum,
+        statsRows.map(_.getLong(2)).sum,
+        rows.groupBy(_.getString(0))
+          .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum },
+        rows)
+    }
+
+    /** The bucket-pruned postings of `terms`, unioned across segments,
+      * tombstones NOT masked. */
+    def postings(terms: Seq[String]): DataFrame =
+      tables("postings").map(p =>
+        MergeTable.readKeys(spark, p, "tok", terms.toDF("tok")))
+        .reduce(_.unionByName(_))
+
+    /** Drop this version's tombstoned docs from a doc_id-keyed frame. */
+    def mask(df: DataFrame): DataFrame =
+      if (dead.isEmpty) df
+      else df.filter(!col("doc_id").isin(dead.toSeq: _*))
+
+    /** [[postings]] with the tombstone mask. */
+    def livePostings(terms: Seq[String]): DataFrame = mask(postings(terms))
+
+    /** [[livePostings]] of a positional index; raises on one built
+      * without positions. */
+    def livePositions(terms: Seq[String]): DataFrame = {
+      val posts = postings(terms)
+      require(posts.schema.fieldNames.contains("positions"),
+        s"$root: postings carry no positions — build with positions = true")
+      mask(posts)
+    }
+
+    /** The distinct live doc_ids matching ANY of `terms` — the shared
+      * candidate-set probe behind facets and the bucket aggs: one
+      * postings readKeys ∝ the terms' df, tombstone-masked. */
+    def matchedDocIds(terms: Seq[String]): DataFrame =
+      if (isEmpty) Seq.empty[Long].toDF("doc_id")
+      else livePostings(terms).select(col("doc_id")).distinct()
+
+    /** The doc-values sidecar as one relation (all segments unioned) —
+      * raises when the index was built without `docValueCols`. Filtered
+      * serves scan it with the structured predicate pushed down to
+      * parquet; nothing else ever reads it. */
+    def docValues: DataFrame = {
+      require(segments.nonEmpty, s"$root: empty index has no doc values")
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      segments.foreach(sg => require(
+        fs.exists(new org.apache.hadoop.fs.Path(s"$root/segs/$sg/docvals")),
+        s"$root/segs/$sg has no docvals sidecar — build the index with " +
+          "docValueCols to use filtered serves"))
+      tables("docvals").map(MergeTable.read(spark, _))
+        .reduce(_.unionByName(_))
+    }
+  }
+
+  private[graft] object Bm25Snapshot {
+    /** Resolve `root` at `asOf`, or at its current version. */
+    def apply(spark: SparkSession, root: String,
+        asOf: Option[String] = None): Bm25Snapshot = {
+      val v = asOf.getOrElse(
+        graft.sinks.Versioned.currentVersion(spark, root).getOrElse(
+          throw new IllegalStateException(
+            s"$root has no committed index manifest — build incomplete " +
+              "or crashed before the commit; (re)build")))
+      val (segs, fence) = segmentsFile(spark, root, v).getOrElse(
+        throw new IllegalStateException(s"$root/$v has no $SegmentsFile"))
+      new Bm25Snapshot(spark, root, v, segs, fence)
+    }
+
+    /** Whether `root` holds a committed index manifest. */
+    def exists(spark: SparkSession, root: String): Boolean =
+      graft.sinks.Versioned.currentVersion(spark, root).isDefined
+
+    /** A version's segment list and fence, None without a segments file. */
+    private[TextAnalysis] def segmentsFile(spark: SparkSession, root: String,
+        version: String): Option[(Seq[String], Option[Long])] =
+      graft.sinks.Versioned.readSmallText(spark,
+        new org.apache.hadoop.fs.Path(s"$root/$version", SegmentsFile))
+        .map { txt =>
+          val lines = txt.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+          (lines.filterNot(_.startsWith("#")),
+            lines.find(_.startsWith(FencePrefix))
+              .map(_.substring(FencePrefix.length).toLong))
+        }
   }
 
   /**
@@ -2942,11 +2711,17 @@ object TextAnalysis {
    */
   def bm25ServeTopK(spark: SparkSession, root: String,
       queryText: String, k: Int, asOf: Option[String] = None): DataFrame = {
+    val terms = queryTerms(queryText)
+    bm25TopKFrame(Bm25Snapshot(spark, root, asOf), terms, k)
+  }
+
+  /** [[bm25ScoreFrame]]'s top-k — the plain disjunctive serve on a
+    * resolved snapshot. */
+  private def bm25TopKFrame(snap: Bm25Snapshot, terms: Seq[String],
+      k: Int): DataFrame = {
+    val spark = snap.spark
     import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    bm25ScoreFrame(spark, root, terms, asOf)
+    bm25ScoreFrame(snap, terms)
       .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -2979,48 +2754,27 @@ object TextAnalysis {
   def bm25ServeTopKSynonyms(spark: SparkSession, root: String,
       queryText: String, synonyms: Map[String, Seq[String]], k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
+    val terms = queryTerms(queryText)
     // group per query term: itself ∪ its (lowercased, deduped) synonyms
     val groups: Seq[(String, Seq[String])] = terms.map { t =>
       t -> (t +: synonyms.getOrElse(t, Seq.empty).map(_.toLowerCase.trim)
         .filter(_.nonEmpty)).distinct
     }
     val members = groups.flatMap(_._2).distinct
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (members :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(members)
+    val avg1000 = st.avg1000
     // group df = max member df (SynonymQuery's blend)
     val dfGroup = groups.map { case (g, ms) =>
-      g -> ms.map(m => dfc.getOrElse(m, 0L)).max
+      g -> ms.map(m => st.dfc.getOrElse(m, 0L)).max
     }.toMap
-    val idf = bm25Idf(nDocs, dfGroup, groups.map(_._1)).toDF("grp", "idf")
+    val idf = bm25Idf(st.nDocs, dfGroup, groups.map(_._1)).toDF("grp", "idf")
     val tok2grp = groups.flatMap { case (g, ms) => ms.map(m => (m, g)) }
       .toDF("tok", "grp")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        members.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
-    alive
+    snap.livePostings(members)
       .join(broadcast(tok2grp), "tok")
       // one pseudo-term per (doc, group): member tfs sum, len is the
       // doc's (identical on every one of its postings rows)
@@ -3048,40 +2802,15 @@ object TextAnalysis {
    * exactly Lucene's behavior (a filter restricts the doc set, not the
    * term statistics).
    */
-  private[graft] def bm25ScoreFrame(spark: SparkSession, root: String,
-      terms: Seq[String], asOf: Option[String] = None,
+  private[graft] def bm25ScoreFrame(snap: Bm25Snapshot, terms: Seq[String],
       candidateFilter: Option[DataFrame] = None): Option[DataFrame] = {
-    import graft.sinks.MergeTable
+    val spark = snap.spark
     import spark.implicits._
-    // AS-OF serve: the segments manifest is a versioned pointer and
-    // segments are immutable, so serving an older retained version is
-    // just reading its segment list (and ITS tombstone set) — index
-    // time travel for free, same as MergeTable.readVersion
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty) return None // empty manifest (all compacted away)
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows" +
-        " — segment corruption (the manifest names a segment whose terms" +
-        " table lost its scalars)")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    val idf = bm25Idf(nDocs, dfc.toMap, terms).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    if (snap.isEmpty) return None // empty manifest (all compacted away)
+    val st = snap.termStats(terms)
+    val avg1000 = st.avg1000
+    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val alive = snap.livePostings(terms)
     // filter context: the predicate joins the CANDIDATE set (the query
     // terms' postings), never the corpus — and it lands before the
     // aggregate, so filtered-out docs contribute no scoring rows
@@ -3100,24 +2829,11 @@ object TextAnalysis {
       .agg(sum(col("idf") * col("w")).as("score")))
   }
 
-  /** The index's doc-values sidecar as one relation (all live segments
-    * unioned) — raises when the index was built without `docValueCols`.
-    * Filtered serves scan it with the structured predicate pushed down
-    * to parquet; nothing else ever reads it. */
+  /** The index's doc-values sidecar as one relation — see
+    * [[Bm25Snapshot.docValues]]. */
   def bm25DocValues(spark: SparkSession, root: String,
-      asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    require(segs.nonEmpty, s"$root: empty index has no doc values")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    segs.foreach(sg => require(
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/segs/$sg/docvals")),
-      s"$root/segs/$sg has no docvals sidecar — build the index with " +
-        "docValueCols to use filtered serves"))
-    segs.map(sg => MergeTable.read(spark, s"$root/segs/$sg/docvals"))
-      .reduce(_.unionByName(_))
-  }
+      asOf: Option[String] = None): DataFrame =
+    Bm25Snapshot(spark, root, asOf).docValues
 
   /**
    * Filtered BM25 top-k — the ES bool-query `filter` context: the
@@ -3135,12 +2851,11 @@ object TextAnalysis {
       queryText: String, filterSql: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
+    val terms = queryTerms(queryText)
     require(filterSql.trim.nonEmpty, "empty filter — use bm25ServeTopK")
-    val pass = bm25DocValues(spark, root, asOf).filter(expr(filterSql))
-    bm25ScoreFrame(spark, root, terms, asOf, candidateFilter = Some(pass))
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val pass = snap.docValues.filter(expr(filterSql))
+    bm25ScoreFrame(snap, terms, candidateFilter = Some(pass))
       .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -3176,14 +2891,12 @@ object TextAnalysis {
     require(fields.nonEmpty, "no fields")
     require(mode == "best_fields" || mode == "most_fields",
       s"unknown multi_match mode '$mode'")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
+    val terms = queryTerms(queryText)
     // the ES bool composition: multi_match in query context + filter
     // context in ONE serve — the same doc_id filter frame semi-joins
     // EVERY field's candidates before its scoring aggregate
     val frames = fields.flatMap { case (root, boost1000) =>
-      bm25ScoreFrame(spark, root, terms, asOf, candidateFilter)
+      bm25ScoreFrame(Bm25Snapshot(spark, root, asOf), terms, candidateFilter)
         .map(_.select(col("doc_id"),
           expr(s"(score * $boost1000) div 1000").as("fscore")))
     }
@@ -3236,51 +2949,23 @@ object TextAnalysis {
       fields: Seq[(String, Long)], queryText: String, k: Int,
       asOf: Option[String] = None,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(fields.nonEmpty, "no fields")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
+    val terms = queryTerms(queryText)
     // per-field dictionary pass: stats scalars + per-term df
-    final case class FieldStats(root: String, boost1000: Long,
-        segs: Seq[String], nDocs: Long, avg1000: Long,
-        dfc: Map[String, Long])
     val stats = fields.flatMap { case (root, boost1000) =>
-      val segs = liveSegmentsWithFence(spark, root, asOf)._1
-      if (segs.isEmpty) None
-      else {
-        val tRows = MergeTable.collectKeys(spark,
-          segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-        val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-        require(statsRows.size == segs.size,
-          s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-        val nDocs = statsRows.map(_.getLong(1)).sum
-        val totLen = statsRows.map(_.getLong(2)).sum
-        val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-          .groupBy(_.getString(0))
-          .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-        Some(FieldStats(root, boost1000, segs, nDocs,
-          totLen * 1000L / nDocs, dfc.toMap))
-      }
+      val snap = Bm25Snapshot(spark, root, asOf)
+      if (snap.isEmpty) None else Some((snap, boost1000, snap.termStats(terms)))
     }
     if (stats.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val nBlend = stats.map(_.nDocs).max
+    val nBlend = stats.map(_._3.nDocs).max
     val dfBlend = terms.map(t =>
-      t -> math.min(stats.map(_.dfc.getOrElse(t, 0L)).sum, nBlend)).toMap
+      t -> math.min(stats.map(_._3.dfc.getOrElse(t, 0L)).sum, nBlend)).toMap
     val idf = bm25Idf(nBlend, dfBlend, terms).toDF("tok", "idf")
     // per-field boosted (doc, term) weights over the candidates only
-    val perField = stats.map { f =>
-      val postings = f.segs.map(sg =>
-        MergeTable.readKeys(spark, s"${f.root}/segs/$sg/postings", "tok",
-          terms.toDF("tok")))
-        .reduce(_.unionByName(_))
-      val dead = deletedBm25Docs(spark, f.root, asOf)
-      val alive =
-        if (dead.isEmpty) postings
-        else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val perField = stats.map { case (snap, boost1000, st) =>
+      val alive = snap.livePostings(terms)
       val filtered = candidateFilter match {
         case None => alive
         case Some(pass) =>
@@ -3288,11 +2973,11 @@ object TextAnalysis {
       }
       filtered
         .withColumn("norm1000",
-          lit(250L) + expr(s"(750 * len * 1000) div ${f.avg1000}"))
+          lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
         .withColumn("w",
           expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
         .select(col("doc_id"), col("tok"),
-          expr(s"(w * ${f.boost1000}) div 1000").as("wb"))
+          expr(s"(w * $boost1000) div 1000").as("wb"))
     }.reduce(_.unionByName(_))
     perField
       .groupBy(col("doc_id"), col("tok"))
@@ -3359,49 +3044,30 @@ object TextAnalysis {
   def bm25ServeTopKMaxScore(spark: SparkSession, root: String,
       queryText: String, k: Int, asOf: Option[String] = None,
       minSuffixRows: Long = MinSuffixRowsForPrune): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     lastMaxScoreAudit = None
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val termRows = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-    val dfc = termRows.groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    val idfMap = bm25Idf(nDocs, dfc.toMap, terms).toMap
+    val st = snap.termStats(terms)
+    val avg1000 = st.avg1000
+    val termRows = st.rows
+    val dfc = st.dfc
+    val idfMap = bm25Idf(st.nDocs, dfc, terms).toMap
     // impact bounds need the stats columns on EVERY segment; a legacy
     // (pre-maxtf/minlen) segment in the mix disables the optimization
     val statsReady = termRows.forall(r =>
       r.length >= 5 && !r.isNullAt(3) && !r.isNullAt(4))
     val present = terms.filter(dfc.contains) // terms with any postings
     if (!statsReady || present.size <= 1)
-      return bm25ServeTopK(spark, root, queryText, k, asOf)
+      return bm25TopKFrame(snap, terms, k)
     val ub: Map[String, Long] = termRows.groupBy(_.getString(0)).map {
       case (t, rs) =>
         t -> idfMap(t) * bm25W(rs.map(_.getLong(3)).max,
           rs.map(_.getLong(4)).min, avg1000)
     }
     val ordered = present.sortBy(t => (-ub(t), t))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    def aliveOf(df: DataFrame): DataFrame =
-      if (dead.isEmpty) df
-      else df.filter(!col("doc_id").isin(dead.toSeq: _*))
-    def postingsOf(ts: Seq[String]): DataFrame =
-      aliveOf(segs.map(sg =>
-        MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-          ts.toDF("tok"))).reduce(_.unionByName(_)))
     def scored(posts: DataFrame, ts: Seq[String]): DataFrame =
       posts.join(broadcast(
           ts.map(t => (t, idfMap(t))).toDF("tok", "idf")), "tok")
@@ -3418,7 +3084,7 @@ object TextAnalysis {
     // row groups, so the split costs no extra IO and needs no cache
     // (a cache write of the whole postings read measured slower than
     // the two pruned scans in the sf10 A/B)
-    val all = postingsOf(ordered)
+    val all = snap.livePostings(ordered)
     def materialize(res: DataFrame): DataFrame = {
       // k rows — a top-k serve's result is driver-bounded by contract;
       // materializing lets the cache release deterministically
@@ -3488,7 +3154,7 @@ object TextAnalysis {
       // so df(t1) − |dead| ≥ k certifies k live t1 docs. Past it, the
       // probe ladder below is tombstone-safe (its θ is computed over
       // alive postings).
-      if (maxlenReady && dfc(t1) - dead.size >= k) {
+      if (maxlenReady && dfc(t1) - snap.dead.size >= k) {
         val thetaLb = idfMap(t1) *
           bm25W(1L, t1Rows.map(_.getLong(6)).max, avg1000)
         val suffix = ordered.drop(1)
@@ -3539,7 +3205,6 @@ object TextAnalysis {
    */
   def bm25BatchTopK(spark: SparkSession, root: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(queries.nonEmpty, "empty batch")
     val qTerms: Seq[(Long, String)] = queries.flatMap { case (qid, txt) =>
@@ -3547,38 +3212,21 @@ object TextAnalysis {
         .map(t => (qid, t))
     }
     val allTerms = qTerms.map(_._2).distinct
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Int, Long, Long)]
         .toDF("query_id", "rank", "doc_id", "score")
-    val keyDf = (allTerms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(allTerms)
+    val avg1000 = st.avg1000
     // idf through the large-N guard PER QUERY: ranks are windowed per
     // query, so a per-query shift (almost always 0) preserves each
     // query's ordering independently
     val qt = queries.flatMap { case (qid, txt) =>
       val ts = txt.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
         .distinct.toSeq
-      bm25Idf(nDocs, dfc.toMap, ts).map { case (t, v) => (qid, t, v) }
+      bm25Idf(st.nDocs, st.dfc, ts).map { case (t, v) => (qid, t, v) }
     }.toDF("query_id", "tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        allTerms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val alive = snap.livePostings(allTerms)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -3609,25 +3257,14 @@ object TextAnalysis {
    */
   def phraseServeCount(spark: SparkSession, root: String,
       phrase: String): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val terms = phrase.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).toSeq
     require(terms.length >= 2, "phrase needs at least two tokens")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "n_matches")
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.distinct.toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build the index with " +
-        "positions = true for phrase serving")
-    val deadP = deletedBm25Docs(spark, root)
-    val alive =
-      if (deadP.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(deadP.toSeq: _*))
-    val agg = alive.groupBy(col("doc_id"))
+    val agg = snap.livePositions(terms.distinct).groupBy(col("doc_id"))
       .agg(collect_list(struct(col("tok"), col("positions"))).as("tp"))
     // Column-API term equality (ADVICE r15: no SQL-literal interpolation
     // — a backslash-bearing corpus token must round-trip byte-exactly)
@@ -3707,41 +3344,21 @@ object TextAnalysis {
    */
   def bm25ServeSloppyPhraseTopK(spark: SparkSession, root: String,
       termA: String, termB: String, slop: Int, k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val a = termA.toLowerCase.trim; val b = termB.toLowerCase.trim
     require(a.nonEmpty && b.nonEmpty && a != b,
       "sloppy phrase needs two distinct terms")
     require(slop >= 0, s"negative slop $slop")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val keyDf = (Seq(a, b) :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    if (!Seq(a, b).forall(dfc.contains))
+    val st = snap.termStats(Seq(a, b))
+    if (!Seq(a, b).forall(st.dfc.contains))
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val idfByTerm = bm25Idf(nDocs, dfc.toMap, Seq(a, b)).toMap
+    val idfByTerm = bm25Idf(st.nDocs, st.dfc, Seq(a, b)).toMap
     val idfSum = idfByTerm(a) + idfByTerm(b)
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        Seq(a, b).toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-    val agg = alive.groupBy(col("doc_id"))
+    val avg1000 = st.avg1000
+    val agg = snap.livePositions(Seq(a, b)).groupBy(col("doc_id"))
       .agg(collect_list(struct(col("tok"), col("positions"))).as("tp"),
         max(col("len")).as("len"))
     def posOf(t: String): Column = flatten(transform(
@@ -3779,27 +3396,14 @@ object TextAnalysis {
   private def nearServeImpl(spark: SparkSession, root: String,
       termA: String, termB: String, slop: Int, ordered: Boolean)
       : DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val a = termA.toLowerCase.trim; val b = termB.toLowerCase.trim
     require(a.nonEmpty && b.nonEmpty && a != b,
       "nearSearch needs two distinct terms")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "n_pairs")
-    val posts = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        Seq(a, b).toDF("tok"))).reduce(_.unionByName(_))
-    require(posts.schema.fieldNames.contains("positions"),
-      s"$root: postings carry no positions — build with positions = true")
-    // tombstone mask (parity with phraseServeCount/nearServePrefixCount —
-    // the unordered serve had silently skipped it, a latent gap: a
-    // deleted doc's pairs kept serving until compaction)
-    val dead = deletedBm25Docs(spark, root)
-    val alive =
-      if (dead.isEmpty) posts
-      else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-    val agg = alive.groupBy(col("doc_id"))
+    val agg = snap.livePositions(Seq(a, b)).groupBy(col("doc_id"))
       .agg(collect_list(struct(col("tok"), col("positions"))).as("tp"))
     nearPairsFrom(agg, a, b, slop,
       posOf = t => flatten(transform(
@@ -4474,8 +4078,9 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     require(cuts.nonEmpty && cuts == cuts.sorted && cuts.distinct == cuts,
       s"range cuts must be ascending and distinct, got $cuts")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol))
     // descending when-chain: first cut ≤ value wins
     val lastKey = s"${cuts.last}-*"
@@ -4506,8 +4111,9 @@ object TextAnalysis {
     require(cutsMs.nonEmpty && cutsMs == cutsMs.sorted &&
       cutsMs.distinct == cutsMs,
       s"date_range cuts must be ascending and distinct, got $cutsMs")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), unix_millis(col(tsCol)).as("__ms"))
     val lastKey = s"${cutsMs.last}-*"
     val bucket = cutsMs.init.zip(cutsMs.tail).reverse
@@ -4539,8 +4145,9 @@ object TextAnalysis {
       s"multi_terms needs at least two sources, got ${facets.size} " +
         "(one source is the plain terms aggregation)")
     require(k >= 1, s"k must be positive, got $k")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
     val keyed = matched.join(vals, Seq("doc_id"))
       .select(col("doc_id") +: facets.map { case (a, e) =>
         expr(e).as(a) }: _*)
@@ -4565,8 +4172,9 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     require(maxDocCount >= 1,
       s"max_doc_count must be positive, got $maxDocCount")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
     matched.join(vals, Seq("doc_id"))
       .groupBy(expr(valueExpr).as("value"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -4591,8 +4199,9 @@ object TextAnalysis {
       queryText: String, valueCol: String, interval: Long,
       asOf: Option[String] = None): DataFrame = {
     require(interval > 0, s"interval must be positive, got $interval")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol))
     val v = col(valueCol).cast("long")
     matched.join(vals, Seq("doc_id"))
@@ -4662,8 +4271,9 @@ object TextAnalysis {
       catch { case e: java.time.DateTimeException =>
         throw new IllegalArgumentException(
           s"unknown time_zone '$timeZone'", e) }
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(tsCol))
     // bucket key: shift by -offset, to the target wall clock,
     // truncate, back to the instant, shift by +offset — every step a
@@ -4769,8 +4379,9 @@ object TextAnalysis {
     import spark.implicits._
     require(targetBuckets >= 1,
       s"target bucket count must be positive, got $targetBuckets")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(tsCol))
     // ONE match probe + docvals join feeds both the ladder counts and
     // the chosen histogram (two actions — persist MEMORY_ONLY, the
@@ -4867,41 +4478,23 @@ object TextAnalysis {
    */
   def bm25Explain(spark: SparkSession, root: String, queryText: String,
       docId: Long, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(String, Long, Long, Long, Long, Long, Long, Long)]
         .toDF("tok", "tf", "dfc", "idf", "len", "norm1000", "w", "contrib")
-    val keyDf = (terms :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
-    val idf = bm25Idf(nDocs, dfc.toMap, terms).toDF("tok", "idf")
-    val dfcDf = dfc.toSeq.toDF("tok", "dfc")
-    val dead = deletedBm25Docs(spark, root, asOf)
-    require(!dead.contains(docId),
+    val st = snap.termStats(terms)
+    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val dfcDf = st.dfc.toSeq.toDF("tok", "dfc")
+    require(!snap.dead.contains(docId),
       s"doc $docId is tombstoned — a deleted doc has no score to explain")
-    segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
+    snap.postings(terms)
       .filter(col("doc_id") === docId)
       .join(broadcast(dfcDf), "tok")
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .select(col("tok"), col("tf"), col("dfc"), col("idf"), col("len"),
@@ -4928,8 +4521,9 @@ object TextAnalysis {
       "duplicate filter names")
     require(filters.forall(f => !f._1.contains("&")),
       "filter names may not contain '&' (the intersection-key separator)")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
     val joined = matched.join(vals, Seq("doc_id"))
     val sorted = filters.sortBy(_._1)
     val cells: Seq[(String, Column)] =
@@ -4963,8 +4557,9 @@ object TextAnalysis {
   def bm25CardinalityAgg(spark: SparkSession, root: String,
       queryText: String, valueCol: String,
       asOf: Option[String] = None): DataFrame = {
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol))
     matched.join(vals, Seq("doc_id"))
       .agg(countDistinct(col(valueCol)).as("n_values"))
@@ -4988,8 +4583,9 @@ object TextAnalysis {
     require(filters.nonEmpty, "no filters")
     require(filters.map(_._1).distinct.size == filters.size,
       "duplicate filter names")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
     val joined = matched.join(vals, Seq("doc_id"))
     val counts = filters.map { case (name, pred) =>
       sum(when(expr(pred), 1L).otherwise(0L)).as(name)
@@ -5024,8 +4620,9 @@ object TextAnalysis {
     require(size >= 1, s"size must be positive, got $size")
     after.foreach(a => require(a.length == sources.length,
       s"after key arity ${a.length} != sources arity ${sources.length}"))
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id") +: sources.map(col): _*)
     val buckets = matched.join(vals, Seq("doc_id"))
       .groupBy(sources.map(col): _*) // native key types (order matters)
@@ -5079,8 +4676,9 @@ object TextAnalysis {
       queryText: String, valueCol: String, interval: Long,
       asOf: Option[String]): DataFrame = {
     require(interval > 0, s"interval must be positive, got $interval")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     val v = col("__v")
     matched.join(vals, Seq("doc_id"))
@@ -5157,8 +4755,9 @@ object TextAnalysis {
    */
   def bm25StatsAgg(spark: SparkSession, root: String, queryText: String,
       valueCol: String, asOf: Option[String] = None): DataFrame = {
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     matched.join(vals, Seq("doc_id"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -5182,8 +4781,9 @@ object TextAnalysis {
       queryText: String, valueCol: String,
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // Σv² aggregates as DECIMAL(38,0): a plain Long sum wraps silently
     // for |v| ≳ 3e9 or large Σv² (review r20) — decimal keeps the
@@ -5422,8 +5022,9 @@ object TextAnalysis {
       queryText: String, valueCol: String,
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // persisted across the rank-probe's three actions (count, min/max
     // + bucket counts, probe); MEMORY_ONLY — the LRU-droppable tier
@@ -5461,8 +5062,9 @@ object TextAnalysis {
   def bm25MadAgg(spark: SparkSession, root: String, queryText: String,
       valueCol: String, asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // persisted across the two rank probes (count + 2×(min/max +
     // counts + probe) — all actions over one probe frame; MEMORY_ONLY,
@@ -5510,15 +5112,14 @@ object TextAnalysis {
     require(shardSize >= 1 && maxPerValue >= 1,
       s"shard_size/max_docs_per_value must be positive, got " +
         s"$shardSize/$maxPerValue")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None => return Seq.empty[(String, Long)]
         .toDF(diversifyCol, "n_docs")
       case Some(f) => f
     }
-    val vals = bm25DocValues(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"), col(diversifyCol))
     val perKey = org.apache.spark.sql.expressions.Window
       .partitionBy(col(diversifyCol))
@@ -5546,8 +5147,9 @@ object TextAnalysis {
       queryText: String, facetCol: String, valueCol: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(facetCol),
         col(valueCol).cast("long").as("__v"))
     matched.join(vals, Seq("doc_id"))
@@ -5574,11 +5176,13 @@ object TextAnalysis {
     import spark.implicits._
     require(shardSize >= 1,
       s"sampler shard_size must be positive, got $shardSize")
-    val sample = bm25ServeTopK(spark, root, queryText, shardSize, asOf)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val sample = bm25TopKFrame(snap, terms, shardSize)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
     if (sample.isEmpty)
       return Seq.empty[(String, Long)].toDF(facetCol, "n_docs")
-    bm25DocValues(spark, root, asOf)
+    snap.docValues
       .join(broadcast(sample.toDF("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy(col(facetCol))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -5596,8 +5200,9 @@ object TextAnalysis {
   def bm25WeightedAvgAgg(spark: SparkSession, root: String,
       queryText: String, valueExpr: String, weightExpr: String,
       asOf: Option[String] = None): DataFrame = {
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
     matched.join(vals, Seq("doc_id"))
       .select(expr(valueExpr).cast("long").as("__v"),
         expr(weightExpr).cast("long").as("__w"))
@@ -5620,8 +5225,9 @@ object TextAnalysis {
       k: Int, asOf: Option[String] = None): DataFrame = {
     require(metricCols.nonEmpty, "top_metrics needs at least one metric")
     require(k >= 1, s"k must be positive, got $k")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
     matched.join(vals, Seq("doc_id"))
       .select(col("doc_id") +: col(sortCol) +: metricCols.map(col): _*)
       .orderBy(col(sortCol).desc, col("doc_id"))
@@ -5643,16 +5249,15 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
     require(perBucket >= 1, s"perBucket must be positive, got $perBucket")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None =>
         return Seq.empty[(String, Int, Long, Long)]
           .toDF(facetCol, "rank", "doc_id", "score")
       case Some(f) => f
     }
-    val vals = bm25DocValues(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"), col(facetCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(facetCol))
@@ -5693,14 +5298,13 @@ object TextAnalysis {
     require(boostMode == "multiply" || boostMode == "sum",
       s"unknown boost_mode '$boostMode' (multiply | sum)")
     require(factor1000Sql.trim.nonEmpty, "empty factor expression")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
       case Some(f) => f
     }
-    val vals = bm25DocValues(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"),
         expr(factor1000Sql).cast("long").as("__factor1000"))
     val boosted = boostMode match {
@@ -5736,14 +5340,13 @@ object TextAnalysis {
     require(pivot > 0, s"pivot must be positive, got $pivot")
     require(boost1000 >= 0, s"boost must be non-negative, got $boost1000")
     require(k >= 1, s"k must be positive, got $k")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
       case Some(f) => f
     }
-    val vals = bm25DocValues(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"), expr(valueSql).cast("long").as("__v"))
     scored.join(vals, Seq("doc_id"))
       .select(col("doc_id"),
@@ -5770,10 +5373,9 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
       case Some(f) => f
     }
@@ -5803,14 +5405,13 @@ object TextAnalysis {
     require(pivot > 0, s"pivot must be positive, got $pivot")
     require(boost1000 >= 0, s"boost must be non-negative, got $boost1000")
     require(k >= 1, s"k must be positive, got $k")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
       case Some(f) => f
     }
-    val vals = bm25DocValues(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"),
         greatest(expr(featureSql).cast("long"), lit(0L)).as("__v"))
     scored.join(vals, Seq("doc_id"))
@@ -5841,7 +5442,6 @@ object TextAnalysis {
       likeText: String, maxQueryTerms: Int, k: Int,
       minTermFreq: Int = 1, minDocFreq: Int = 1,
       asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(maxQueryTerms >= 1,
       s"max_query_terms must be positive, got $maxQueryTerms")
@@ -5855,15 +5455,14 @@ object TextAnalysis {
       .groupBy(identity).map { case (t, os) => t -> os.length.toLong }
       .filter(_._2 >= minTermFreq)
     if (tf.isEmpty) return empty
-    // the shared dictionary-header readout — spanStatsHeader carries
-    // the per-segment stats-row corruption guard a hand-rolled readKeys
-    // would drop (review r20 #5: a missing stats row must fail loud,
-    // not silently skew every idf)
-    val (nDocs, dfc) =
-      spanStatsHeader(spark, root, tf.keys.toSeq, asOf) match {
-        case None => return empty
-        case Some((_, n, _, d)) => (n, d.filter(_._2 >= minDocFreq))
-      }
+    // the snapshot's dictionary probe carries the per-segment stats-row
+    // corruption guard a hand-rolled readKeys would drop (review r20 #5:
+    // a missing stats row must fail loud, not silently skew every idf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty) return empty
+    val st = snap.termStats(tf.keys.toSeq)
+    val nDocs = st.nDocs
+    val dfc = st.dfc.filter(_._2 >= minDocFreq)
     val selected = tf.keys.toSeq.filter(dfc.contains)
       .map { t =>
         val idf = (nDocs - dfc(t) + 1) * 10000L / (dfc(t) + 1)
@@ -5872,7 +5471,7 @@ object TextAnalysis {
       .sortBy { case (t, interest) => (-interest, t) }
       .take(maxQueryTerms).map(_._1)
     if (selected.isEmpty) return empty
-    bm25ScoreFrame(spark, root, selected.sorted, asOf) match {
+    bm25ScoreFrame(snap, selected.sorted) match {
       case None => empty
       case Some(f) => f
         .orderBy(col("score").desc, col("doc_id"))
@@ -5934,7 +5533,7 @@ object TextAnalysis {
     require(pinnedIds.size <= 1000,
       s"${pinnedIds.size} pinned ids — the pin list is editorial " +
         "curation, not a filter; cap 1000")
-    val dead = deletedBm25Docs(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
     // a pinned id must EXIST in the live index to pin (ES skips
     // unknown ids): one bounded postings-independent probe via the
     // docvals sidecar. An index built WITHOUT docvals has no cheap
@@ -5943,25 +5542,24 @@ object TextAnalysis {
     // documented weaker contract, the price of pinning on a bare
     // postings index (review r19: the sidecar must stay optional here;
     // pinning needs no doc values semantically)
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
     // ZERO live segments: no doc can exist, so no pin can hold — ES
     // returns nothing. Without this guard the bare-postings branch
     // below would TRUST the pins and emit ranks for impossible ids
     // (review r20)
-    if (segs.isEmpty)
+    if (snap.isEmpty)
       return Seq.empty[(Int, Long, Long)].toDF("rank", "doc_id", "score")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasDocVals = segs.forall(sg => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/segs/$sg/docvals")))
+    val hasDocVals = snap.tables("docvals").forall(dv =>
+      fs.exists(new org.apache.hadoop.fs.Path(dv)))
     val live =
       if (hasDocVals)
-        bm25DocValues(spark, root, asOf)
+        snap.docValues
           .filter(col("doc_id").isin(pinnedIds: _*))
-          .select(col("doc_id")).collect().map(_.getLong(0)).toSet -- dead
-      else pinnedIds.toSet -- dead
+          .select(col("doc_id")).collect().map(_.getLong(0)).toSet -- snap.dead
+      else pinnedIds.toSet -- snap.dead
     val pins = pinnedIds.filter(live.contains)
-    val organic = bm25ServeTopK(spark, root, queryText, k, asOf)
+    val organic = bm25TopKFrame(snap, queryTerms(queryText), k)
       .filter(!col("doc_id").isin(pinnedIds: _*))
       .limit(math.max(0, k - pins.size))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -5987,8 +5585,9 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
     require(probes.nonEmpty, "percentile_ranks needs at least one value")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     val joined = matched.join(vals, Seq("doc_id"))
     val aggs = count(lit(1)).cast("long").as("__n") +:
@@ -6036,7 +5635,8 @@ object TextAnalysis {
     require(originLat >= -90 && originLat <= 90 &&
       originLon >= -180 && originLon <= 180,
       s"origin out of range: ($originLat, $originLon)")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
     // sphere model (haversine, R = 6371 km): a point within distance d
     // satisfies |Δlat| ≤ degrees(d/R) EXACTLY; the longitude extent is
     // asin(sin(d/R)/cos φ) ≤ degrees(d/R)/cos(φ_worst) for the worst
@@ -6066,7 +5666,7 @@ object TextAnalysis {
           else col(lonCol) >= lo && col(lonCol) <= hi
         latPred && lonPred
       }
-    val vals = bm25DocValues(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"), col(latCol), col(lonCol))
       .filter(bbox)
     matched.join(vals, Seq("doc_id"))
@@ -6117,8 +5717,9 @@ object TextAnalysis {
     require(edges.nonEmpty && edges == edges.distinct.sorted &&
       edges.head > 0,
       s"edges must be ascending positive meters, got $edges")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(latCol), col(lonCol))
     val d = round(graft.operators.GeoJoin.haversineMeters(
       lit(originLon), lit(originLat), col(lonCol), col(latCol)))
@@ -6165,8 +5766,9 @@ object TextAnalysis {
     require(fields.size >= 2, "matrix_stats needs at least two fields")
     require(fields.map(_._1).distinct == fields.map(_._1),
       s"duplicate field names: ${fields.map(_._1)}")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id") +: fields.zipWithIndex.map {
         case ((_, sql), i) => expr(sql).cast("long").as(s"__x$i")
       }: _*)
@@ -6219,8 +5821,9 @@ object TextAnalysis {
   def bm25GeoCentroidAgg(spark: SparkSession, root: String,
       queryText: String, latCol: String, lonCol: String,
       asOf: Option[String] = None): DataFrame = {
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"),
         floor(col(latCol) * 1000000.0).cast("long").as("__lat6"),
         floor(col(lonCol) * 1000000.0).cast("long").as("__lon6"))
@@ -6253,8 +5856,9 @@ object TextAnalysis {
     require(bits >= 1 && bits <= 15,
       s"grid bits per axis must be in 1..15, got $bits")
     require(topN >= 1, s"topN must be positive, got $topN")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(latCol), col(lonCol))
     matched.join(vals, Seq("doc_id"))
       .groupBy(graft.functions.GeoFunctions
@@ -6287,10 +5891,9 @@ object TextAnalysis {
     import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
     require(innerK >= 1, s"innerK must be positive, got $innerK")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val vals = bm25DocValues(spark, root, asOf)
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val vals = snap.docValues
       .select(col("doc_id"), col(collapseCol))
     // empty results carry the REAL key type (the sidecar's), not a
     // hardcoded string — a caller unioning results across queries must
@@ -6305,7 +5908,7 @@ object TextAnalysis {
           StructField("doc_id", LongType),
           StructField("score", LongType))))
     }
-    val scored = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val scored = bm25ScoreFrame(snap, terms) match {
       case None => return emptyOut
       case Some(f) => f
     }
@@ -6376,17 +5979,13 @@ object TextAnalysis {
   def bm25SignificantTerms(spark: SparkSession, root: String,
       queryText: String, docs: DataFrame, idCol: String, textCol: String,
       k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    if (snap.isEmpty)
       return Seq.empty[(String, Long, Long, Long)]
         .toDF("tok", "fg", "bg", "score_1e6")
-    val statsRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok",
-      Seq(Bm25StatsKey).toDF("tok"))
-    val nDocs = statsRows.map(_.getLong(1)).sum
+    val nDocs = snap.termStats(Nil).nDocs
     // fg: distinct matched docs per term — tokenize the HIT rows only
     val hits = docs.select(col(idCol).as("doc_id"), col(textCol))
       .join(matched, Seq("doc_id"), "left_semi")
@@ -6408,7 +6007,7 @@ object TextAnalysis {
       .agg(countDistinct(col("doc_id")).as("fg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     // bg: corpus df from the dictionary over fg's terms (size-gated)
-    val bg = bm25BgCounts(spark, root, segs, fg)
+    val bg = bm25BgCounts(snap, fg)
     fg.join(bg, Seq("tok"))
       .withColumn("score_1e6",
         expr(s"(fg * ${nDocs}L * 1000000L) div (bg * ${m}L)"))
@@ -6431,21 +6030,20 @@ object TextAnalysis {
    * is invisible to results. fg must be persisted by the caller (it
    * also feeds the final join).
    */
-  private[graft] def bm25BgCounts(spark: SparkSession, root: String,
-      segs: Seq[String], fg: DataFrame,
+  private[graft] def bm25BgCounts(snap: Bm25Snapshot, fg: DataFrame,
       cap: Int = graft.sinks.MergeTable.ReadKeysCap): DataFrame = {
     import graft.sinks.MergeTable
+    val spark = snap.spark
     import spark.implicits._
     val toks = fg.select(col("tok")).limit(cap + 1)
       .collect().map(_.getString(0))
     val dict =
       if (toks.length <= cap) {
         val keyDf = toks.toSeq.toDF("tok")
-        segs.map(sg =>
-          MergeTable.readKeys(spark, s"$root/segs/$sg/terms", "tok", keyDf))
+        snap.tables("terms").map(MergeTable.readKeys(spark, _, "tok", keyDf))
           .reduce(_.unionByName(_, allowMissingColumns = true))
       } else
-        segs.map(sg => MergeTable.read(spark, s"$root/segs/$sg/terms"))
+        snap.tables("terms").map(MergeTable.read(spark, _))
           .reduce(_.unionByName(_, allowMissingColumns = true))
           .join(fg.select(col("tok")), Seq("tok"), "left_semi")
     dict.groupBy(col("tok")).agg(sum(col("dfc")).as("bg"))
@@ -6479,21 +6077,17 @@ object TextAnalysis {
   def bm25SignificantText(spark: SparkSession, root: String,
       queryText: String, docs: DataFrame, idCol: String, textCol: String,
       shardSize: Int, k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(shardSize >= 1,
       s"significant_text shard_size must be positive, got $shardSize")
     require(k >= 1, s"k must be positive, got $k")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(String, Long, Long, Long)]
         .toDF("tok", "fg", "bg", "score_1e6")
-    val statsRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok",
-      Seq(Bm25StatsKey).toDF("tok"))
-    val nDocs = statsRows.map(_.getLong(1)).sum
+    val nDocs = snap.termStats(Nil).nDocs
     // the bounded sample (collect ≤ shardSize — the sampler discipline)
-    val sample = bm25ServeTopK(spark, root, queryText, shardSize, asOf)
+    val sample = bm25TopKFrame(snap, queryTerms(queryText), shardSize)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
     if (sample.isEmpty)
       return Seq.empty[(String, Long, Long, Long)]
@@ -6523,7 +6117,7 @@ object TextAnalysis {
       .groupBy(col("tok"))
       .agg(countDistinct(col("doc_id")).as("fg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    val bg = bm25BgCounts(spark, root, segs, fg)
+    val bg = bm25BgCounts(snap, fg)
     fg.join(bg, Seq("tok"))
       .withColumn("score_1e6",
         expr(s"(fg * ${nDocs}L * 1000000L) div (bg * ${m}L)"))
@@ -6544,10 +6138,10 @@ object TextAnalysis {
     val q = term.toLowerCase.trim
     require(q.nonEmpty && !q.exists(_.isWhitespace),
       "suggest takes a single term")
-    val segs = liveSegments(spark, root)
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root)
+    if (snap.isEmpty)
       return Seq.empty[(String, Long)].toDF("suggestion", "dfc")
-    (expandFuzzyTerms(spark, root, segs, q) - q)
+    (expandFuzzyTerms(snap, q) - q)
       .toSeq.sortBy { case (t, df) => (-df, t) }
       .take(k)
       .toDF("suggestion", "dfc")
@@ -6569,8 +6163,9 @@ object TextAnalysis {
     import spark.implicits._
     require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
       s"percentiles must be in [1,100], got $ps")
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // persisted across the rank-probe's three actions; MEMORY_ONLY —
     // the LRU-droppable tier (the collapse-serve precedent)
@@ -6601,8 +6196,9 @@ object TextAnalysis {
   def bm25TermsStatsAgg(spark: SparkSession, root: String,
       queryText: String, facetCol: String, valueCol: String,
       asOf: Option[String] = None): DataFrame = {
-    val matched = bm25MatchedDocIds(spark, root, queryText, asOf)
-    val vals = bm25DocValues(spark, root, asOf)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val matched = snap.matchedDocIds(queryTerms(queryText))
+    val vals = snap.docValues
       .select(col("doc_id"), col(facetCol),
         col(valueCol).cast("long").as("__v"))
     matched.join(vals, Seq("doc_id"))
@@ -6612,30 +6208,6 @@ object TextAnalysis {
       .select(col(facetCol), col("n_docs"),
         expr("(__s * 1000) div n_docs").as("avg_1000"))
       .orderBy(col(facetCol))
-  }
-
-  /** The distinct live doc_ids matching ANY query term — the shared
-    * candidate-set probe behind facets and the bucket aggs: one
-    * postings readKeys ∝ the terms' df, tombstone-masked. */
-  private def bm25MatchedDocIds(spark: SparkSession, root: String,
-      queryText: String, asOf: Option[String]): DataFrame = {
-    import graft.sinks.MergeTable
-    import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
-      return Seq.empty[Long].toDF("doc_id")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        terms.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
-    alive.select(col("doc_id")).distinct()
   }
 
   // ——— index-time analysis chain (stopwords + S-stemmer) ———
@@ -6857,10 +6429,10 @@ object TextAnalysis {
     require(clauses.forall(_.field.isEmpty),
       "field-scoped clause in a single-field serve — use " +
         "queryStringFieldsTopK with a field→index registry")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val low = lowerClauses(spark, root, segs, clauses)
+    val low = lowerClauses(snap, clauses)
     // an emptied MUST group (expansion empty, or every member
     // prohibited) matches nothing — check BEFORE the scoring-clause
     // require: such a query HAD a scoring clause, it just lowered away
@@ -6868,7 +6440,7 @@ object TextAnalysis {
       return Seq.empty[(Long, Long)].toDF("doc_id", "score")
     require(low.scored.nonEmpty,
       "query string needs a scoring clause (+term or a bare term)")
-    boolScoreFrame(spark, root, segs, low, asOf)
+    boolScoreFrame(snap, low)
       .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
@@ -6893,15 +6465,15 @@ object TextAnalysis {
     * results. Prohibited terms drop out of expansions (Lucene's
     * effective semantics); a LITERAL scored term that is also
     * prohibited raises. */
-  private def lowerClauses(spark: SparkSession, root: String,
-      segs: Seq[String], clauses: Seq[QsClause]): LoweredQs = {
+  private def lowerClauses(snap: Bm25Snapshot,
+      clauses: Seq[QsClause]): LoweredQs = {
     def expandOf(c: QsClause): Map[String, Long] = c.kind match {
-      case "prefix" => expandPrefixTerms(spark, root, segs, c.text)
-      case "suffix" => expandSuffixTerms(spark, root, segs, c.text)
+      case "prefix" => expandPrefixTerms(snap, c.text)
+      case "suffix" => expandSuffixTerms(snap, c.text)
       case "infix" =>
         val Array(p, sx) = c.text.split("\\*", 2)
-        expandInfixTerms(spark, root, segs, p, sx)
-      case "fuzzy" => expandFuzzyTerms(spark, root, segs, c.text)
+        expandInfixTerms(snap, p, sx)
+      case "fuzzy" => expandFuzzyTerms(snap, c.text)
       case other => sys.error(s"unexpected expansion kind $other")
     }
     val exTerms = clauses.filter(_.occur == '-')
@@ -6939,11 +6511,8 @@ object TextAnalysis {
     * MUST_NOT enforcement applied; None when the query provably
     * matches nothing (an empty MUST expansion, a MUST term absent from
     * the dictionary, or no scored term present at all). */
-  private def boolScoreFrame(spark: SparkSession, root: String,
-      segs: Seq[String], low: LoweredQs,
-      asOf: Option[String]): Option[DataFrame] = {
-    import graft.sinks.MergeTable
-    import spark.implicits._
+  private def boolScoreFrame(snap: Bm25Snapshot,
+      low: LoweredQs): Option[DataFrame] = {
     if (low.groupEmpty) return None
     val mustTerms = low.mustTerms
     val mustGroups = low.mustGroups
@@ -6951,43 +6520,22 @@ object TextAnalysis {
     val scored = low.scored
     if (scored.isEmpty) return None
     // dictionary: df per scored term + the corpus scalars
-    val keyDf = (scored :+ Bm25StatsKey).toDF("tok")
-    val tRows = MergeTable.collectKeys(spark,
-      segs.map(sg => s"$root/segs/$sg/terms"), "tok", keyDf)
-    val statsRows = tRows.filter(_.getString(0) == Bm25StatsKey)
-    require(statsRows.size == segs.size,
-      s"$root: ${segs.size} live segments but ${statsRows.size} stats rows")
-    val nDocs = statsRows.map(_.getLong(1)).sum
-    val totLen = statsRows.map(_.getLong(2)).sum
-    val avg1000 = totLen * 1000L / nDocs
-    val dfc = tRows.filterNot(_.getString(0) == Bm25StatsKey)
-      .groupBy(_.getString(0))
-      .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
+    val st = snap.termStats(scored)
+    val dfc = st.dfc
     // MUST decided from the dictionary alone, zero postings read
     // (expansion terms always exist there; a literal MUST term may not)
     if (!mustTerms.forall(dfc.contains)) return None
     val present = scored.filter(dfc.contains)
     if (present.isEmpty) return None
-    val idf = bm25Idf(nDocs, dfc.toMap, present).toDF("tok", "idf")
-    val postings = segs.map(sg =>
-      MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-        present.toDF("tok")))
-      .reduce(_.unionByName(_))
-    val dead = deletedBm25Docs(spark, root, asOf)
-    val alive =
-      if (dead.isEmpty) postings
-      else postings.filter(!col("doc_id").isin(dead.toSeq: _*))
+    val spark = snap.spark
+    import spark.implicits._
+    val idf = bm25Idf(st.nDocs, dfc, present).toDF("tok", "idf")
+    val alive = snap.livePostings(present)
     // MUST_NOT: anti-join before the aggregate (the NOT serve's shape)
     val admitted =
       if (exTerms.isEmpty) alive
-      else {
-        val excluded = segs.map(sg =>
-          MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-            exTerms.toDF("tok")))
-          .reduce(_.unionByName(_))
-          .select(col("doc_id")).distinct()
-        alive.join(excluded, Seq("doc_id"), "left_anti")
-      }
+      else alive.join(snap.postings(exTerms).select(col("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
     // seed: the cheapest MUST clause — a term's df, or a group's
     // summed df — bounds the candidates (the AND serve's shape)
     val seedSets: Seq[(Seq[String], Long)] =
@@ -7022,7 +6570,7 @@ object TextAnalysis {
     Some(restricted
       .join(broadcast(idf), "tok")
       .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
+        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
       .withColumn("w",
         expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
       .groupBy(col("doc_id"))
@@ -7069,9 +6617,9 @@ object TextAnalysis {
     val (phrases, rest) = clauses.partition(_.kind == "phrase")
     require(phrases.nonEmpty,
       "no phrase clause — use queryStringTopK (cheaper: no positional read)")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty) return empty
-    val low = lowerClauses(spark, root, segs, rest)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty) return empty
+    val low = lowerClauses(snap, rest)
     if (low.groupEmpty) return empty
     val termMust = low.mustTerms.nonEmpty || low.mustGroups.nonEmpty
     // the term-side frame (None ⇔ no scored term clause, or the term
@@ -7079,25 +6627,21 @@ object TextAnalysis {
     // the whole query, a should-less term side just contributes nothing)
     val termFrame =
       if (low.scored.isEmpty) None
-      else boolScoreFrame(spark, root, segs, low, asOf) match {
+      else boolScoreFrame(snap, low) match {
         case None if termMust => return empty
         case f => f
       }
     // phrase frames by occur; a SHOULD phrase with an absent term just
     // contributes nothing, a MUST one kills the query
     val phraseFrames: Seq[(Char, Option[DataFrame])] = phrases.map(c =>
-      (c.occur, phraseScoreFrame(spark, root, segs, c.text)))
+      (c.occur, phraseScoreFrame(snap, c.text)))
     if (phraseFrames.exists { case (o, f) => o == '+' && f.isEmpty })
       return empty
     // prohibited TERMS mask every phrase frame too (the term frame
     // already excluded them before its aggregate)
     val exDocs: Option[DataFrame] =
       if (low.exTerms.isEmpty) None
-      else Some(segs.map(sg =>
-        graft.sinks.MergeTable.readKeys(spark, s"$root/segs/$sg/postings",
-          "tok", low.exTerms.toDF("tok")))
-        .reduce(_.unionByName(_))
-        .select(col("doc_id")).distinct())
+      else Some(snap.postings(low.exTerms).select(col("doc_id")).distinct())
     def maskEx(df: DataFrame): DataFrame = exDocs match {
       case None => df
       case Some(ex) => df.join(ex, Seq("doc_id"), "left_anti")
@@ -7143,7 +6687,6 @@ object TextAnalysis {
   def queryStringFieldsTopK(spark: SparkSession,
       fields: Map[String, (String, Long)], defaultField: String,
       query: String, k: Int, asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     require(fields.contains(defaultField),
@@ -7162,20 +6705,19 @@ object TextAnalysis {
     var exSets = Seq.empty[DataFrame]
     for ((f, cs) <- byField.toSeq.sortBy(_._1)) {
       val (root, boost1000) = fields(f)
-      val segs = liveSegmentsWithFence(spark, root, asOf)._1
-      if (segs.isEmpty) {
+      val snap = Bm25Snapshot(spark, root, asOf)
+      if (snap.isEmpty) {
         // an empty field index: its MUSTs are unsatisfiable, its
         // SHOULDs and exclusions contribute nothing
         if (cs.exists(_.occur == '+')) return empty
       } else {
-        val low0 = lowerClauses(spark, root, segs, cs)
+        val low0 = lowerClauses(snap, cs)
         if (low0.groupEmpty) return empty
         val termMust = low0.mustTerms.nonEmpty || low0.mustGroups.nonEmpty
         // exclusions apply to the cross-field SUM below, not here
         val frameOpt =
           if (low0.scored.isEmpty) None
-          else boolScoreFrame(spark, root, segs,
-            low0.copy(exTerms = Nil), asOf)
+          else boolScoreFrame(snap, low0.copy(exTerms = Nil))
         frameOpt match {
           case None if termMust => return empty
           case None => ()
@@ -7186,11 +6728,8 @@ object TextAnalysis {
             if (termMust) mustFrames :+= boosted
         }
         if (low0.exTerms.nonEmpty)
-          exSets :+= segs.map(sg =>
-            MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-              low0.exTerms.toDF("tok")))
-            .reduce(_.unionByName(_))
-            .select(col("doc_id")).distinct()
+          exSets :+= snap.postings(low0.exTerms).select(col("doc_id"))
+            .distinct()
       }
     }
     if (scoring.isEmpty) return empty
@@ -7226,7 +6765,6 @@ object TextAnalysis {
       queryText: String, k: Int, maxExpansions: Int = 50,
       prefixBoost1000: Long = 1000L,
       asOf: Option[String] = None): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
     require(maxExpansions >= 1, s"maxExpansions $maxExpansions < 1")
@@ -7238,29 +6776,20 @@ object TextAnalysis {
     val fixed = terms.init.distinct
     val stem = terms.last
     def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    // the AS-OF segment list — the prefix clause must read the SAME
-    // snapshot as the fixed-term clause (review r19: liveSegments
-    // without asOf would surface post-snapshot docs at the constant)
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty) return empty
+    // one snapshot — the prefix clause must read the SAME version as
+    // the fixed-term clause (review r19: the live version would surface
+    // post-snapshot docs at the constant)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    if (snap.isEmpty) return empty
     val scored = if (fixed.isEmpty) None
-      else bm25ScoreFrame(spark, root, fixed, asOf)
+      else bm25ScoreFrame(snap, fixed)
         .map(_.select(col("doc_id"), col("score")))
-    val expansion = expandPrefixTerms(spark, root, segs, stem)
+    val expansion = expandPrefixTerms(snap, stem)
       .toSeq.sortBy(_._1).take(maxExpansions).map(_._1)
     val prefixDocs =
       if (expansion.isEmpty) None
-      else {
-        val posts = segs.map(sg =>
-          MergeTable.readKeys(spark, s"$root/segs/$sg/postings", "tok",
-            expansion.toDF("tok"))).reduce(_.unionByName(_))
-        val dead = deletedBm25Docs(spark, root, asOf)
-        val alive =
-          if (dead.isEmpty) posts
-          else posts.filter(!col("doc_id").isin(dead.toSeq: _*))
-        Some(alive.select(col("doc_id")).distinct()
-          .withColumn("__pfx", lit(prefixBoost1000)))
-      }
+      else Some(snap.matchedDocIds(expansion)
+        .withColumn("__pfx", lit(prefixBoost1000)))
     val merged = (scored, prefixDocs) match {
       case (None, None) => return empty
       case (Some(s), None) => s
@@ -7297,12 +6826,9 @@ object TextAnalysis {
     require(windowSize >= k,
       s"rescore window $windowSize smaller than k=$k — the tail of the " +
         "result would be unrescored noise")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    require(terms.nonEmpty, "empty query")
-    val segs = liveSegmentsWithFence(spark, root, asOf)._1
-    if (segs.isEmpty) return empty
-    val base = bm25ScoreFrame(spark, root, terms, asOf) match {
+    val terms = queryTerms(queryText)
+    val snap = Bm25Snapshot(spark, root, asOf)
+    val base = bm25ScoreFrame(snap, terms) match {
       case None => return empty
       case Some(f) => f
     }
@@ -7314,7 +6840,7 @@ object TextAnalysis {
     val winDf = window.map(r => (r.getLong(0), r.getLong(1)))
       .toSeq.toDF("doc_id", "base")
     // stage 2: the expensive phrase over the window ids only
-    val phr = phraseScoreFrame(spark, root, segs, phrase,
+    val phr = phraseScoreFrame(snap, phrase,
       restrictTo = Some(window.map(_.getLong(0)).toSeq))
     val joined = phr match {
       case None => winDf.withColumn("p", lit(0L))

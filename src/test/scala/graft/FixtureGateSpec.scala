@@ -80,13 +80,13 @@ class FixtureGateSpec extends AnyFunSuite with SparkTestBase {
 
     // 3. and the two dirs really hold DIFFERENT dead sets
     val del7Idx = SparkEntry.ensureDeletedBm25Index(spark, sfDir)
-    val dead7 = TextAnalysis.deletedBm25Docs(spark, del7Idx)
+    val dead7 = TextAnalysis.Bm25Snapshot(spark, del7Idx).dead
     assert(dead7.nonEmpty && dead7.forall(_ % 7 == 0), dead7.take(5).toString)
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     val del10Dir = tmp.listFiles()
       .filter(_.getName.startsWith("graft_bm25_del_v1_")).map(_.toString)
     assert(del10Dir.nonEmpty, "bm25_deleted fixture dir missing")
-    val dead10 = TextAnalysis.deletedBm25Docs(spark, del10Dir.head)
+    val dead10 = TextAnalysis.Bm25Snapshot(spark, del10Dir.head).dead
     assert(dead10.nonEmpty && dead10.forall(_ % 10 == 0))
   }
 }

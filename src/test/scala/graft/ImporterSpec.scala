@@ -100,33 +100,6 @@ class ImporterSpec extends AnyFunSuite with SparkTestBase {
     graft.sources.Archive.cleanup(dir.toFile)
   }
 
-  /** Spark jobs started while `body` runs, counted by a listener. The
-    * listener bus delivers events in order, so once a sentinel job run
-    * afterwards has been seen, every job of `body` has been too. */
-  private def sparkJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"import-jobs-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "import", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 60000
-      while (!seen.contains(sentinel) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "listener bus did not deliver the sentinel job")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   // Job counts are deterministic, so they pin the import's fixed cost:
   // the geometry formats take one job (the count), GeoJSON adds its
   // reader's schema-inference job, CSV and XLSX add their inference jobs,

@@ -30,6 +30,33 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     }
     p +: kids.flatMap(allPlanNodes)
   }
+
+  /** Spark jobs started while `body` runs, counted by a listener. The
+    * listener bus delivers events in order, so once a sentinel job run
+    * afterwards has been seen, every job of `body` has been too. */
+  def sparkJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.contains(sentinel) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener bus did not deliver the sentinel job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

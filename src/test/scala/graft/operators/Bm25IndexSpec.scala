@@ -40,7 +40,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val root = Files.createTempDirectory("bm25idx").toString
     TextAnalysis.writeBm25Index(base, "doc_id", "text", root, nBuckets = 8)
     TextAnalysis.appendBm25Segment(batch, "doc_id", "text", root, nBuckets = 8)
-    assert(TextAnalysis.liveSegments(spark, root).size == 2)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.size == 2)
     val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text",
       "rare table zzz", k = 10).collect().map(_.toString)
     val served = TextAnalysis.bm25ServeTopK(spark, root,
@@ -60,7 +60,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       "doc_id", "text", b, nBuckets = 4)
     TextAnalysis.mergeBm25Indexes(spark, Seq(a, b), dst, nBuckets = 4)
     // one segment, serve == direct union build (stats are sums)
-    assert(TextAnalysis.liveSegments(spark, dst).size == 1)
+    assert(TextAnalysis.Bm25Snapshot(spark, dst).segments.size == 1)
     val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text",
       "rare table zzz", k = 10).collect().map(_.toString)
     val served = TextAnalysis.bm25ServeTopK(spark, dst,
@@ -85,7 +85,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(!ids.contains(2L) && !ids.contains(4L),
       "deleted docs must not survive a merge")
-    assert(TextAnalysis.deletedBm25Docs(spark, dst2).isEmpty,
+    assert(TextAnalysis.Bm25Snapshot(spark, dst2).dead.isEmpty,
       "the merged index must carry no tombstones")
     // guards: overlapping id spaces, non-fresh dest
     val eOverlap = intercept[IllegalArgumentException](
@@ -111,7 +111,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       "rare table zzz", k = 10).collect().map(_.toString)
     val merged = TextAnalysis.compactBm25Index(spark, root, nBuckets = 8)
     assert(merged == 3)
-    assert(TextAnalysis.liveSegments(spark, root).size == 1)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.size == 1)
     val after = TextAnalysis.bm25ServeTopK(spark, root,
       "rare table zzz", k = 10).collect().map(_.toString)
     assert(after.sameElements(before), "compaction must not change serves")
@@ -125,7 +125,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val root = Files.createTempDirectory("bm25idx").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", root, nBuckets = 8)
     import spark.implicits._
-    val seg = TextAnalysis.liveSegments(spark, root).head
+    val seg = TextAnalysis.Bm25Snapshot(spark, root).segments.head
     val got = MergeTable.readKeys(spark, s"$root/segs/$seg/postings", "tok",
       Seq("rare").toDF("tok"))
     val scanned = got.inputFiles.toSet.filter(_.contains("/bucket="))
@@ -173,13 +173,13 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(TextAnalysis.appendBm25SegmentExactlyOnce(
       docs.filter(col("doc_id") > 20 && col("doc_id") <= 30),
       "doc_id", "text", root, batchId = 0L))
-    val after0 = TextAnalysis.liveSegments(spark, root)
+    val after0 = TextAnalysis.Bm25Snapshot(spark, root).segments
     assert(after0.size == 2)
     // redelivery of batch 0: no-op, manifest untouched
     assert(!TextAnalysis.appendBm25SegmentExactlyOnce(
       docs.filter(col("doc_id") > 20 && col("doc_id") <= 30),
       "doc_id", "text", root, batchId = 0L))
-    assert(TextAnalysis.liveSegments(spark, root) == after0)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments == after0)
     // a crashed attempt = orphan segment dir with no manifest entry
     val toks = docs.filter(col("doc_id") > 30)
       .select(col("doc_id"),
@@ -288,7 +288,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(afterApp.contains(100L))
     // compaction drops dead postings, recomputes stats, clears the list
     TextAnalysis.compactBm25Index(spark, root, nBuckets = 8)
-    assert(TextAnalysis.deletedBm25Docs(spark, root).isEmpty)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).dead.isEmpty)
     val survivors = docs.filter(!col("doc_id").isin(dead: _*))
       .unionByName(Seq((100L, "fresh doc rare")).toDF("doc_id", "text"))
     val exact = TextAnalysis.bm25TopK(survivors, "doc_id", "text",
@@ -335,16 +335,16 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       col("doc_id") <= 20), "doc_id", "text", root, nBuckets = 4)
     // inside both budgets: nothing happens
     assert(!TextAnalysis.maybeCompactBm25(spark, root, maxSegments = 8))
-    assert(TextAnalysis.liveSegments(spark, root).size == 2)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.size == 2)
     // past the segment budget: compaction fires
     assert(TextAnalysis.maybeCompactBm25(spark, root, maxSegments = 1,
       nBuckets = 4))
-    assert(TextAnalysis.liveSegments(spark, root).size == 1)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.size == 1)
     // past the tombstone budget: fires and clears the dead list
     TextAnalysis.deleteBm25Docs(spark, root, Seq(3L, 5L))
     assert(TextAnalysis.maybeCompactBm25(spark, root, maxDead = 1,
       nBuckets = 4))
-    assert(TextAnalysis.deletedBm25Docs(spark, root).isEmpty)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).dead.isEmpty)
     val served = TextAnalysis.bm25ServeTopK(spark, root, "common data", k = 30)
       .collect().map(_.getLong(0))
     assert(!served.contains(3L) && !served.contains(5L))
@@ -431,7 +431,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       } finally Versioned.clearConditionalPut()
     assert(err.getMessage.contains("conditional put"))
     // the failed append's segment dir is an invisible orphan
-    assert(TextAnalysis.liveSegments(spark, root).size == 1)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.size == 1)
     val direct20 = TextAnalysis.bm25TopK(docs.filter(col("doc_id") <= 20),
       "doc_id", "text", "rare table", k = 10).collect().map(_.toString)
     val served20 = TextAnalysis.bm25ServeTopK(spark, root, "rare table",
@@ -465,7 +465,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(served.sameElements(direct))
     // and the terms table holds exactly one reserved row
     import graft.sinks.MergeTable
-    val seg = TextAnalysis.liveSegments(spark, root).head
+    val seg = TextAnalysis.Bm25Snapshot(spark, root).segments.head
     val n = MergeTable.read(spark, s"$root/segs/$seg/terms")
       .filter(col("tok") === TextAnalysis.Bm25StatsKey).count()
     assert(n == 1L)
@@ -476,7 +476,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val root = Files.createTempDirectory("bm25empty").toString
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", root, nBuckets = 2)
-    val segsBefore = TextAnalysis.liveSegments(spark, root)
+    val segsBefore = TextAnalysis.Bm25Snapshot(spark, root).segments
     // an all-whitespace batch tokenizes to zero postings: the old code
     // published the postings table and THEN threw, killing the stream and
     // stranding an orphan dir — now the publish is skipped entirely and
@@ -484,7 +484,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     val ws = Seq((3L, "   \t  ")).toDF("doc_id", "text")
     assert(TextAnalysis.appendBm25SegmentExactlyOnce(
       ws, "doc_id", "text", root, batchId = 7L))
-    assert(TextAnalysis.liveSegments(spark, root) == segsBefore,
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments == segsBefore,
       "empty batch must not add a segment")
     // fence advanced: redelivery is a no-op
     assert(!TextAnalysis.appendBm25SegmentExactlyOnce(
@@ -501,7 +501,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     // segment list instead of throwing, and every serve returns empty
     TextAnalysis.deleteBm25Docs(spark, root, Seq(1L, 2L))
     assert(TextAnalysis.compactBm25Index(spark, root, nBuckets = 2) == 1)
-    assert(TextAnalysis.liveSegments(spark, root).isEmpty)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.isEmpty)
     assert(TextAnalysis.bm25ServeTopK(spark, root, "beta", 10).count() == 0)
     assert(TextAnalysis.prefixSearch(spark, root, "be").count() == 0)
     // and the index is still appendable after the wipe
@@ -594,7 +594,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       // simulate a legacy segment: republish ONE segment's terms table
       // without the maxtf/minlen/occ/maxlen stats columns (the pre-r14
       // dictionary shape). publishRange commits a new live version.
-      val segs = TextAnalysis.liveSegments(spark, root)
+      val segs = TextAnalysis.Bm25Snapshot(spark, root).segments
       val tRoot = s"$root/segs/${segs.head}/terms"
       val legacyTerms = MergeTable.read(spark, tRoot)
         .select(col("tok"), col("dfc"), col("tot"))
@@ -621,7 +621,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       (i, s"${c}token$i ${c}x common")
     }.toDF("doc_id", "text")
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", root, nBuckets = 32)
-    val seg = TextAnalysis.liveSegments(spark, root).head
+    val seg = TextAnalysis.Bm25Snapshot(spark, root).segments.head
     val termsRoot = s"$root/segs/$seg/terms"
     val all = MergeTable.rangeFiles(spark, termsRoot, None, None)
     val band = MergeTable.rangeFiles(spark, termsRoot, Some("s"), Some("t"))
@@ -648,7 +648,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(serve() == reference(Set(19L)), "tombstoned serve must re-derive")
     // compaction drops the dead rows and restores the dictionary path
     TextAnalysis.compactBm25Index(spark, root, nBuckets = 32)
-    assert(TextAnalysis.deletedBm25Docs(spark, root).isEmpty)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).dead.isEmpty)
     assert(serve() == reference(Set(19L)), "post-compact dictionary must be exact")
   }
 
@@ -735,7 +735,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
       (i, s"tok$i$c x$c common")
     }.toDF("doc_id", "text")
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", root, nBuckets = 32)
-    val seg = TextAnalysis.liveSegments(spark, root).head
+    val seg = TextAnalysis.Bm25Snapshot(spark, root).segments.head
     val revRoot = s"$root/segs/$seg/terms_rev"
     val all = MergeTable.rangeFiles(spark, revRoot, None, None)
     val band = MergeTable.rangeFiles(spark, revRoot, Some("s"), Some("t"))
@@ -762,11 +762,11 @@ class Bm25IndexSpec extends AnyFunSuite with SparkTestBase {
     assert(serve() == reference(Set(19L)), "tombstoned serve must re-derive")
     // compaction restores the dictionary path
     TextAnalysis.compactBm25Index(spark, root, nBuckets = 32)
-    assert(TextAnalysis.deletedBm25Docs(spark, root).isEmpty)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).dead.isEmpty)
     assert(serve() == reference(Set(19L)), "post-compact reversed dictionary must be exact")
     // LEGACY segment: strip terms_rev — the serve must fall back to the
     // forward-dictionary endsWith scan with identical results
-    val seg2 = TextAnalysis.liveSegments(spark, root).head
+    val seg2 = TextAnalysis.Bm25Snapshot(spark, root).segments.head
     val p = new org.apache.hadoop.fs.Path(s"$root/segs/$seg2/terms_rev")
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     assert(serve() == reference(Set(19L)),

@@ -626,7 +626,7 @@ class SearchAggSpec extends AnyFunSuite with SparkTestBase {
   test("significant_terms bg gate: the over-cap dictionary-join plan equals the bounded readKeys plan (ADVICE r21)") {
     import spark.implicits._
     val root = build()
-    val segs = TextAnalysis.liveSegments(spark, root)
+    val snap = TextAnalysis.Bm25Snapshot(spark, root)
     val fg = corpus()
       .select(col("doc_id"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
@@ -636,12 +636,11 @@ class SearchAggSpec extends AnyFunSuite with SparkTestBase {
     try {
       def rows(df: DataFrame): Set[(String, Long)] =
         df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      val bounded = rows(TextAnalysis.bm25BgCounts(spark, root, segs, fg))
+      val bounded = rows(TextAnalysis.bm25BgCounts(snap, fg))
       // cap=1 forces the unbounded branch (fg vocab ≫ 1): the full
       // dictionary scan + semi-join must produce identical bg counts —
       // and must NOT throw the ReadKeysCap guard a raw readKeys would
-      val joined = rows(TextAnalysis.bm25BgCounts(spark, root, segs, fg,
-        cap = 1))
+      val joined = rows(TextAnalysis.bm25BgCounts(snap, fg, cap = 1))
       assert(joined == bounded, s"join=$joined bounded=$bounded")
       assert(bounded.nonEmpty)
     } finally fg.unpersist()
@@ -1063,7 +1062,7 @@ class SearchAggSpec extends AnyFunSuite with SparkTestBase {
     // zero rows, not trust the pins as-given
     TextAnalysis.deleteBm25Docs(spark, root, Seq(1L, 2L))
     assert(TextAnalysis.compactBm25Index(spark, root, nBuckets = 2) == 1)
-    assert(TextAnalysis.liveSegments(spark, root).isEmpty)
+    assert(TextAnalysis.Bm25Snapshot(spark, root).segments.isEmpty)
     assert(TextAnalysis.bm25PinnedTopK(spark, root, "beta",
       Seq(1L, 2L), k = 10).count() == 0L)
   }

@@ -424,6 +424,21 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     TrainedIndex.invalidate()
   }
 
+  test("two-stage re-rank: a zero query vector matches nothing instead of dividing by its zero norm") {
+    import Similarity.TrainedIndex
+    TrainedIndex.invalidate()
+    val idx = java.nio.file.Files.createTempDirectory("graft_pqrr0_").toString + "/index"
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx,
+      indexKey = "spec-rr0", pqM = Some(8))
+    // every coordinate zero, element type kept: its int8 norm is 0
+    val zero = emb.limit(1).select(lit(-1L).as("vec_id"),
+      transform(col("embedding"), x => x * 0).as("embedding"))
+    val rows = Similarity.pqTopKReranked(spark, idx, zero, "vec_id",
+      "embedding", k = 3, indexKey = "spec-rr0", candC = 8).collect()
+    assert(rows.isEmpty, rows.mkString(","))
+    TrainedIndex.invalidate()
+  }
+
   test("incremental append: append-then-serve == rebuild-then-serve with the same centroids") {
     import Similarity.TrainedIndex
     TrainedIndex.invalidate()
