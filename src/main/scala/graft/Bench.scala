@@ -1,6 +1,28 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** `{"metric":"queries_partN","unit":"ms","queries":{name:ms,…}}`
+    * lines, each under `maxBytes` (a name longer than the budget still
+    * gets a line of its own). */
+  def queryLines(perQueryMs: Seq[(String, Long)], maxBytes: Int = 4000): Seq[String] = {
+    def line(part: Int, body: String) =
+      s"""{"metric":"queries_part$part","unit":"ms","queries":{$body}}"""
+    val entries = perQueryMs.map { case (k, ms) => "\"" + k + "\":" + ms }
+    val overhead = line(999, "").length
+    val parts = Seq.newBuilder[Seq[String]]
+    var cur = Vector.empty[String]
+    var curBytes = 0
+    entries.foreach { e =>
+      if (cur.nonEmpty && overhead + curBytes + 1 + e.length > maxBytes) {
+        parts += cur; cur = Vector.empty; curBytes = 0
+      }
+      curBytes += (if (cur.isEmpty) 0 else 1) + e.length
+      cur :+= e
+    }
+    if (cur.nonEmpty) parts += cur
+    parts.result().zipWithIndex.map { case (es, i) => line(i + 1, es.mkString(",")) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -175,6 +197,13 @@ object Bench {
       } catch { case _: Throwable => "{}" }
     val json = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"sec_per_query":$perQ,"reps":$reps,"bench_start_ms":$benchStartMs,"bench_end_ms":${System.currentTimeMillis()},"loadavg_start":$loadStart,"loadavg_end":${loadavg()},"queries":$qs,"queries_raw":$raw,"queries_rep_meta":$meta,"adjudicated":$adjudicated,"sf":"$sfDir"}"""
     println(json)
+    // Per-query best times for line-oriented readers: integer ms (-1 for
+    // a query with no successful rep), split into lines under 4 KB so a
+    // tail window never cuts one.
+    queryLines(results.map { case (k, v) =>
+      val b = best(v)
+      k -> (if (b < 0) -1L else math.round(b * 1000))
+    }).foreach(println)
     // The full artifact above can exceed a line-oriented tail window
     // (~29 KB with per-query raw series and the adjudication ledger),
     // which left the driver's `parsed` null two rounds running (VERDICT

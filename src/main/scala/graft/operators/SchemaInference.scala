@@ -1,33 +1,34 @@
 package graft.operators
 
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
 
-
-
 /**
  * Distributed CSV type inference (SURVEY.md §2.4 A3): the reference's
- * per-column lattice fold (importer.rb:518-550) as ONE Spark `Aggregator`
- * carrying the state of every column at once — a single pass over the data,
- * map-side partial states per partition, tiny driver-side final merge.
- * No shuffle of the data itself (partial aggregation reduces each partition
- * to one Array[State]).
+ * per-column lattice fold (importer.rb:518-550) carrying the state of
+ * every column at once, in ONE Spark job with no exchange — each
+ * partition folds its rows into one packed state, and the driver merges
+ * the states in partition order, so the verdict is that of one
+ * sequential fold over the rows in partition order.
  *
  * Scale note: the reference scans every row; at 100 TB one samples.
- * `inferTypes(df, sampleRows = Some(n))` caps the scan (documented
- * divergence, SURVEY.md §4).
+ * `inferTypes(df, sampleRows = Some(n))` folds only the first n rows in
+ * partition order and stops reading there (documented divergence,
+ * SURVEY.md §4).
  */
 object SchemaInference {
 
   /**
    * All-columns lattice fold: Row of N string cells → N packed states.
    * The per-column state (first kind / first-as-breaker / break kind —
-   * see TypeLattice.State) packs into ONE byte, so the aggregation buffer
-   * is a plain N-byte array riding the BINARY encoder — no kryo, no
-   * object graph per partial merge (the kryo version dominated the
-   * type_infer benchmark).
+   * see TypeLattice.State) packs into ONE byte, so a partition's state is
+   * a plain N-byte array — no object graph per merge. Also a Spark
+   * `Aggregator` over the same reduce/merge/finish, which SchemaInferenceSpec
+   * runs as the reference the one-job fold is pinned against.
    *
    * Byte layout: bits 0-1 first (0 unseen/1 int/2 float/3 varchar),
    * bits 2-3 firstAsBreaker (0 none/2 float/3 varchar),
@@ -42,30 +43,33 @@ object SchemaInference {
     def reduce(b: Array[Byte], row: Row): Array[Byte] = {
       var i = 0
       while (i < n) {
-        val v = if (row.isNullAt(i)) null else row.getString(i)
-        if (v != null && !isBlank(v)) {
-          val s = b(i)
-          val first = s & 0x3
-          val brk = (s >> 4) & 0x3
-          if (first == 0) {
-            // classify once: kind + breaker-if-nonfirst
-            val (k, breaker) =
-              if (isFloatLooking(v)) (2, 2)
-              else if (isIntLooking(v)) (1, if (overflowsInt32(v)) 2 else 0)
-              else (3, 3)
-            b(i) = (k | (breaker << 2)).toByte
-          } else if (first == 1 && brk == 0) {
-            val breaker =
-              if (isFloatLooking(v)) 2
-              else if (isIntLooking(v)) { if (overflowsInt32(v)) 2 else 0 }
-              else 3
-            if (breaker != 0) b(i) = (s | (breaker << 4)).toByte
-          } // float/varchar first, or already broken: sticky, nothing to do
-        }
+        update(b, i, if (row.isNullAt(i)) null else row.getString(i))
         i += 1
       }
       b
     }
+
+    /** Folds cell `v` of column `i` into `b`. */
+    def update(b: Array[Byte], i: Int, v: String): Unit =
+      if (v != null && !isBlank(v)) {
+        val s = b(i)
+        val first = s & 0x3
+        val brk = (s >> 4) & 0x3
+        if (first == 0) {
+          // classify once: kind + breaker-if-nonfirst
+          val (k, breaker) =
+            if (isFloatLooking(v)) (2, 2)
+            else if (isIntLooking(v)) (1, if (overflowsInt32(v)) 2 else 0)
+            else (3, 3)
+          b(i) = (k | (breaker << 2)).toByte
+        } else if (first == 1 && brk == 0) {
+          val breaker =
+            if (isFloatLooking(v)) 2
+            else if (isIntLooking(v)) { if (overflowsInt32(v)) 2 else 0 }
+            else 3
+          if (breaker != 0) b(i) = (s | (breaker << 4)).toByte
+        } // float/varchar first, or already broken: sticky, nothing to do
+      }
 
     def merge(l: Array[Byte], r: Array[Byte]): Array[Byte] = {
       var i = 0
@@ -132,13 +136,13 @@ object SchemaInference {
     *  - string (the CSV import path) and anything else: the exact
     *    byte-state fold, unchanged.
     * The numeric gates and the string-column fold run as TWO OVERLAPPED
-    * jobs, not one combined aggregate: mixing the Scala Aggregator with
+    * actions, not one combined aggregate: a Scala fold mixed with
     * declarative min/max in one aggregate drops the whole row path out
     * of codegen (measured 1.08 s combined vs 0.31 + 0.40 split at
-    * sf0.1), each job scans only its own columns (columnar parquet —
+    * sf0.1), each action scans only its own columns (columnar parquet —
     * no duplicate IO), and they are independent, so they overlap on a
     * two-thread pool (guide §2.6) — wall ≈ max, not sum. CSV-import
-    * frames (all string) take exactly the old single-job fold.
+    * frames (all string) take only the one-job fold ([[foldStrings]]).
     * SchemaInferenceSpec pins algebra ≡ fold per type on adversarial
     * values (overflows, negatives, NaN/Inf, tiny/huge doubles,
     * all-null).
@@ -146,8 +150,8 @@ object SchemaInference {
   def inferTypes(df: DataFrame, sampleRows: Option[Long] = None): Map[String, String] = {
     import org.apache.spark.sql.types._
     // clamp: limit takes an Int; a >2^31 cap means "effectively unbounded"
-    val src0 = sampleRows.map(n => df.limit(math.min(n, Int.MaxValue.toLong).toInt)).getOrElse(df)
-    val fields = src0.schema.fields.toIndexedSeq
+    val cap = sampleRows.map(n => math.min(n, Int.MaxValue.toLong).toInt)
+    val fields = df.schema.fields.toIndexedSeq
 
     sealed trait Plan
     case object ConstVarchar extends Plan            // no read needed
@@ -189,11 +193,7 @@ object SchemaInference {
     }
     def foldOver(colNames: Seq[String]): Map[String, String] = {
       val strSrc = colNames.map(c => col(c).cast(StringType).as(c))
-      val schema = StructType(colNames.map(c => StructField(c, StringType)))
-      val agg = udaf(new AllColumnsAgg(colNames.length), Encoders.row(schema))
-      val joined = src0.select(strSrc.toIndexedSeq: _*)
-        .select(agg(colNames.map(col).toIndexedSeq: _*).as("__types"))
-        .head().getString(0)
+      val joined = foldStrings(df.select(strSrc.toIndexedSeq: _*), cap)
       colNames.zip(joined.split(",", -1)).toMap
     }
 
@@ -212,7 +212,8 @@ object SchemaInference {
         scala.concurrent.ExecutionContext.global))
 
     if (gateAggs.nonEmpty) {
-      val row = src0.select(gateAggs.toIndexedSeq: _*).head()
+      val row = cap.map(df.limit).getOrElse(df)
+        .select(gateAggs.toIndexedSeq: _*).head()
       val int32Max = java.math.BigDecimal.valueOf(Int.MaxValue.toLong)
       val fallbackCols = fields.map(_.name).filter { c =>
         plans(c) match {
@@ -249,17 +250,62 @@ object SchemaInference {
     fields.map(f => f.name -> verdicts(f.name)).toMap
   }
 
+  /** The lattice fold over an all-string frame in ONE Spark job with no
+    * exchange, run as a tracked SQL execution so query listeners see it:
+    * each partition folds its rows into one packed state (at most one
+    * state per partition reaches the driver), and the driver merges the
+    * states in partition order. `sampleRows = Some(n)` folds only the
+    * first n rows in partition order: the partitions are chained in
+    * index order into one task, which stops reading after n rows, so the
+    * cost stays flat in input size. Returns [[AllColumnsAgg.finish]]'s
+    * comma-joined verdicts. */
+  private def foldStrings(strs: DataFrame, sampleRows: Option[Int]): String = {
+    val agg = new AllColumnsAgg(strs.columns.length)
+    val qe = strs.queryExecution
+    val states = SQLExecution.withNewExecutionId(qe, Some("inferTypes")) {
+      val rows = qe.toRdd
+      val src =
+        if (sampleRows.isEmpty) rows
+        else rows.coalesce(1, shuffle = false, Some(InPartitionOrder))
+      src.mapPartitions { all =>
+        val it = sampleRows.fold(all)(all.take)
+        val b = agg.zero
+        val width = b.length
+        it.foreach { r =>
+          var i = 0
+          while (i < width) {
+            agg.update(b, i, if (r.isNullAt(i)) null else r.getUTF8String(i).toString)
+            i += 1
+          }
+        }
+        Iterator.single(b)
+      }.collect()
+    }
+    agg.finish(states.foldLeft(agg.zero)(agg.merge))
+  }
+
+  /** Coalesces every partition into one, in partition index order (the
+    * default coalescer groups by preferred location first). */
+  private object InPartitionOrder extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val group = new PartitionGroup()
+      group.partitions ++= parent.partitions
+      Array(group)
+    }
+  }
+
   /** Default row cap for import-path inference (SURVEY.md §4 documented
     * divergence: the reference full-scans at 2k rows, importer.rb:518-550;
     * at 100 TB a full regex fold per import is the wrong plan). 100k rows
     * classify any realistic column distribution; the cap makes inference
-    * cost flat in input size (`limit` stops the scan early). */
+    * cost flat in input size (the fold stops reading after the cap). */
   val DefaultImportSampleRows = 100000L
 
   /** Sampled inference for the import path: fold over the first
-    * `sampleRows` rows only. `limit(n)` executes incrementally over file
-    * splits (CollectLimit), so a 100 TB table costs the same as a 100 MB
-    * one. Head-of-file biased by construction — use
+    * `sampleRows` rows in partition order only. The fold's one task reads
+    * the partitions in order and stops after `sampleRows` rows, so a
+    * 100 TB table costs the same as a 100 MB one. Head-of-file biased by
+    * construction — use
     * [[inferTypesHashSampled]] when the input is known to be
     * order-correlated (e.g. sorted by the very column being inferred). */
   def inferTypesSampled(df: DataFrame,

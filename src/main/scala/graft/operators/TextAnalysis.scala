@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -941,7 +941,6 @@ object TextAnalysis {
    */
   def bm25ServeRegexpTopK(spark: SparkSession, root: String,
       pattern: String, k: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val pat = pattern.trim
     require(pat.nonEmpty, "empty pattern")
@@ -953,12 +952,8 @@ object TextAnalysis {
       if (pre.isEmpty) (None, None)
       else (Some(pre), prefixSuccessor(pre))
     val rx = s"^(?:$pat)$$"
-    val keyRows = snap.tables("terms").flatMap { t =>
-      MergeTable.readRange(spark, t, lo, hi)
-        .filter(col("tok").rlike(rx) && col("tok") =!= Bm25StatsKey)
-        .select(col("tok"), col("dfc"))
-        .limit(MaxPrefixExpansion + 1).collect().toSeq
-    }
+    val keyRows = collectBands(snap, lo, hi,
+      col("tok").rlike(rx) && col("tok") =!= Bm25StatsKey, col("tok"), col("dfc"))
     val dfc = keyRows.groupBy(_.getString(0))
       .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
     require(dfc.size <= MaxPrefixExpansion,
@@ -1003,6 +998,20 @@ object TextAnalysis {
     scoreExpandedTerms(snap, expandPrefixTerms(snap, p), k)
   }
 
+  /** Every segment's dictionary band [lo, hi) of the terms table, rows
+    * matching `pred` projected to `cols`, each band cut at the expansion
+    * budget + 1 (a terms table holds one row per distinct term, so a band
+    * past the budget already proves the expansion too broad), collected
+    * in ONE job: coalesce(1) lets each band's limit stop its one task
+    * with no exchange. */
+  private def collectBands(snap: Bm25Snapshot, lo: Option[String],
+      hi: Option[String], pred: Column, cols: Column*): Seq[Row] =
+    snap.tables("terms").map { t =>
+      graft.sinks.MergeTable.readRange(snap.spark, t, lo, hi)
+        .filter(pred).select(cols: _*)
+        .coalesce(1).limit(MaxPrefixExpansion + 1)
+    }.reduce(_.unionByName(_)).collect().toSeq
+
   /** Dictionary expansion for `pre*` — (term → summed df) from each
     * segment's band scan [p, successor(p)) (band-pruned at the manifest
     * level; carries df — one dictionary read, no postings). Per-segment
@@ -1012,16 +1021,9 @@ object TextAnalysis {
     * Shared by [[bm25ServePrefixTopK]] and [[queryStringTopK]]. */
   private def expandPrefixTerms(snap: Bm25Snapshot,
       p: String): Map[String, Long] = {
-    import graft.sinks.MergeTable
     val upper = prefixSuccessor(p)
-    // per-segment bands (each budget-limited) union into ONE collect job
-    // — the per-segment collect loop paid |segments| job round-trips
-    val keyRows = snap.tables("terms").map { t =>
-      MergeTable.readRange(snap.spark, t, Some(p), upper)
-        .filter(col("tok").startsWith(p) && col("tok") =!= Bm25StatsKey)
-        .select(col("tok"), col("dfc"))
-        .limit(MaxPrefixExpansion + 1)
-    }.reduce(_.unionByName(_)).collect().toSeq
+    val keyRows = collectBands(snap, Some(p), upper,
+      col("tok").startsWith(p) && col("tok") =!= Bm25StatsKey, col("tok"), col("dfc"))
     val dfc = keyRows.groupBy(_.getString(0))
       .map { case (t, rs) => t -> rs.map(_.getLong(1)).sum }
     require(dfc.size <= MaxPrefixExpansion,
@@ -2267,7 +2269,6 @@ object TextAnalysis {
    */
   def nearServePrefixCount(spark: SparkSession, root: String,
       prefixA: String, termB: String, slop: Int): DataFrame = {
-    import graft.sinks.MergeTable
     import spark.implicits._
     val p = prefixA.toLowerCase.trim
     val b = termB.toLowerCase.trim
@@ -2279,11 +2280,8 @@ object TextAnalysis {
     if (snap.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "n_pairs")
     val upper = prefixSuccessor(p)
-    val expanded = snap.tables("terms").flatMap { t =>
-      MergeTable.readRange(spark, t, Some(p), upper)
-        .filter(col("tok").startsWith(p)).select(col("tok"))
-        .limit(MaxPrefixExpansion + 1).collect().map(_.getString(0)).toSeq
-    }.distinct.sorted
+    val expanded = collectBands(snap, Some(p), upper,
+      col("tok").startsWith(p), col("tok")).map(_.getString(0)).distinct.sorted
     if (expanded.isEmpty)
       return Seq.empty[(Long, Long)].toDF("doc_id", "n_pairs")
     require(expanded.size <= MaxPrefixExpansion,
@@ -3954,16 +3952,13 @@ object TextAnalysis {
       val den = BigInt(src.getOrElse(b, 0L) + 1) * BigInt(tTot + buckets)
       (num / den).toLong
     }
-    val rLit = typedlit(rArr)
     // the (id, score) frame is CACHED: the count action, the budget
     // machinery's quantile + totals passes, the rank window, and the
     // final kept-join all consume it — uncached, the interpreted
     // scoring lambda (aggregate over each doc's bucket array) re-ran in
     // every one of those passes (4× the dominant per-row compute)
     val scored = bucketed
-      .withColumn("score", coalesce(aggregate(col("__bkts"), lit(0L),
-        (acc, x) => acc + element_at(rLit, (x + lit(1L)).cast("int"))),
-        lit(0L)))
+      .withColumn("score", denseTableSum(col("__bkts"), rArr))
       .select(col(idCol), col("score"))
       .cache()
     val k = math.ceil(keepFrac * scored.count()).toLong
@@ -4035,17 +4030,28 @@ object TextAnalysis {
       val den = BigInt(prefix.getOrElse(p, 0L) + buckets)
       (num / den).toLong
     })
-    val rLit = typedlit(rArr)
     val carry = carryCols.map(col)
     corpus
       .select(col(idCol) +: carry :+ codes.as("__codes"): _*)
       .select(col(idCol) +: carry :+
-        coalesce(aggregate(col("__codes"), lit(0L),
-          (acc, x) => acc + element_at(rLit, (x + lit(1L)).cast("int"))),
-          lit(0L)).as("score") :+
+        denseTableSum(col("__codes"), rArr).as("score") :+
         coalesce(size(col("__codes")), lit(0)).cast("long").as("n_bigrams"): _*)
       .withColumn("kept",
         col("n_bigrams") > 0 && col("score") > lit(thresholdMicros) * col("n_bigrams"))
+  }
+
+  /** Σ table(code) over each row's array of codes (0 for a null array),
+    * as one expression over a literal array: the scoring map of
+    * [[dsirSelect]] and [[lmScore]]. Their codes lie in [0, table.size)
+    * by construction; the `pmod` keeps every index in that domain here,
+    * so an out-of-domain code wraps to a table entry instead of failing
+    * ANSI `element_at` mid-job. */
+  private[operators] def denseTableSum(codes: Column, table: Seq[Long]): Column = {
+    val tableLit = typedlit(table)
+    val size = lit(table.size.toLong)
+    coalesce(aggregate(codes, lit(0L),
+      (acc, x) => acc + element_at(tableLit, (pmod(x, size) + lit(1L)).cast("int"))),
+      lit(0L))
   }
 
   def register(spark: SparkSession): Unit = {

@@ -1,10 +1,14 @@
 package graft.sources
 
+import java.io.{ByteArrayInputStream, InputStream, SequenceInputStream}
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 import java.nio.file.{Files, Paths}
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.core.Identifier
 import graft.operators.SchemaInference
@@ -15,8 +19,10 @@ import graft.operators.SchemaInference
  * distributed type-lattice inference → typed DataFrame.
  *
  * The sniffing pre-pass reads only the file head on the driver
- * (reference: importer.rb:489-526, misc/csv_normalizer.py); the data scan
- * itself is Spark's parallel CSV reader plus one inference aggregate.
+ * (reference: importer.rb:489-526, misc/csv_normalizer.py) and derives
+ * the column names from the same bytes, so the read plans with an explicit
+ * all-string schema and launches no job. The data scan itself is Spark's
+ * CSV reader plus the one-job inference fold.
  */
 object CsvImport {
 
@@ -95,10 +101,18 @@ object CsvImport {
     out.toArray
   }
 
-  /** Driver pre-pass over the file head: encoding + dialect. */
-  def sniff(path: String, headBytes: Int = 64 * 1024): CsvDialect = {
+  private val HeadBytes = 64 * 1024
+
+  private def readHead(path: String, headBytes: Int): Array[Byte] = {
     val in = Files.newInputStream(Paths.get(path))
-    val head = try in.readNBytes(headBytes) finally in.close()
+    try in.readNBytes(headBytes) finally in.close()
+  }
+
+  /** Driver pre-pass over the file head: encoding + dialect. */
+  def sniff(path: String, headBytes: Int = HeadBytes): CsvDialect =
+    dialectOf(readHead(path, headBytes))
+
+  private def dialectOf(head: Array[Byte]): CsvDialect = {
     val encoding = detectEncoding(head)
     val text = new String(head, Charset.forName(encoding))
     val lines = text.split("\r\n|\r|\n", -1).toSeq
@@ -108,6 +122,56 @@ object CsvImport {
     val header = looksLikeHeader(
       splitCsvLine(headerLine, delim.head, quote.head).toIndexedSeq, quote)
     CsvDialect(delim, quote, encoding, headerLine, header)
+  }
+
+  /** The options every CSV read of a sniffed file passes to Spark. */
+  private[sources] def readerOptions(d: CsvDialect): Map[String, String] = Map(
+    "header" -> d.hasHeader.toString,
+    "sep" -> d.delimiter,
+    "quote" -> d.quote,
+    "escape" -> d.quote, // CSV doubled-quote convention
+    "multiLine" -> "true",
+    "encoding" -> d.encoding,
+    "mode" -> "PERMISSIVE")
+
+  /** The column names Spark's CSV source would infer for `path` under
+    * `d`, derived on the driver from the file head: its first record,
+    * tokenized by the univocity parser with the settings Spark's
+    * multi-line reader uses (separator, quote, escape, encoding, BOM,
+    * blank-line skipping), named by Spark's own `makeSafeHeader` (a blank
+    * cell becomes `_c<i>`, case-insensitive repeats `name<i>`; headerless
+    * files `_c<i>`). Reads past `head` only when the first record runs
+    * beyond it. */
+  private def columnNames(spark: SparkSession, path: String,
+      d: CsvDialect, head: Array[Byte]): IndexedSeq[String] = {
+    val opts = new CSVOptions(readerOptions(d), true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val in: InputStream =
+      if (head.length < HeadBytes) new ByteArrayInputStream(head)
+      else {
+        val rest = Files.newInputStream(Paths.get(path))
+        rest.skipNBytes(head.length)
+        new SequenceInputStream(new ByteArrayInputStream(head), rest)
+      }
+    val parser = new CsvParser(opts.asParserSettings)
+    val first = try {
+      parser.beginParsing(in, opts.charset)
+      parser.parseNext()
+    } finally parser.stopParsing()
+    if (first == null) IndexedSeq.empty
+    else CSVUtils.makeSafeHeader(first,
+      spark.conf.get("spark.sql.caseSensitive").toBoolean, opts).toIndexedSeq
+  }
+
+  /** Spark's CSV reader over `path` with the sniffed dialect and the
+    * driver-derived column names as an all-string schema: planning it
+    * runs no job. */
+  private[sources] def rawFrame(spark: SparkSession, path: String): (CsvDialect, DataFrame) = {
+    val head = readHead(path, HeadBytes)
+    val d = dialectOf(head)
+    val schema = StructType(columnNames(spark, path, d, head)
+      .map(StructField(_, StringType, nullable = true)))
+    (d, spark.read.options(readerOptions(d)).schema(schema).csv(path))
   }
 
   /**
@@ -120,16 +184,7 @@ object CsvImport {
       inferSampleRows: Option[Long] = Some(SchemaInference.DefaultImportSampleRows),
       validateSample: Boolean = false)
       : DataFrame = {
-    val d = sniff(path)
-    val raw0 = spark.read
-      .option("header", d.hasHeader.toString)
-      .option("sep", d.delimiter)
-      .option("quote", d.quote)
-      .option("escape", d.quote) // CSV doubled-quote convention
-      .option("multiLine", "true")
-      .option("encoding", d.encoding)
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+    val (d, raw0) = rawFrame(spark, path)
     val raw = if (d.hasHeader) raw0
       else raw0.toDF(raw0.columns.indices.map(i => s"field_${i + 1}"): _*)
     val named = raw.toDF(Identifier.sanitizeHeader(raw.columns.toIndexedSeq): _*)

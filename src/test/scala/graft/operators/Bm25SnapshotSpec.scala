@@ -25,11 +25,12 @@ class Bm25SnapshotSpec extends AnyFunSuite with SparkTestBase {
 
   /** Even ids built, odd ids appended as a second segment, doc values on
     * both, two tombstones. */
-  private def twoSegmentIndex(): String = {
+  private def twoSegmentIndex(positions: Boolean = false): String = {
     val docs = corpus()
     val root = Files.createTempDirectory("bm25snap").toString
     TextAnalysis.writeBm25Index(docs.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", root, nBuckets = 4, docValueCols = Seq("n_chars"))
+      "doc_id", "text", root, nBuckets = 4, positions = positions,
+      docValueCols = Seq("n_chars"))
     TextAnalysis.appendBm25Segment(docs.filter(col("doc_id") % 2 =!= 0),
       "doc_id", "text", root, nBuckets = 4)
     TextAnalysis.deleteBm25Docs(spark, root, Seq(5L, 12L))
@@ -60,8 +61,24 @@ class Bm25SnapshotSpec extends AnyFunSuite with SparkTestBase {
           "doc_id", "text", 10).collect()))
     serves.foreach { case (_, serve) => serve() } // warm the session
     val got = serves.map { case (name, serve) => name -> sparkJobs(serve()) }
-    val want = Seq("term" -> 4, "query_string" -> 9, "prefix" -> 7,
+    val want = Seq("term" -> 4, "query_string" -> 9, "prefix" -> 5,
       "agg_mad" -> 15, "agg_percentiles" -> 9, "agg_sigterms" -> 9)
+    assert(got == want)
+  }
+
+  // The dictionary-band serves read every segment's band of the terms
+  // table in one union job, with no exchange under the per-band limits.
+  test("Spark jobs per dictionary-band serve on a two-segment index") {
+    val root = twoSegmentIndex(positions = true)
+    val serves: Seq[(String, () => Unit)] = Seq(
+      "regexp" -> (() =>
+        TextAnalysis.bm25ServeRegexpTopK(spark, root, "row1.", 10).collect()),
+      "near_prefix" -> (() =>
+        TextAnalysis.nearServePrefixCount(spark, root, "row1", "sort", 2)
+          .collect()))
+    serves.foreach { case (_, serve) => serve() } // warm the session
+    val got = serves.map { case (name, serve) => name -> sparkJobs(serve()) }
+    val want = Seq("regexp" -> 5, "near_prefix" -> 6)
     assert(got == want)
   }
 

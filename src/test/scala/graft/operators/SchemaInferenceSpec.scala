@@ -98,6 +98,72 @@ class SchemaInferenceSpec extends AnyFunSuite with SparkTestBase with PropHelper
     check(mixed)
   }
 
+  /** The aggregate the one-job fold replaced: AllColumnsAgg as a Spark
+    * UDAF over every column, optionally behind `limit(n)`. */
+  private def aggregateVerdicts(df: org.apache.spark.sql.DataFrame,
+      limit: Option[Int]): Map[String, String] = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.functions.{col, udaf}
+    val src = limit.map(df.limit).getOrElse(df)
+    val agg = udaf(new SchemaInference.AllColumnsAgg(df.columns.length),
+      Encoders.row(df.schema))
+    val joined = src.select(agg(df.columns.map(col).toIndexedSeq: _*))
+      .head().getString(0)
+    df.columns.toSeq.zip(joined.split(",", -1)).toMap
+  }
+
+  test("one-job fold ≡ the former aggregate on one partition, full and sampled (property)") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val caseGen = for {
+      n <- Gen.chooseNum(0, 40)
+      rows <- Gen.listOfN(n, Gen.listOfN(3, cellGen))
+      cap <- Gen.chooseNum(1, 45)
+    } yield (rows, cap)
+    val schema = StructType(Seq("a", "b", "c").map(StructField(_, StringType)))
+    // 25 cases, not propRuns: each case runs four Spark actions
+    (0L until 25L).flatMap(i =>
+      caseGen(Gen.Parameters.default, org.scalacheck.rng.Seed(i))).foreach {
+      case (rows, cap) =>
+        val df = spark.createDataFrame(
+          spark.sparkContext.parallelize(rows.map(Row.fromSeq(_)), 1), schema)
+        assert(SchemaInference.inferTypes(df) == aggregateVerdicts(df, None), s"full on $rows")
+        assert(SchemaInference.inferTypesSampled(df, cap.toLong) ==
+          aggregateVerdicts(df, Some(cap)), s"sampled $cap on $rows")
+    }
+  }
+
+  test("the fold merges partition states in partition order") {
+    val s = spark; import s.implicits._
+    // the first non-blank value decides a sticky verdict: "1.5" in
+    // partition 2 makes the column float, whatever partition 5's "abc"
+    // arrives as. Partitions 0, 1 and 3 are blank-only.
+    val parts = Seq(Seq(" "), Seq(), Seq("1.5"), Seq(""), Seq("7"), Seq("abc"), Seq("2"))
+    val df = spark.sparkContext.parallelize(parts, parts.size)
+      .flatMap(identity).toDF("v")
+    assert(df.rdd.getNumPartitions == parts.size)
+    val sequential = TypeLattice.inferColumn(parts.flatten)
+    assert(sequential == TypeLattice.TFloat)
+    (1 to 5).foreach(_ => assert(SchemaInference.inferTypes(df) == Map("v" -> "float")))
+    // the reverse order puts "abc" first: varchar
+    val reversed = spark.sparkContext.parallelize(parts.reverse, parts.size)
+      .flatMap(identity).toDF("v")
+    assert(SchemaInference.inferTypes(reversed) == Map("v" -> "varchar"))
+  }
+
+  test("a sampled fold over many partitions folds exactly n rows, in one job") {
+    import org.apache.spark.sql.functions.{col, when}
+    // 8 partitions of 10 rows; row 37 in partition order is the only
+    // non-integer, so the verdict flips exactly when the sample reaches it
+    val df = spark.range(0, 80, 1, 8)
+      .select(when(col("id") === 37, "abc").otherwise(col("id").cast("string")).as("v"))
+    assert(df.rdd.getNumPartitions == 8)
+    assert(SchemaInference.inferTypesSampled(df, 37) == Map("v" -> "integer"))
+    assert(SchemaInference.inferTypesSampled(df, 38) == Map("v" -> "varchar"))
+    assert(SchemaInference.inferTypes(df) == Map("v" -> "varchar"))
+    assert(sparkJobs(SchemaInference.inferTypesSampled(df, 38)) == 1)
+    assert(sparkJobs(SchemaInference.inferTypes(df)) == 1)
+  }
+
   test("inferTypes over a real table matches expectations") {
     val types = SchemaInference.inferTypes(
       spark.read.parquet(sf("lineitem"))

@@ -742,6 +742,38 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTestBase {
     assert(one.count(_.getBoolean(2)) == 10)
   }
 
+  test("dense table sum: out-of-domain codes wrap into the table under ANSI") {
+    val ansiKey = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(ansiKey)
+    spark.conf.set(ansiKey, "true")
+    try {
+      val table = Seq(10L, 20L, 30L)
+      // a range-backed frame: a local Seq is constant-folded before codegen
+      val codes = spark.range(1).select(
+        array(lit(0L), lit(2L)).as("good"),
+        array(lit(-1L), lit(3L), lit(7L)).as("bad"),
+        lit(null).cast("array<bigint>").as("none"))
+      val row = codes.select(
+        TextAnalysis.denseTableSum(col("good"), table),
+        TextAnalysis.denseTableSum(col("bad"), table),
+        TextAnalysis.denseTableSum(col("none"), table)).head()
+      // -1 → 2, 3 → 0, 7 → 1
+      assert((row.getLong(0), row.getLong(1), row.getLong(2)) == (40L, 60L, 0L))
+      // the unclamped lookup the scores used to make fails on the same
+      // codes (-1 is index 0, 3 and 7 are past the end)
+      val e = intercept[Exception](codes.select(aggregate(col("bad"), lit(0L),
+        (acc, x) => acc + element_at(typedlit(table), (x + lit(1L)).cast("int")))).head())
+      assert(e.getMessage.contains("INVALID_INDEX_OF_ZERO"), e.getMessage)
+      // still one projection over the codes, no join or exchange
+      val plan = codes.select(TextAnalysis.denseTableSum(col("bad"), table))
+        .queryExecution.executedPlan
+      val nodes = allPlanNodes(plan)
+      assert(nodes.count(_.isInstanceOf[org.apache.spark.sql.execution.ProjectExec]) == 1 &&
+        !nodes.exists(n => n.nodeName.contains("Exchange") || n.nodeName.contains("Join")),
+        plan.toString)
+    } finally spark.conf.set(ansiKey, prev)
+  }
+
   test("decontaminateScrub: quoted spans excised, clean majority kept, order preserved") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
