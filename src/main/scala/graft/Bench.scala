@@ -149,6 +149,7 @@ object Bench {
         // them so memory stays flat across the suite and no query's timing
         // depends on an earlier query's leftovers
         try spark.catalog.clearCache() catch { case _: Throwable => () }
+        SparkEntry.deleteScratchDirs()
         if (ok) dt else -1.0
       }
       name -> times

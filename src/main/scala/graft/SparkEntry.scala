@@ -377,6 +377,25 @@ object SparkEntry {
     * discoveryConfLock, which guards its own key). */
   private[graft] val sessionConfLock = new Object
 
+  /** Scratch dirs made by the board's queries. A query returns a lazy
+    * frame that may still read its dir, so the dir can go only after the
+    * runner has used the result: [[deleteScratchDirs]]. */
+  private val scratchDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A new temp dir `prefix…` under java.io.tmpdir, recorded for
+    * [[deleteScratchDirs]]. */
+  private def scratchDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    scratchDirs.add(d)
+    d
+  }
+
+  /** Deletes every scratch dir recorded so far, with its contents. */
+  def deleteScratchDirs(): Unit =
+    Iterator.continually(scratchDirs.poll()).takeWhile(_ != null)
+      .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+
   private def runAvailableNow(df: DataFrame, outDir: String, ckpt: String,
       partitions: Int = 8,
       extraConfs: Map[String, String] = Map.empty): Unit = {
@@ -4777,7 +4796,7 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_returnflag"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csvrt_")
+      val tmp = scratchDir("graft_csvrt_")
       val csvPath = tmp.resolve("sample.csv")
       val w = java.nio.file.Files.newBufferedWriter(csvPath)
       try {
@@ -4804,7 +4823,7 @@ object SparkEntry {
       val sample = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fmt_").toString
+      val tmp = scratchDir("graft_fmt_").toString
       sample.write.mode("overwrite").orc(s"$tmp/orc")
       sample.write.mode("overwrite").json(s"$tmp/jsonl")
       val schema = "l_orderkey LONG, l_partkey LONG, l_suppkey LONG, l_linenumber LONG"
@@ -4825,7 +4844,7 @@ object SparkEntry {
     // aggregates the oracle derives from the source table alone
     "schema_evolution" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val base = java.nio.file.Files.createTempDirectory("graft_evo_").toString
+      val base = scratchDir("graft_evo_").toString
       docs.select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$base/v1")
       docs.select((col("doc_id") + 100000L).as("doc_id"), col("text"), col("lang"))
@@ -4925,7 +4944,7 @@ object SparkEntry {
     // optimization at 100 TB — the lang='en' read must touch only the
     // lang=en directory (PlanAuditSpec pins PartitionFilters on the scan)
     "partition_prune" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_part_").toString
+      val base = scratchDir("graft_part_").toString
       t(s, dir, "documents").write.partitionBy("lang").mode("overwrite").parquet(base)
       s.read.parquet(base).filter(col("lang") === "en")
         .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -4937,7 +4956,7 @@ object SparkEntry {
       val sample = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_export_").toString
+      val tmp = scratchDir("graft_export_").toString
       val r = graft.sinks.Exporter.exportCsvDistributed(sample, "lineitem_proj", tmp)
       val zf = new java.util.zip.ZipFile(r.path)
       val outCsv = java.nio.file.Paths.get(tmp, "back.csv")
@@ -4959,10 +4978,10 @@ object SparkEntry {
       val sample = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_shexp_").toString
+      val tmp = scratchDir("graft_shexp_").toString
       val r = graft.sinks.Exporter.exportCsvSharded(sample, "li_sharded",
         shards = 4, tmp)
-      val back = java.nio.file.Files.createTempDirectory("graft_shexp_back_").toString
+      val back = scratchDir("graft_shexp_back_").toString
       r.shardPaths.zipWithIndex.foreach { case (p, i) =>
         val local = new org.apache.hadoop.fs.Path(p).toUri.getPath
         val zf = new java.util.zip.ZipFile(local)
@@ -5018,7 +5037,7 @@ object SparkEntry {
           graft.functions.GeoFunctions.st_point(
             (col("c_custkey") % 360 - 180).cast("double"),
             (col("c_custkey") % 170 - 85).cast("double")).as("the_geom"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kmlrt_").toString
+      val tmp = scratchDir("graft_kmlrt_").toString
       val r = graft.sinks.Exporter.exportKmlDistributed(
         sample, "cust_geo", "the_geom", tmp)
       val back = graft.Importer.importFile(s,
@@ -5038,7 +5057,7 @@ object SparkEntry {
           graft.functions.GeoFunctions.st_point(
             (col("c_custkey") % 360 - 180).cast("double"),
             (col("c_custkey") % 170 - 85).cast("double")).as("the_geom"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_shprt_").toString
+      val tmp = scratchDir("graft_shprt_").toString
       val r = graft.sinks.Exporter.exportShpDistributed(
         sample, "cust_shp", "the_geom", tmp)
       val back = graft.Importer.importFile(s,

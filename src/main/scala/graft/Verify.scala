@@ -26,8 +26,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop operator-internal caches between queries (memory hygiene)
+      // drop operator-internal caches and the query's scratch dirs
+      // between queries (memory and disk hygiene)
       try spark.catalog.clearCache() catch { case _: Throwable => () }
+      SparkEntry.deleteScratchDirs()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

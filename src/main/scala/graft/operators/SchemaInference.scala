@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -141,8 +142,10 @@ object SchemaInference {
     * of codegen (measured 1.08 s combined vs 0.31 + 0.40 split at
     * sf0.1), each action scans only its own columns (columnar parquet —
     * no duplicate IO), and they are independent, so they overlap on a
-    * two-thread pool (guide §2.6) — wall ≈ max, not sum. CSV-import
-    * frames (all string) take only the one-job fold ([[foldStrings]]).
+    * two-thread pool (guide §2.6) — wall ≈ max, not sum. Both are
+    * [[foldInOrder]] passes, so with a sample they read the same first n
+    * rows. CSV-import frames (all string) take only the one-job fold
+    * ([[foldStrings]]).
     * SchemaInferenceSpec pins algebra ≡ fold per type on adversarial
     * values (overflows, negatives, NaN/Inf, tiny/huge doubles,
     * all-null).
@@ -174,22 +177,23 @@ object SchemaInference {
     }.toMap
 
     val stringCols = fields.map(_.name).filter(plans(_) == StringFold)
-    val gateAggs: Seq[org.apache.spark.sql.Column] = fields.flatMap { f =>
+    // the typed-column gate: one decimal(38,0) per gated column, null
+    // exactly where the value is, whose count/min/max decide the verdict —
+    // the integral value itself, 1 for a floating value whose rendering
+    // could turn sci/NaN/Inf (else 0), and 0 for a scaled decimal
+    val gated = fields.filter(f => plans(f.name) match {
+      case IntegralGate | DecimalFloatGate | FloatingGate => true
+      case _ => false
+    })
+    val gateCols = gated.map { f =>
       val c = col(f.name)
-      plans(f.name) match {
-        case IntegralGate => Seq(
-          count(c).as(s"__n_${f.name}"),
-          min(c).cast("decimal(38,0)").as(s"__mn_${f.name}"),
-          max(c).cast("decimal(38,0)").as(s"__mx_${f.name}"))
-        case DecimalFloatGate => Seq(count(c).as(s"__n_${f.name}"))
-        case FloatingGate => Seq(
-          count(c).as(s"__n_${f.name}"),
-          max(when(c.isNotNull &&
-              (isnan(c) || abs(c) === Double.PositiveInfinity ||
-                (c =!= 0.0 && (abs(c) < 1e-3 || abs(c) >= 1e7))), 1L)
-            .otherwise(0L)).as(s"__unsafe_${f.name}"))
-        case _ => Nil
-      }
+      (plans(f.name) match {
+        case IntegralGate => c
+        case DecimalFloatGate => when(c.isNotNull, 0)
+        case _ => when(c.isNotNull,
+          when(isnan(c) || abs(c) === Double.PositiveInfinity ||
+            (c =!= 0.0 && (abs(c) < 1e-3 || abs(c) >= 1e7)), 1).otherwise(0))
+      }).cast("decimal(38,0)")
     }
     def foldOver(colNames: Seq[String]): Map[String, String] = {
       val strSrc = colNames.map(c => col(c).cast(StringType).as(c))
@@ -207,42 +211,31 @@ object SchemaInference {
     import scala.concurrent.duration.Duration
     val foldF: Option[Future[Map[String, String]]] =
       if (stringCols.isEmpty) None
-      else if (gateAggs.isEmpty) Some(Future.successful(foldOver(stringCols)))
+      else if (gated.isEmpty) Some(Future.successful(foldOver(stringCols)))
       else Some(Future(foldOver(stringCols))(
         scala.concurrent.ExecutionContext.global))
 
-    if (gateAggs.nonEmpty) {
-      val row = cap.map(df.limit).getOrElse(df)
-        .select(gateAggs.toIndexedSeq: _*).head()
+    if (gated.nonEmpty) {
+      // the same rows the string fold reads, through the same chain
+      val r = foldInOrder(df.select(gateCols: _*), cap)(
+        new Ranges(gated.length))(_.add(_))(_.merge(_))
       val int32Max = java.math.BigDecimal.valueOf(Int.MaxValue.toLong)
-      val fallbackCols = fields.map(_.name).filter { c =>
+      val fallbackCols = gated.indices.filter { i =>
+        val c = gated(i).name
         plans(c) match {
+          case _ if r.n(i) == 0L => verdicts(c) = "varchar"; false
           case IntegralGate =>
-            if (row.getLong(row.fieldIndex(s"__n_$c")) == 0L) {
-              verdicts(c) = "varchar"; false
-            } else {
-              val mn = row.getDecimal(row.fieldIndex(s"__mn_$c"))
-              val mx = row.getDecimal(row.fieldIndex(s"__mx_$c"))
-              if (mx.compareTo(int32Max) <= 0) {
-                verdicts(c) =
-                  if (mn.signum() >= 0) "integer" else "varchar"
-                false
-              } else true // overflow present: order-dependent corner
-            }
-          case DecimalFloatGate =>
-            verdicts(c) =
-              if (row.getLong(row.fieldIndex(s"__n_$c")) > 0L) "float"
-              else "varchar"
-            false
-          case FloatingGate =>
-            if (row.getLong(row.fieldIndex(s"__n_$c")) == 0L) {
-              verdicts(c) = "varchar"; false
-            } else if (row.getLong(row.fieldIndex(s"__unsafe_$c")) == 0L) {
-              verdicts(c) = "float"; false
-            } else true // sci/NaN/Inf rendering possible: exact fold
-          case _ => false
+            if (r.hi(i).compareTo(int32Max) <= 0) {
+              verdicts(c) =
+                if (r.lo(i).signum() >= 0) "integer" else "varchar"
+              false
+            } else true // overflow present: order-dependent corner
+          case DecimalFloatGate => verdicts(c) = "float"; false
+          case _ =>
+            if (r.hi(i).signum() == 0) { verdicts(c) = "float"; false }
+            else true // sci/NaN/Inf rendering possible: exact fold
         }
-      }
+      }.map(gated(_).name)
       // rare second pass: the exact fold over just the corner columns
       if (fallbackCols.nonEmpty) verdicts ++= foldOver(fallbackCols)
     }
@@ -250,38 +243,74 @@ object SchemaInference {
     fields.map(f => f.name -> verdicts(f.name)).toMap
   }
 
-  /** The lattice fold over an all-string frame in ONE Spark job with no
-    * exchange, run as a tracked SQL execution so query listeners see it:
-    * each partition folds its rows into one packed state (at most one
-    * state per partition reaches the driver), and the driver merges the
-    * states in partition order. `sampleRows = Some(n)` folds only the
-    * first n rows in partition order: the partitions are chained in
-    * index order into one task, which stops reading after n rows, so the
-    * cost stays flat in input size. Returns [[AllColumnsAgg.finish]]'s
-    * comma-joined verdicts. */
-  private def foldStrings(strs: DataFrame, sampleRows: Option[Int]): String = {
-    val agg = new AllColumnsAgg(strs.columns.length)
-    val qe = strs.queryExecution
+  /** Folds the rows of `frame` in ONE Spark job with no exchange, run as
+    * a tracked SQL execution so query listeners see it: each partition
+    * folds its rows into one state from `zero` (at most one state per
+    * partition reaches the driver), and the driver merges the states in
+    * partition order. `sampleRows = Some(n)` folds only the first n rows
+    * in partition order: the partitions are chained in index order into
+    * one task, which stops reading after n rows, so the cost stays flat
+    * in input size and every fold of one frame sees the same rows. */
+  private def foldInOrder[S: scala.reflect.ClassTag](frame: DataFrame,
+      sampleRows: Option[Int])(zero: => S)(update: (S, InternalRow) => Unit)
+      (merge: (S, S) => S): S = {
+    val qe = frame.queryExecution
     val states = SQLExecution.withNewExecutionId(qe, Some("inferTypes")) {
       val rows = qe.toRdd
       val src =
         if (sampleRows.isEmpty) rows
         else rows.coalesce(1, shuffle = false, Some(InPartitionOrder))
       src.mapPartitions { all =>
-        val it = sampleRows.fold(all)(all.take)
-        val b = agg.zero
-        val width = b.length
-        it.foreach { r =>
-          var i = 0
-          while (i < width) {
-            agg.update(b, i, if (r.isNullAt(i)) null else r.getUTF8String(i).toString)
-            i += 1
-          }
-        }
-        Iterator.single(b)
+        val s = zero
+        sampleRows.fold(all)(all.take).foreach(update(s, _))
+        Iterator.single(s)
       }.collect()
     }
-    agg.finish(states.foldLeft(agg.zero)(agg.merge))
+    states.foldLeft(zero)(merge)
+  }
+
+  /** The lattice fold over an all-string frame ([[foldInOrder]]). Returns
+    * [[AllColumnsAgg.finish]]'s comma-joined verdicts. */
+  private def foldStrings(strs: DataFrame, sampleRows: Option[Int]): String = {
+    val agg = new AllColumnsAgg(strs.columns.length)
+    val width = strs.columns.length
+    agg.finish(foldInOrder(strs, sampleRows)(agg.zero) { (b, r) =>
+      var i = 0
+      while (i < width) {
+        agg.update(b, i, if (r.isNullAt(i)) null else r.getUTF8String(i).toString)
+        i += 1
+      }
+    }(agg.merge))
+  }
+
+  /** Per column of an all-decimal(38,0) frame: the count of non-null
+    * values and their min and max — the typed-column gate's state. */
+  private final class Ranges(width: Int) extends Serializable {
+    val n = new Array[Long](width)
+    val lo = new Array[java.math.BigDecimal](width)
+    val hi = new Array[java.math.BigDecimal](width)
+
+    def add(r: InternalRow): Unit = {
+      var i = 0
+      while (i < width) {
+        if (!r.isNullAt(i)) {
+          val v = r.getDecimal(i, 38, 0).toJavaBigDecimal
+          n(i) += 1
+          if (lo(i) == null || v.compareTo(lo(i)) < 0) lo(i) = v
+          if (hi(i) == null || v.compareTo(hi(i)) > 0) hi(i) = v
+        }
+        i += 1
+      }
+    }
+
+    def merge(o: Ranges): Ranges = {
+      for (i <- 0 until width if o.n(i) > 0) {
+        n(i) += o.n(i)
+        if (lo(i) == null || o.lo(i).compareTo(lo(i)) < 0) lo(i) = o.lo(i)
+        if (hi(i) == null || o.hi(i).compareTo(hi(i)) > 0) hi(i) = o.hi(i)
+      }
+      this
+    }
   }
 
   /** Coalesces every partition into one, in partition index order (the

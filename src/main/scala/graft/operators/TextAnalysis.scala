@@ -479,8 +479,7 @@ object TextAnalysis {
       .withColumn("dot", vec_doti(col("v"), typedlit(qv.toSeq)))
       .withColumn("score", cosScore(qNrm))
       .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(kEach)
+      .transform(topKByScore(kEach))
     val w = Window.orderBy(col("score").desc, col("doc_id"))
     val lexR = lex.select(col("doc_id"),
       row_number().over(w).as("r_lex"))
@@ -946,7 +945,7 @@ object TextAnalysis {
     require(pat.nonEmpty, "empty pattern")
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val pre = regexLiteralPrefix(pat)
     val (lo, hi) =
       if (pre.isEmpty) (None, None)
@@ -988,12 +987,11 @@ object TextAnalysis {
    */
   def bm25ServePrefixTopK(spark: SparkSession, root: String,
       prefix: String, k: Int): DataFrame = {
-    import spark.implicits._
     val p = prefix.toLowerCase.trim
     require(p.nonEmpty, "empty prefix")
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     // stage 1: dictionary expansion; stage 2: the scoring serve over it
     scoreExpandedTerms(snap, expandPrefixTerms(snap, p), k)
   }
@@ -1057,22 +1055,14 @@ object TextAnalysis {
   private def scoreExpandedTerms(snap: Bm25Snapshot,
       dfc: Map[String, Long], k: Int): DataFrame = {
     val spark = snap.spark
-    import spark.implicits._
     val terms = dfc.keys.toSeq.sorted
     if (terms.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(Nil)
-    val idf = bm25Idf(st.nDocs, dfc, terms).toDF("tok", "idf")
+    val idf = bm25IdfFrame(spark, st.nDocs, dfc, terms)
     snap.livePostings(terms)
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25SumScores(idf, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /** Whether a segment carries the reversed dictionary twin (segments
@@ -1183,12 +1173,11 @@ object TextAnalysis {
    */
   def bm25ServeSuffixTopK(spark: SparkSession, root: String,
       suffix: String, k: Int): DataFrame = {
-    import spark.implicits._
     val sx = suffix.toLowerCase.trim
     require(sx.nonEmpty, "empty suffix")
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     scoreExpandedTerms(snap, expandSuffixTerms(snap, sx), k)
   }
 
@@ -1221,7 +1210,6 @@ object TextAnalysis {
    */
   def bm25ServeInfixTopK(spark: SparkSession, root: String,
       prefix: String, suffix: String, k: Int): DataFrame = {
-    import spark.implicits._
     val p = prefix.toLowerCase.trim
     val sx = suffix.toLowerCase.trim
     require(p.nonEmpty && sx.nonEmpty,
@@ -1229,7 +1217,7 @@ object TextAnalysis {
         "prefix/suffix serves for one-sided patterns)")
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     scoreExpandedTerms(snap, expandInfixTerms(snap, p, sx), k)
   }
 
@@ -1291,13 +1279,12 @@ object TextAnalysis {
    */
   def bm25ServeFuzzyTopK(spark: SparkSession, root: String,
       term: String, k: Int): DataFrame = {
-    import spark.implicits._
     val q = term.toLowerCase.trim
     require(q.nonEmpty && !q.exists(_.isWhitespace),
       "fuzzy serve takes a single term")
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     scoreExpandedTerms(snap, expandFuzzyTerms(snap, q), k)
   }
 
@@ -1370,19 +1357,18 @@ object TextAnalysis {
    */
   def bm25ServeTopKAnd(spark: SparkSession, root: String,
       queryText: String, k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     lastAndServeAudit = None
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(terms)
     val dfc = st.dfc
     // MUST: a required term absent from the index ⇒ no doc can qualify —
     // decided from the dictionary alone, zero postings read
     if (!terms.forall(dfc.contains))
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val idf = bm25Idf(st.nDocs, dfc, terms).toDF("tok", "idf")
+      return emptyScores(spark)
+    val idf = bm25IdfFrame(spark, st.nDocs, dfc, terms)
     val alive = snap.livePostings(terms)
     val tMin = terms.minBy(t => (dfc(t), t))
     val cand0 = alive.filter(col("tok") === tMin).select(col("doc_id"))
@@ -1399,18 +1385,11 @@ object TextAnalysis {
         postingsRowsTotal = alive.count(),
         postingsRowsScored = restricted.count()))
     restricted
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"),
-        countDistinct(col("tok")).as("nt"))
+      .transform(bm25SumScores(idf, st.avg1000,
+        Seq(countDistinct(col("tok")).as("nt"))))
       .filter(col("nt") === terms.size)
       .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1433,11 +1412,8 @@ object TextAnalysis {
   def bm25ServeTopKNot(spark: SparkSession, root: String,
       queryText: String, excludeText: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    val exTerms = excludeText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
+    val terms = analyzeTerms(queryText)
+    val exTerms = analyzeTerms(excludeText)
     require(terms.nonEmpty, "empty query")
     require(exTerms.nonEmpty, "empty exclusion — use bm25ServeTopK")
     require(terms.intersect(exTerms).isEmpty,
@@ -1445,9 +1421,9 @@ object TextAnalysis {
         "and prohibited — a MUST_NOT of a SHOULD term matches nothing")
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(terms)
-    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val idf = bm25IdfFrame(spark, st.nDocs, st.dfc, terms)
     // NOTE (ADVICE r16 low): the exclusion set deliberately skips the
     // tombstone mask — dead docs in `excluded` are harmless because the
     // SCORING side (`livePostings`) is dead-filtered before the
@@ -1459,15 +1435,8 @@ object TextAnalysis {
     // common word, so its doc set is unbounded — AQE picks the join
     // strategy from the actual exclusion size at runtime
     snap.livePostings(terms).join(excluded, Seq("doc_id"), "left_anti")
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25SumScores(idf, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1485,17 +1454,14 @@ object TextAnalysis {
   def bm25BoostingTopK(spark: SparkSession, root: String,
       positiveText: String, negativeText: String, negBoost1000: Long,
       k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(negBoost1000 >= 0, s"negative boost $negBoost1000 < 0")
-    val posTerms = positiveText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    val negTerms = negativeText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
+    val posTerms = analyzeTerms(positiveText)
+    val negTerms = analyzeTerms(negativeText)
     require(posTerms.nonEmpty && negTerms.nonEmpty,
       "boosting needs both a positive and a negative query")
     val snap = Bm25Snapshot(spark, root, asOf)
     val scored = bm25ScoreFrame(snap, posTerms) match {
-      case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      case None => return emptyScores(spark)
       case Some(f) => f
     }
     // the negative side needs MATCHING only, not scores: one postings
@@ -1508,8 +1474,7 @@ object TextAnalysis {
         when(col("__neg").isNotNull,
           expr(s"(score * ${negBoost1000}L) div 1000"))
           .otherwise(col("score")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1544,31 +1509,23 @@ object TextAnalysis {
   def bm25TermsSetTopK(spark: SparkSession, root: String,
       queryText: String, msmSql: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(msmSql.trim.nonEmpty, "empty minimum_should_match expression")
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(terms)
-    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val idf = bm25IdfFrame(spark, st.nDocs, st.dfc, terms)
     val alive = snap.livePostings(terms)
     val msm = snap.docValues
       .select(col("doc_id"), expr(msmSql).cast("long").as("__msm"))
     alive
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"),
-        countDistinct(col("tok")).as("__matched"))
+      .transform(bm25SumScores(idf, st.avg1000,
+        Seq(countDistinct(col("tok")).as("__matched"))))
       .join(msm, Seq("doc_id"))
       .filter(col("__matched") >= col("__msm"))
       .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1582,31 +1539,23 @@ object TextAnalysis {
    */
   def bm25SpanFirstTopK(spark: SparkSession, root: String, term: String,
       end: Int, k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val t = term.toLowerCase.trim
     require(t.nonEmpty && !t.exists(_.isWhitespace),
       s"span_first takes one term, got '$term'")
     require(end >= 1, s"end must be positive, got $end")
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(Seq(t))
     if (!st.dfc.contains(t))
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val idfV = bm25Idf(st.nDocs, st.dfc, Seq(t)).head._2
-    val avg1000 = st.avg1000
     snap.livePositions(Seq(t))
       .select(col("doc_id"), col("len"),
         size(filter(col("positions"), p => p < lit(end.toLong)))
           .cast("long").as("tf"))
-      .filter(col("tf") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfV) * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25RestrictedScores(idfV, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1631,7 +1580,6 @@ object TextAnalysis {
   def bm25SpanNotTopK(spark: SparkSession, root: String,
       include: String, exclude: String, dist: Int, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val inc = include.toLowerCase.trim
     val exc = exclude.toLowerCase.trim
     require(inc.nonEmpty && !inc.exists(_.isWhitespace) &&
@@ -1641,13 +1589,11 @@ object TextAnalysis {
       "span_not of a term against itself matches nothing by definition")
     require(dist >= 0, s"dist must be non-negative, got $dist")
     require(k >= 1, s"k must be positive, got $k")
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val snap = Bm25Snapshot(spark, root, asOf)
-    if (snap.isEmpty) return empty
+    if (snap.isEmpty) return emptyScores(spark)
     val st = snap.termStats(Seq(inc, exc))
-    if (!st.dfc.contains(inc)) return empty
+    if (!st.dfc.contains(inc)) return emptyScores(spark)
     val idfV = bm25Idf(st.nDocs, st.dfc, Seq(inc)).head._2
-    val avg1000 = st.avg1000
     val posts = snap.livePositions(Seq(inc, exc))
     val incPos = posts.filter(col("tok") === inc)
       .select(col("doc_id"), col("len"), col("positions").as("pos_a"))
@@ -1660,14 +1606,8 @@ object TextAnalysis {
             !exists(col("pos_b"), q =>
               abs(p - q) <= lit(dist.toLong)))))
           .cast("long").as("tf"))
-      .filter(col("tf") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfV) * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25RestrictedScores(idfV, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1685,35 +1625,26 @@ object TextAnalysis {
   def bm25SpanOrTopK(spark: SparkSession, root: String,
       terms: Seq[String], k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val ts = terms.map(_.toLowerCase.trim)
       .filter(t => t.nonEmpty && !t.exists(_.isWhitespace)).distinct
     require(ts.nonEmpty, "span_or needs at least one term")
     require(k >= 1, s"k must be positive, got $k")
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val snap = Bm25Snapshot(spark, root, asOf)
-    if (snap.isEmpty) return empty
+    if (snap.isEmpty) return emptyScores(spark)
     val st = snap.termStats(ts)
     val present = ts.filter(st.dfc.contains)
-    if (present.isEmpty) return empty
+    if (present.isEmpty) return emptyScores(spark)
     // the pseudo-term df: max member df (SynonymQuery — summing would
     // overcount docs holding several variants)
     val idfV = bm25Idf(st.nDocs,
       Map("__or__" -> present.map(st.dfc).max), Seq("__or__")).head._2
-    val avg1000 = st.avg1000
     snap.livePositions(present)
       .groupBy(col("doc_id"))
       .agg(first(col("len")).as("len"),
         size(array_distinct(flatten(collect_list(col("positions")))))
           .cast("long").as("tf"))
-      .filter(col("tf") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfV) * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25RestrictedScores(idfV, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1740,7 +1671,6 @@ object TextAnalysis {
   def bm25IntervalsTopK(spark: SparkSession, root: String,
       terms: Seq[String], ordered: Boolean, maxGaps: Int, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val ts = terms.map(_.toLowerCase.trim)
     require(ts.forall(t => t.nonEmpty && !t.exists(_.isWhitespace)),
       s"intervals terms must be single tokens, got $terms")
@@ -1751,15 +1681,14 @@ object TextAnalysis {
       "unordered intervals supported for the two-term rule")
     require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
     require(k >= 1, s"k must be positive, got $k")
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val snap = Bm25Snapshot(spark, root, asOf)
-    if (snap.isEmpty) return empty
+    if (snap.isEmpty) return emptyScores(spark)
     val st = snap.termStats(ts)
-    if (!ts.forall(st.dfc.contains)) return empty // every term REQUIRED
+    // every term REQUIRED
+    if (!ts.forall(st.dfc.contains)) return emptyScores(spark)
     // SpanNear weight: the member idfs sum into one pseudo-term idf
     val idfV = ts.map(t =>
       bm25Idf(st.nDocs, st.dfc, Seq(t)).head._2).sum
-    val avg1000 = st.avg1000
     val n = ts.size
     val agg = snap.livePositions(ts)
       .groupBy(col("doc_id"))
@@ -1789,14 +1718,8 @@ object TextAnalysis {
     agg
       .select(col("doc_id"), col("len"),
         size(filter(posOf(ts.head), anchorOk)).cast("long").as("tf"))
-      .filter(col("tf") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfV) * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25RestrictedScores(idfV, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -1928,7 +1851,6 @@ object TextAnalysis {
    */
   def bm25MoreLikeThis(spark: SparkSession, root: String,
       docText: String, maxQueryTerms: Int, k: Int): DataFrame = {
-    import spark.implicits._
     require(maxQueryTerms >= 1, "maxQueryTerms must be positive")
     val toks = docText.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).toSeq
@@ -1936,7 +1858,7 @@ object TextAnalysis {
     val tf = toks.groupBy(identity).map { case (t, o) => t -> o.size.toLong }
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(tf.keys.toSeq)
     val dfc = st.dfc
     // interestingness = tf(doc) · idf(corpus), both integers — terms
@@ -1948,7 +1870,7 @@ object TextAnalysis {
       .sortBy { case (t, s) => (-s, t) }
       .take(maxQueryTerms).map(_._1)
     if (picked.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     bm25TopKFrame(snap, picked, k)
   }
 
@@ -1984,27 +1906,18 @@ object TextAnalysis {
       queryText: String, k: Int, asOf: Option[String],
       minShouldMatch: Int, useMax: Boolean,
       afterCursor: Option[(Long, Long)] = None): DataFrame = {
-    import spark.implicits._
     val terms = queryTerms(queryText)
     require(minShouldMatch >= 1 && minShouldMatch <= terms.size,
       s"minimumShouldMatch $minShouldMatch out of [1, ${terms.size}]")
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(terms)
-    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
-    val contrib = snap.livePostings(terms)
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-    val scoreCol =
-      if (useMax) max(col("idf") * col("w"))
-      else sum(col("idf") * col("w"))
-    val scored = contrib
-      .groupBy(col("doc_id"))
-      .agg(scoreCol.as("score"), countDistinct(col("tok")).as("nt"))
+    val idf = bm25IdfFrame(spark, st.nDocs, st.dfc, terms)
+    val combine: Column => Column = if (useMax) max(_) else sum(_)
+    val scored = snap.livePostings(terms)
+      .transform(bm25SumScores(idf, st.avg1000,
+        Seq(countDistinct(col("tok")).as("nt")), combine = combine))
       .filter(col("nt") >= minShouldMatch)
       .select(col("doc_id"), col("score"))
     // search_after: strictly after the cursor in (score desc, doc_id
@@ -2015,8 +1928,7 @@ object TextAnalysis {
         col("score") < s || (col("score") === s && col("doc_id") > id))
     }
     paged
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -2037,12 +1949,9 @@ object TextAnalysis {
   def bm25ServeTopKBool(spark: SparkSession, root: String,
       mustText: String, shouldText: String, mustNotText: String,
       k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    def toks(s: String): Seq[String] = s.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
-    val must = toks(mustText)
-    val should = toks(shouldText).filterNot(must.contains)
-    val exTerms = toks(mustNotText)
+    val must = analyzeTerms(mustText)
+    val should = analyzeTerms(shouldText).filterNot(must.contains)
+    val exTerms = analyzeTerms(mustNotText)
     val scored = must ++ should
     require(scored.nonEmpty, "boolean query needs a MUST or SHOULD clause")
     require(scored.intersect(exTerms).isEmpty,
@@ -2050,14 +1959,13 @@ object TextAnalysis {
         "and prohibited — such a query matches nothing")
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(scored)
     val dfc = st.dfc
     // MUST decided from the dictionary alone, zero postings read
     if (!must.forall(dfc.contains))
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
-    val idf = bm25Idf(st.nDocs, dfc, scored.filter(dfc.contains))
-      .toDF("tok", "idf")
+      return emptyScores(spark)
+    val idf = bm25IdfFrame(spark, st.nDocs, dfc, scored.filter(dfc.contains))
     val alive = snap.livePostings(scored)
     // MUST_NOT: anti-join before the aggregate (the NOT serve's shape)
     val admitted =
@@ -2077,19 +1985,12 @@ object TextAnalysis {
       }
     val mustLit = typedLit(must)
     restricted
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"),
+      .transform(bm25SumScores(idf, st.avg1000, Seq(
         countDistinct(when(array_contains(mustLit, col("tok")), col("tok")))
-          .as("nm"))
+          .as("nm"))))
       .filter(col("nm") === must.size)
       .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -2107,14 +2008,12 @@ object TextAnalysis {
    */
   def bm25ServePhraseTopK(spark: SparkSession, root: String,
       phrase: String, k: Int): DataFrame = {
-    import spark.implicits._
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     phraseScoreFrame(snap, phrase)
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .getOrElse(emptyScores(spark))
+      .transform(topKByScore(k))
   }
 
   /** The phrase serve's pre-limit scoring frame `(doc_id, score)` —
@@ -2138,7 +2037,6 @@ object TextAnalysis {
     // bounds the SUMMED worst case, not the distinct one.
     val idfByTerm = bm25Idf(st.nDocs, st.dfc, terms).toMap
     val idfSum = terms.map(idfByTerm).sum
-    val avg1000 = st.avg1000
     val alive0 = snap.livePositions(distinctTerms)
     // rescore restriction: a BOUNDED id list (the rescore window)
     // pushed into the postings read as an isin literal — the phrase
@@ -2160,12 +2058,7 @@ object TextAnalysis {
     val inter = shifted.reduce((a, b) => array_intersect(a, b))
     Some(agg.select(col("doc_id"), size(inter).cast("long").as("tf"),
         col("len"))
-      .filter(col("tf") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfSum) * col("w")).as("score")))
+      .transform(bm25RestrictedScores(idfSum, st.avg1000)))
   }
 
   /**
@@ -2190,7 +2083,6 @@ object TextAnalysis {
    */
   def bm25ServePhrasePrefixTopK(spark: SparkSession, root: String,
       phrasePrefix: String, k: Int, maxExpansions: Int = 50): DataFrame = {
-    import spark.implicits._
     val terms = phrasePrefix.toLowerCase.trim.split("\\s+")
       .filter(_.nonEmpty).toSeq
     require(terms.length >= 2,
@@ -2200,24 +2092,23 @@ object TextAnalysis {
     val stem = terms.last
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     // ES max_expansions: the FIRST maxExpansions terms in dictionary
     // order (deterministic; the budgeted band scan already bounds it)
     val expansion = expandPrefixTerms(snap, stem)
       .toSeq.sortBy(_._1).take(maxExpansions)
     if (expansion.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val expToks = expansion.map(_._1)
     val distinctFixed = fixed.distinct
     val st = snap.termStats(distinctFixed)
     if (!distinctFixed.forall(st.dfc.contains)) // absent fixed token
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     // idf: fixed positions by their own df; the expanded position as
     // one pseudo-term at the max member df
     val lastKey = s"$stem*"
     val dfAll = st.dfc + (lastKey -> expansion.map(_._2).max)
     val idfByPos = bm25Idf(st.nDocs, dfAll, fixed :+ lastKey).toMap
-    val avg1000 = st.avg1000
     val idfSum = (fixed :+ lastKey).map(idfByPos).sum
     // key set deduped: a fixed token can itself match the stem
     // ("sort so*") — a duplicate key would duplicate postings rows
@@ -2246,14 +2137,8 @@ object TextAnalysis {
       array_intersect(a, b))
     agg.select(col("doc_id"), size(inter).cast("long").as("tf"),
         col("len"))
-      .filter(col("tf") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfSum) * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25RestrictedScores(idfSum, st.avg1000))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -2540,12 +2425,110 @@ object TextAnalysis {
     dead.size
   }
 
-  /** The distinct lowercased terms of a whitespace-tokenized query. */
+  /** The lowercased whitespace tokens of a query, in order, repeats kept. */
+  private def queryTokens(queryText: String): Seq[String] =
+    queryText.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSeq
+
+  /** The distinct lowercased terms of a whitespace-tokenized query, which
+    * may be empty: clauses that can be left out check it themselves. */
+  private def analyzeTerms(text: String): Seq[String] =
+    queryTokens(text).distinct
+
+  /** [[analyzeTerms]] of a query that needs at least one term. */
   private def queryTerms(queryText: String): Seq[String] = {
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).distinct.toSeq
+    val terms = analyzeTerms(queryText)
     require(terms.nonEmpty, "empty query")
     terms
+  }
+
+  // ——— The BM25 scoring kernel: every index serve scores through the
+  // helpers below, the way every Lucene query's Weight calls one
+  // Similarity.SimScorer ———
+
+  /** k1 = 1.2 and b = 0.75 in thousandths — the only place they are
+    * written. */
+  private val Bm25K1x1000 = 1200L
+  private val Bm25Bx1000 = 750L
+  /** w's fixed-point scale. */
+  private val Bm25WScale = 10000L
+
+  /**
+   * The integer BM25 weight, added as columns `norm1000` and `w` to a
+   * frame carrying `len` and a term frequency column `tf`. For tf
+   * occurrences in a document of len tokens, over segments whose mean
+   * document length is avg1000 / 1000 tokens:
+   *
+   *   norm1000 = 250 + (750 · len · 1000) div avg1000
+   *            = ⌊1000 · (1 − b + b · len / avgdl)⌋
+   *   w = (tf · 2200 · 10000) div (tf · 1000 + (1200 · norm1000) div 1000)
+   *     = ⌊10⁴ · tf · (k1 + 1) / (tf + k1 · norm)⌋
+   *
+   * and a document scores Σ idf · w over its matched query terms, idf
+   * from [[bm25Idf]]. All integer, so every served score replays
+   * exactly. Two references check this kernel independently:
+   * [[bm25TopK]], which scores the raw corpus with its own copy of the
+   * formula, and the board's DuckDB oracles (`SparkEntry.oracleSql`),
+   * which restate it in SQL. With `tfPerMille` the tf column counts
+   * thousandths of an occurrence (the sloppy phrase's
+   * proximity-weighted tf) and w is the same weight of tf / 1000.
+   */
+  private def withBm25Weight(avg1000: Long, tf: String = "tf",
+      tfPerMille: Boolean = false)(df: DataFrame): DataFrame = {
+    val k1p1 = Bm25K1x1000 + 1000
+    val (num, den) =
+      if (tfPerMille) (s"$tf * $k1p1 * ${Bm25WScale / 1000}", tf)
+      else (s"$tf * $k1p1 * $Bm25WScale", s"$tf * 1000")
+    df.withColumn("norm1000", lit(1000L - Bm25Bx1000) +
+        expr(s"($Bm25Bx1000 * len * 1000) div $avg1000"))
+      .withColumn("w",
+        expr(s"($num) div ($den + ($Bm25K1x1000 * norm1000) div 1000)"))
+  }
+
+  /** The scalar twin of [[withBm25Weight]] for one (tf, len) — MaxScore's
+    * per-term impact upper bounds. */
+  private def bm25W(tf: Long, len: Long, avg1000: Long): Long = {
+    val norm1000 = (1000L - Bm25Bx1000) + (Bm25Bx1000 * len * 1000L) / avg1000
+    (tf * (Bm25K1x1000 + 1000L) * Bm25WScale) /
+      (tf * 1000L + (Bm25K1x1000 * norm1000) / 1000L)
+  }
+
+  /** Postings scored and summed per group: `idf` broadcast-joined on
+    * `on`, the weight, then one aggregate of `combine(idf · w)` as
+    * `score` beside the `extra` aggregates, grouped by `keys`. */
+  private def bm25SumScores(idf: DataFrame, avg1000: Long,
+      extra: Seq[Column] = Nil, keys: Seq[String] = Seq("doc_id"),
+      on: String = "tok", combine: Column => Column = c => sum(c))
+      (posts: DataFrame): DataFrame =
+    posts.join(broadcast(idf), on)
+      .transform(withBm25Weight(avg1000))
+      .groupBy(keys.map(col): _*)
+      .agg(combine(col("idf") * col("w")).as("score"), extra: _*)
+
+  /** Restricted-tf scoring (span, intervals and phrase serves): docs
+    * whose restricted `tf` is positive, each scored `idf · w` as one
+    * pseudo-term. */
+  private def bm25RestrictedScores(idf: Long, avg1000: Long,
+      tf: String = "tf", tfPerMille: Boolean = false)
+      (tfs: DataFrame): DataFrame =
+    tfs.filter(col(tf) > 0)
+      .transform(withBm25Weight(avg1000, tf, tfPerMille))
+      .select(col("doc_id"), (lit(idf) * col("w")).as("score"))
+
+  /** [[bm25Idf]] as a broadcastable `(tok, idf)` frame. */
+  private def bm25IdfFrame(spark: SparkSession, nDocs: Long,
+      dfc: Map[String, Long], terms: Seq[String]): DataFrame = {
+    import spark.implicits._
+    bm25Idf(nDocs, dfc, terms).toDF("tok", "idf")
+  }
+
+  /** The top `k` rows in the serves' total order (score desc, doc_id). */
+  private def topKByScore(k: Int)(scores: DataFrame): DataFrame =
+    scores.orderBy(col("score").desc, col("doc_id")).limit(k)
+
+  /** The empty `(doc_id, score)` result. */
+  private def emptyScores(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("doc_id", "score")
   }
 
   /** Dictionary statistics for a term set, summed over a snapshot's
@@ -2650,6 +2633,15 @@ object TextAnalysis {
       if (isEmpty) Seq.empty[Long].toDF("doc_id")
       else livePostings(terms).select(col("doc_id")).distinct()
 
+    /** The match set of `terms` (see [[matchedDocIds]]) joined on doc_id
+      * to the doc values, projected first to doc_id and `cols` when any
+      * are given — the input of every aggregation over a query's hits. */
+    def hits(terms: Seq[String], cols: Column*): DataFrame =
+      matchedDocIds(terms).join(
+        if (cols.isEmpty) docValues
+        else docValues.select(col("doc_id") +: cols: _*),
+        Seq("doc_id"))
+
     /** The doc-values sidecar as one relation (all segments unioned) —
       * raises when the index was built without `docValueCols`. Filtered
       * serves scan it with the structured predicate pushed down to
@@ -2716,14 +2708,10 @@ object TextAnalysis {
   /** [[bm25ScoreFrame]]'s top-k — the plain disjunctive serve on a
     * resolved snapshot. */
   private def bm25TopKFrame(snap: Bm25Snapshot, terms: Seq[String],
-      k: Int): DataFrame = {
-    val spark = snap.spark
-    import spark.implicits._
+      k: Int): DataFrame =
     bm25ScoreFrame(snap, terms)
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-  }
+      .getOrElse(emptyScores(snap.spark))
+      .transform(topKByScore(k))
 
   /**
    * BM25 top-k with QUERY-TIME synonym expansion (VERDICT r17 #5) — the
@@ -2762,9 +2750,8 @@ object TextAnalysis {
     val members = groups.flatMap(_._2).distinct
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(members)
-    val avg1000 = st.avg1000
     // group df = max member df (SynonymQuery's blend)
     val dfGroup = groups.map { case (g, ms) =>
       g -> ms.map(m => st.dfc.getOrElse(m, 0L)).max
@@ -2778,15 +2765,8 @@ object TextAnalysis {
       // doc's (identical on every one of its postings rows)
       .groupBy(col("doc_id"), col("grp"))
       .agg(sum(col("tf")).as("tf"), max(col("len")).as("len"))
-      .join(broadcast(idf), "grp")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25SumScores(idf, st.avg1000, on = "grp"))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -2802,12 +2782,9 @@ object TextAnalysis {
    */
   private[graft] def bm25ScoreFrame(snap: Bm25Snapshot, terms: Seq[String],
       candidateFilter: Option[DataFrame] = None): Option[DataFrame] = {
-    val spark = snap.spark
-    import spark.implicits._
     if (snap.isEmpty) return None // empty manifest (all compacted away)
     val st = snap.termStats(terms)
-    val avg1000 = st.avg1000
-    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val idf = bm25IdfFrame(snap.spark, st.nDocs, st.dfc, terms)
     val alive = snap.livePostings(terms)
     // filter context: the predicate joins the CANDIDATE set (the query
     // terms' postings), never the corpus — and it lands before the
@@ -2817,14 +2794,7 @@ object TextAnalysis {
       case Some(pass) =>
         alive.join(pass.select(col("doc_id")), Seq("doc_id"), "left_semi")
     }
-    Some(filtered
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score")))
+    Some(filtered.transform(bm25SumScores(idf, st.avg1000)))
   }
 
   /** The index's doc-values sidecar as one relation — see
@@ -2848,15 +2818,13 @@ object TextAnalysis {
   def bm25ServeTopKFiltered(spark: SparkSession, root: String,
       queryText: String, filterSql: String, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val terms = queryTerms(queryText)
     require(filterSql.trim.nonEmpty, "empty filter — use bm25ServeTopK")
     val snap = Bm25Snapshot(spark, root, asOf)
     val pass = snap.docValues.filter(expr(filterSql))
     bm25ScoreFrame(snap, terms, candidateFilter = Some(pass))
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .getOrElse(emptyScores(spark))
+      .transform(topKByScore(k))
   }
 
   /**
@@ -2885,7 +2853,6 @@ object TextAnalysis {
       mode: String = "best_fields", tieBreaker1000: Long = 0L,
       asOf: Option[String] = None,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
     require(fields.nonEmpty, "no fields")
     require(mode == "best_fields" || mode == "most_fields",
       s"unknown multi_match mode '$mode'")
@@ -2899,7 +2866,7 @@ object TextAnalysis {
           expr(s"(score * $boost1000) div 1000").as("fscore")))
     }
     if (frames.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val perField = frames.reduce(_.unionByName(_))
     val combined = mode match {
       case "most_fields" =>
@@ -2911,7 +2878,7 @@ object TextAnalysis {
           .select(col("doc_id"), (col("best") +
             expr(s"((tot - best) * $tieBreaker1000) div 1000")).as("score"))
     }
-    combined.orderBy(col("score").desc, col("doc_id")).limit(k)
+    combined.transform(topKByScore(k))
   }
 
   /**
@@ -2947,7 +2914,6 @@ object TextAnalysis {
       fields: Seq[(String, Long)], queryText: String, k: Int,
       asOf: Option[String] = None,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
     require(fields.nonEmpty, "no fields")
     val terms = queryTerms(queryText)
     // per-field dictionary pass: stats scalars + per-term df
@@ -2956,11 +2922,11 @@ object TextAnalysis {
       if (snap.isEmpty) None else Some((snap, boost1000, snap.termStats(terms)))
     }
     if (stats.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val nBlend = stats.map(_._3.nDocs).max
     val dfBlend = terms.map(t =>
       t -> math.min(stats.map(_._3.dfc.getOrElse(t, 0L)).sum, nBlend)).toMap
-    val idf = bm25Idf(nBlend, dfBlend, terms).toDF("tok", "idf")
+    val idf = bm25IdfFrame(spark, nBlend, dfBlend, terms)
     // per-field boosted (doc, term) weights over the candidates only
     val perField = stats.map { case (snap, boost1000, st) =>
       val alive = snap.livePostings(terms)
@@ -2970,10 +2936,7 @@ object TextAnalysis {
           alive.join(pass.select(col("doc_id")), Seq("doc_id"), "left_semi")
       }
       filtered
-        .withColumn("norm1000",
-          lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-        .withColumn("w",
-          expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
+        .transform(withBm25Weight(st.avg1000))
         .select(col("doc_id"), col("tok"),
           expr(s"(w * $boost1000) div 1000").as("wb"))
     }.reduce(_.unionByName(_))
@@ -2983,8 +2946,7 @@ object TextAnalysis {
       .join(broadcast(idf), "tok")
       .groupBy(col("doc_id"))
       .agg(sum(col("idf") * col("wt")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /** What a MaxScore serve actually did — read via [[lastMaxScoreAudit]]
@@ -2996,13 +2958,6 @@ object TextAnalysis {
       suffixRowsTotal: Long, suffixRowsScored: Long)
   @volatile private[graft] var auditMaxScore: Boolean = false
   @volatile private[graft] var lastMaxScoreAudit: Option[MaxScoreAudit] = None
-
-  /** The exact integer BM25 term weight for one (tf, len) — the scalar
-    * twin of the scoring SQL, used for per-term impact upper bounds. */
-  private def bm25W(tf: Long, len: Long, avg1000: Long): Long = {
-    val norm1000 = 250L + (750L * len * 1000L) / avg1000
-    (tf * 2200L * 10000L) / (tf * 1000L + (1200L * norm1000) / 1000L)
-  }
 
   /**
    * BM25 top-k serve with MaxScore-style early termination (Turtle &
@@ -3047,7 +3002,7 @@ object TextAnalysis {
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(terms)
     val avg1000 = st.avg1000
     val termRows = st.rows
@@ -3067,15 +3022,8 @@ object TextAnalysis {
     }
     val ordered = present.sortBy(t => (-ub(t), t))
     def scored(posts: DataFrame, ts: Seq[String]): DataFrame =
-      posts.join(broadcast(
-          ts.map(t => (t, idfMap(t))).toDF("tok", "idf")), "tok")
-        .withColumn("norm1000",
-          lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-        .withColumn("w",
-          expr("(tf * 2200 * 10000) div " +
-            "(tf * 1000 + (1200 * norm1000) div 1000)"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("idf") * col("w")).as("score"))
+      posts.transform(bm25SumScores(
+        ts.map(t => (t, idfMap(t))).toDF("tok", "idf"), avg1000))
     // ONE readKeys relation for all terms (identical bucket list to the
     // full serve); prefix/suffix branches are tok-filters over it, which
     // PUSH DOWN to the parquet scan — each branch reads only its terms'
@@ -3118,8 +3066,7 @@ object TextAnalysis {
       // semi-join cuts them BEFORE the scoring aggregate's shuffle,
       // which is where the saving lands at scale
       materialize(scored(prefixPosts.unionByName(restricted), ordered)
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(k))
+        .transform(topKByScore(k)))
     }
     try {
       // STATS-ONLY prune certificate, zero probe jobs (the sf0.1/sf10
@@ -3142,7 +3089,7 @@ object TextAnalysis {
           lastMaxScoreAudit = Some(MaxScoreAudit(ordered.size,
             ordered.size, pruned = false, 0L, 0L, 0L, 0L, 0L))
         return materialize(scored(all, ordered)
-          .orderBy(col("score").desc, col("doc_id")).limit(k))
+          .transform(topKByScore(k)))
       }
       // Tombstone guard: dfc counts BUILD-time docs, so with deletes the
       // "df(t1) ≥ k" certificate could over-count — if fewer than k LIVE
@@ -3173,7 +3120,7 @@ object TextAnalysis {
         if (suffUb < prefix.map(ub).sum) {
           val topPartial = scored(
               all.filter(col("tok").isin(prefix: _*)), prefix)
-            .orderBy(col("score").desc, col("doc_id")).limit(k).collect()
+            .transform(topKByScore(k)).collect()
           if (topPartial.length == k && suffUb < topPartial.last.getLong(1))
             return pruned(prefix, suffix, topPartial.last.getLong(1), suffUb)
         }
@@ -3185,7 +3132,7 @@ object TextAnalysis {
       // exact fallback over the same cached read — bm25ServeTopK's
       // arithmetic verbatim, no second index probe
       materialize(scored(all, ordered)
-        .orderBy(col("score").desc, col("doc_id")).limit(k))
+        .transform(topKByScore(k)))
     } finally ()
   }
 
@@ -3205,37 +3152,27 @@ object TextAnalysis {
       queries: Seq[(Long, String)], k: Int): DataFrame = {
     import spark.implicits._
     require(queries.nonEmpty, "empty batch")
-    val qTerms: Seq[(Long, String)] = queries.flatMap { case (qid, txt) =>
-      txt.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).distinct
-        .map(t => (qid, t))
-    }
-    val allTerms = qTerms.map(_._2).distinct
+    val allTerms = queries.flatMap { case (_, txt) => analyzeTerms(txt) }
+      .distinct
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
       return Seq.empty[(Long, Int, Long, Long)]
         .toDF("query_id", "rank", "doc_id", "score")
     val st = snap.termStats(allTerms)
-    val avg1000 = st.avg1000
     // idf through the large-N guard PER QUERY: ranks are windowed per
     // query, so a per-query shift (almost always 0) preserves each
     // query's ordering independently
     val qt = queries.flatMap { case (qid, txt) =>
-      val ts = txt.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
-        .distinct.toSeq
-      bm25Idf(st.nDocs, st.dfc, ts).map { case (t, v) => (qid, t, v) }
+      bm25Idf(st.nDocs, st.dfc, analyzeTerms(txt))
+        .map { case (t, v) => (qid, t, v) }
     }.toDF("query_id", "tok", "idf")
     val alive = snap.livePostings(allTerms)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
     alive
-      .join(broadcast(qt), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("idf") * col("w")).as("score"))
+      .transform(bm25SumScores(qt, st.avg1000,
+        keys = Seq("query_id", "doc_id")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
@@ -3342,20 +3279,18 @@ object TextAnalysis {
    */
   def bm25ServeSloppyPhraseTopK(spark: SparkSession, root: String,
       termA: String, termB: String, slop: Int, k: Int): DataFrame = {
-    import spark.implicits._
     val a = termA.toLowerCase.trim; val b = termB.toLowerCase.trim
     require(a.nonEmpty && b.nonEmpty && a != b,
       "sloppy phrase needs two distinct terms")
     require(slop >= 0, s"negative slop $slop")
     val snap = Bm25Snapshot(spark, root)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val st = snap.termStats(Seq(a, b))
     if (!Seq(a, b).forall(st.dfc.contains))
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val idfByTerm = bm25Idf(st.nDocs, st.dfc, Seq(a, b)).toMap
     val idfSum = idfByTerm(a) + idfByTerm(b)
-    val avg1000 = st.avg1000
     val agg = snap.livePositions(Seq(a, b)).groupBy(col("doc_id"))
       .agg(collect_list(struct(col("tok"), col("positions"))).as("tp"),
         max(col("len")).as("len"))
@@ -3371,14 +3306,9 @@ object TextAnalysis {
         filter(lb, q => q > p && q - p <= lit(slop.toLong + 1L)),
         lit(0L), (acc2, q) => acc2 + (lit(1000L) / (q - p)).cast("long")))
     agg.select(col("doc_id"), tf1e3.as("tf1e3"), col("len"))
-      .filter(col("tf1e3") > 0)
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div $avg1000"))
-      .withColumn("w",
-        expr("(tf1e3 * 2200 * 10) div (tf1e3 + (1200 * norm1000) div 1000)"))
-      .select(col("doc_id"), (lit(idfSum) * col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(bm25RestrictedScores(idfSum, st.avg1000, tf = "tf1e3",
+        tfPerMille = true))
+      .transform(topKByScore(k))
   }
 
   def nearServeCount(spark: SparkSession, root: String,
@@ -4085,9 +4015,6 @@ object TextAnalysis {
     require(cuts.nonEmpty && cuts == cuts.sorted && cuts.distinct == cuts,
       s"range cuts must be ascending and distinct, got $cuts")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol))
     // descending when-chain: first cut ≤ value wins
     val lastKey = s"${cuts.last}-*"
     val bucket = cuts.init.zip(cuts.tail).reverse
@@ -4096,7 +4023,7 @@ object TextAnalysis {
           acc.when(col(valueCol) >= lo, lit(s"$lo-$hi"))
       }
       .otherwise(lit(s"*-${cuts.head}"))
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), col(valueCol))
       .groupBy(bucket.as("bucket"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .orderBy(col("bucket"))
@@ -4118,9 +4045,6 @@ object TextAnalysis {
       cutsMs.distinct == cutsMs,
       s"date_range cuts must be ascending and distinct, got $cutsMs")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), unix_millis(col(tsCol)).as("__ms"))
     val lastKey = s"${cutsMs.last}-*"
     val bucket = cutsMs.init.zip(cutsMs.tail).reverse
       .foldLeft(when(col("__ms") >= cutsMs.last, lit(lastKey))) {
@@ -4128,7 +4052,7 @@ object TextAnalysis {
           acc.when(col("__ms") >= lo, lit(s"$lo-$hi"))
       }
       .otherwise(lit(s"*-${cutsMs.head}"))
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), unix_millis(col(tsCol)).as("__ms"))
       .groupBy(bucket.as("bucket"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .orderBy(col("bucket"))
@@ -4152,9 +4076,7 @@ object TextAnalysis {
         "(one source is the plain terms aggregation)")
     require(k >= 1, s"k must be positive, got $k")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-    val keyed = matched.join(vals, Seq("doc_id"))
+    val keyed = snap.hits(queryTerms(queryText))
       .select(col("doc_id") +: facets.map { case (a, e) =>
         expr(e).as(a) }: _*)
     keyed.groupBy(facets.map { case (a, _) => col(a) }: _*)
@@ -4179,9 +4101,7 @@ object TextAnalysis {
     require(maxDocCount >= 1,
       s"max_doc_count must be positive, got $maxDocCount")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText))
       .groupBy(expr(valueExpr).as("value"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") <= maxDocCount)
@@ -4206,11 +4126,8 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     require(interval > 0, s"interval must be positive, got $interval")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol))
     val v = col(valueCol).cast("long")
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), col(valueCol))
       .groupBy((v - pmod(v, lit(interval))).as("bucket"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .orderBy(col("bucket"))
@@ -4278,9 +4195,6 @@ object TextAnalysis {
         throw new IllegalArgumentException(
           s"unknown time_zone '$timeZone'", e) }
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(tsCol))
     // bucket key: shift by -offset, to the target wall clock,
     // truncate, back to the instant, shift by +offset — every step a
     // codegen'd built-in. `date_trunc` truncates the SESSION-timezone
@@ -4304,7 +4218,7 @@ object TextAnalysis {
         date_trunc(calendarInterval, wallInSession), sessionTz)
       unix_millis(to_utc_timestamp(truncated, timeZone)) + offsetMillis
     }
-    val counts = matched.join(vals, Seq("doc_id"))
+    val counts = snap.hits(queryTerms(queryText), col(tsCol))
       .groupBy(bucketOf(col(tsCol)).as("bucket_ms"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
     extendedBounds match {
@@ -4386,13 +4300,10 @@ object TextAnalysis {
     require(targetBuckets >= 1,
       s"target bucket count must be positive, got $targetBuckets")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(tsCol))
     // ONE match probe + docvals join feeds both the ladder counts and
     // the chosen histogram (two actions — persist MEMORY_ONLY, the
     // LRU-droppable tier, instead of re-probing postings; review r19)
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText), col(tsCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     // ladder counts: 7 countDistincts in one aggregate DO Expand the
     // (column-pruned) match set ×7 — examined r22 against a two-level
@@ -4491,7 +4402,7 @@ object TextAnalysis {
       return Seq.empty[(String, Long, Long, Long, Long, Long, Long, Long)]
         .toDF("tok", "tf", "dfc", "idf", "len", "norm1000", "w", "contrib")
     val st = snap.termStats(terms)
-    val idf = bm25Idf(st.nDocs, st.dfc, terms).toDF("tok", "idf")
+    val idf = bm25IdfFrame(spark, st.nDocs, st.dfc, terms)
     val dfcDf = st.dfc.toSeq.toDF("tok", "dfc")
     require(!snap.dead.contains(docId),
       s"doc $docId is tombstoned — a deleted doc has no score to explain")
@@ -4499,10 +4410,7 @@ object TextAnalysis {
       .filter(col("doc_id") === docId)
       .join(broadcast(dfcDf), "tok")
       .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
+      .transform(withBm25Weight(st.avg1000))
       .select(col("tok"), col("tf"), col("dfc"), col("idf"), col("len"),
         col("norm1000"), col("w"), (col("idf") * col("w")).as("contrib"))
       .orderBy(col("tok"))
@@ -4528,9 +4436,7 @@ object TextAnalysis {
     require(filters.forall(f => !f._1.contains("&")),
       "filter names may not contain '&' (the intersection-key separator)")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText))
     val sorted = filters.sortBy(_._1)
     val cells: Seq[(String, Column)] =
       sorted.map { case (n, p) => (n, expr(p)) } ++
@@ -4564,10 +4470,7 @@ object TextAnalysis {
       queryText: String, valueCol: String,
       asOf: Option[String] = None): DataFrame = {
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol))
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), col(valueCol))
       .agg(countDistinct(col(valueCol)).as("n_values"))
   }
 
@@ -4590,9 +4493,7 @@ object TextAnalysis {
     require(filters.map(_._1).distinct.size == filters.size,
       "duplicate filter names")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText))
     val counts = filters.map { case (name, pred) =>
       sum(when(expr(pred), 1L).otherwise(0L)).as(name)
     }
@@ -4627,10 +4528,7 @@ object TextAnalysis {
     after.foreach(a => require(a.length == sources.length,
       s"after key arity ${a.length} != sources arity ${sources.length}"))
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id") +: sources.map(col): _*)
-    val buckets = matched.join(vals, Seq("doc_id"))
+    val buckets = snap.hits(queryTerms(queryText), sources.map(col): _*)
       .groupBy(sources.map(col): _*) // native key types (order matters)
       .agg(countDistinct(col("doc_id")).as("n_docs"))
     // after cursor: strictly greater in the sources' lexicographic
@@ -4683,11 +4581,8 @@ object TextAnalysis {
       asOf: Option[String]): DataFrame = {
     require(interval > 0, s"interval must be positive, got $interval")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     val v = col("__v")
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), col(valueCol).cast("long").as("__v"))
       .groupBy((v - pmod(v, lit(interval))).as("bucket"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         sum(col("__v")).as("sum_v"),
@@ -4762,10 +4657,7 @@ object TextAnalysis {
   def bm25StatsAgg(spark: SparkSession, root: String, queryText: String,
       valueCol: String, asOf: Option[String] = None): DataFrame = {
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), col(valueCol).cast("long").as("__v"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         sum(col("__v")).as("sum_v"),
         min(col("__v")).as("min_v"),
@@ -4788,14 +4680,12 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // Σv² aggregates as DECIMAL(38,0): a plain Long sum wraps silently
     // for |v| ≳ 3e9 or large Σv² (review r20) — decimal keeps the
     // BigInt exactness claim true INSIDE the aggregate, not just after
     // the driver-side head()
-    val row = matched.join(vals, Seq("doc_id"))
+    val row = snap.hits(queryTerms(queryText),
+        col(valueCol).cast("long").as("__v"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("__v").cast("decimal(38,0)")).as("s"),
         sum(expr("CAST(__v AS DECIMAL(38,0)) * __v")).as("ss"),
@@ -5029,12 +4919,10 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // persisted across the rank-probe's three actions (count, min/max
     // + bucket counts, probe); MEMORY_ONLY — the LRU-droppable tier
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText),
+        col(valueCol).cast("long").as("__v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     // n, min, max in ONE action — min/max ARE ranks 1 and n of the
     // (value, doc_id) order, so only the quartiles need the rank probe
@@ -5069,13 +4957,11 @@ object TextAnalysis {
       valueCol: String, asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // persisted across the two rank probes (count + 2×(min/max +
     // counts + probe) — all actions over one probe frame; MEMORY_ONLY,
     // the LRU-droppable tier, the collapse-serve precedent)
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText),
+        col(valueCol).cast("long").as("__v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     // n + the first probe's (min, max) in ONE action (cache-fill job);
     // the deviation probe derives its own span (|v−med| min/max is not
@@ -5133,8 +5019,7 @@ object TextAnalysis {
     scored.join(vals, Seq("doc_id"))
       .withColumn("__kr", row_number().over(perKey))
       .filter(col("__kr") <= maxPerValue)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(shardSize)
+      .transform(topKByScore(shardSize))
       .groupBy(col(diversifyCol))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .orderBy(col(diversifyCol))
@@ -5154,11 +5039,8 @@ object TextAnalysis {
       asOf: Option[String] = None): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(facetCol),
+    snap.hits(queryTerms(queryText), col(facetCol),
         col(valueCol).cast("long").as("__v"))
-    matched.join(vals, Seq("doc_id"))
       .groupBy(col(facetCol))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         expr("(sum(__v) * 1000) div count(__v)").as("avg_1000"))
@@ -5207,9 +5089,7 @@ object TextAnalysis {
       queryText: String, valueExpr: String, weightExpr: String,
       asOf: Option[String] = None): DataFrame = {
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText))
       .select(expr(valueExpr).cast("long").as("__v"),
         expr(weightExpr).cast("long").as("__w"))
       .agg(sum(expr("__v * __w")).as("__vw"), sum(col("__w")).as("__sw"))
@@ -5232,9 +5112,7 @@ object TextAnalysis {
     require(metricCols.nonEmpty, "top_metrics needs at least one metric")
     require(k >= 1, s"k must be positive, got $k")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText))
       .select(col("doc_id") +: col(sortCol) +: metricCols.map(col): _*)
       .orderBy(col(sortCol).desc, col("doc_id"))
       .limit(k)
@@ -5300,14 +5178,13 @@ object TextAnalysis {
       queryText: String, factor1000Sql: String, k: Int,
       boostMode: String = "multiply",
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(boostMode == "multiply" || boostMode == "sum",
       s"unknown boost_mode '$boostMode' (multiply | sum)")
     require(factor1000Sql.trim.nonEmpty, "empty factor expression")
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     val scored = bm25ScoreFrame(snap, terms) match {
-      case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      case None => return emptyScores(spark)
       case Some(f) => f
     }
     val vals = snap.docValues
@@ -5321,8 +5198,7 @@ object TextAnalysis {
     }
     scored.join(vals, Seq("doc_id"))
       .select(col("doc_id"), boosted.as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -5342,14 +5218,13 @@ object TextAnalysis {
   def bm25DistanceFeatureTopK(spark: SparkSession, root: String,
       queryText: String, valueSql: String, origin: Long, pivot: Long,
       boost1000: Long, k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(pivot > 0, s"pivot must be positive, got $pivot")
     require(boost1000 >= 0, s"boost must be non-negative, got $boost1000")
     require(k >= 1, s"k must be positive, got $k")
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     val scored = bm25ScoreFrame(snap, terms) match {
-      case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      case None => return emptyScores(spark)
       case Some(f) => f
     }
     val vals = snap.docValues
@@ -5359,8 +5234,7 @@ object TextAnalysis {
         (col("score") +
           expr(s"(${boost1000}L * ${pivot}L) div " +
             s"(${pivot}L + abs(__v - ${origin}L))")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -5377,19 +5251,17 @@ object TextAnalysis {
   def bm25SearchAfterTopK(spark: SparkSession, root: String,
       queryText: String, afterScore: Long, afterDocId: Long, k: Int,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     val scored = bm25ScoreFrame(snap, terms) match {
-      case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      case None => return emptyScores(spark)
       case Some(f) => f
     }
     scored
       .filter(col("score") < afterScore ||
         (col("score") === afterScore && col("doc_id") > afterDocId))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -5407,14 +5279,13 @@ object TextAnalysis {
   def bm25RankFeatureTopK(spark: SparkSession, root: String,
       queryText: String, featureSql: String, pivot: Long,
       boost1000: Long, k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(pivot > 0, s"pivot must be positive, got $pivot")
     require(boost1000 >= 0, s"boost must be non-negative, got $boost1000")
     require(k >= 1, s"k must be positive, got $k")
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     val scored = bm25ScoreFrame(snap, terms) match {
-      case None => return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      case None => return emptyScores(spark)
       case Some(f) => f
     }
     val vals = snap.docValues
@@ -5425,8 +5296,7 @@ object TextAnalysis {
         (col("score") +
           expr(s"(${boost1000}L * __v) div (__v + ${pivot}L)"))
           .as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -5448,24 +5318,22 @@ object TextAnalysis {
       likeText: String, maxQueryTerms: Int, k: Int,
       minTermFreq: Int = 1, minDocFreq: Int = 1,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(maxQueryTerms >= 1,
       s"max_query_terms must be positive, got $maxQueryTerms")
     require(minTermFreq >= 1 && minDocFreq >= 1,
       s"min_term_freq/min_doc_freq must be positive, got " +
         s"$minTermFreq/$minDocFreq")
     require(k >= 1, s"k must be positive, got $k")
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val tf: Map[String, Long] = likeText.toLowerCase.trim
       .split("\\s+").filter(_.nonEmpty)
       .groupBy(identity).map { case (t, os) => t -> os.length.toLong }
       .filter(_._2 >= minTermFreq)
-    if (tf.isEmpty) return empty
+    if (tf.isEmpty) return emptyScores(spark)
     // the snapshot's dictionary probe carries the per-segment stats-row
     // corruption guard a hand-rolled readKeys would drop (review r20 #5:
     // a missing stats row must fail loud, not silently skew every idf)
     val snap = Bm25Snapshot(spark, root, asOf)
-    if (snap.isEmpty) return empty
+    if (snap.isEmpty) return emptyScores(spark)
     val st = snap.termStats(tf.keys.toSeq)
     val nDocs = st.nDocs
     val dfc = st.dfc.filter(_._2 >= minDocFreq)
@@ -5476,12 +5344,11 @@ object TextAnalysis {
       }
       .sortBy { case (t, interest) => (-interest, t) }
       .take(maxQueryTerms).map(_._1)
-    if (selected.isEmpty) return empty
+    if (selected.isEmpty) return emptyScores(spark)
     bm25ScoreFrame(snap, selected.sorted) match {
-      case None => empty
+      case None => emptyScores(spark)
       case Some(f) => f
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(k)
+        .transform(topKByScore(k))
     }
   }
 
@@ -5499,18 +5366,16 @@ object TextAnalysis {
       docs: DataFrame, idCol: String, textCol: String, docId: Long,
       maxQueryTerms: Int, k: Int, minTermFreq: Int = 1,
       minDocFreq: Int = 1, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val row = docs.filter(col(idCol) === docId)
       .select(col(textCol)).limit(1).collect()
     if (row.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     bm25MoreLikeThisTopK(spark, root, row.head.getString(0),
       maxQueryTerms, k + 1, minTermFreq, minDocFreq, asOf)
       .filter(col("doc_id") =!= docId)
       // re-pin the order: a bare limit after filter carries no
       // ordering guarantee (the frame is ≤ k+1 rows — trivial sort)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -5592,10 +5457,8 @@ object TextAnalysis {
     import spark.implicits._
     require(probes.nonEmpty, "percentile_ranks needs at least one value")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText),
+        col(valueCol).cast("long").as("__v"))
     val aggs = count(lit(1)).cast("long").as("__n") +:
       probes.distinct.sorted.zipWithIndex.map { case (p, i) =>
         sum(when(col("__v") <= p, 1L).otherwise(0L)).as(s"__le_$i")
@@ -5642,7 +5505,6 @@ object TextAnalysis {
       originLon >= -180 && originLon <= 180,
       s"origin out of range: ($originLat, $originLon)")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
     // sphere model (haversine, R = 6371 km): a point within distance d
     // satisfies |Δlat| ≤ degrees(d/R) EXACTLY; the longitude extent is
     // asin(sin(d/R)/cos φ) ≤ degrees(d/R)/cos(φ_worst) for the worst
@@ -5672,10 +5534,8 @@ object TextAnalysis {
           else col(lonCol) >= lo && col(lonCol) <= hi
         latPred && lonPred
       }
-    val vals = snap.docValues
-      .select(col("doc_id"), col(latCol), col(lonCol))
+    snap.hits(queryTerms(queryText), col(latCol), col(lonCol))
       .filter(bbox)
-    matched.join(vals, Seq("doc_id"))
       .withColumn("dist_m", round(graft.operators.GeoJoin.haversineMeters(
         lit(originLon), lit(originLat), col(lonCol), col(latCol)))
         .cast("long"))
@@ -5724,9 +5584,6 @@ object TextAnalysis {
       edges.head > 0,
       s"edges must be ascending positive meters, got $edges")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(latCol), col(lonCol))
     val d = round(graft.operators.GeoJoin.haversineMeters(
       lit(originLon), lit(originLat), col(lonCol), col(latCol)))
       .cast("long")
@@ -5735,7 +5592,7 @@ object TextAnalysis {
     val ring = edges.zipWithIndex.foldRight(lit(edges.size): Column) {
       case ((e, i), rest) => when(d < e, i).otherwise(rest)
     }
-    val counts = matched.join(vals, Seq("doc_id"))
+    val counts = snap.hits(queryTerms(queryText), col(latCol), col(lonCol))
       .groupBy(ring.as("__ring"))
       .agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -5773,11 +5630,6 @@ object TextAnalysis {
     require(fields.map(_._1).distinct == fields.map(_._1),
       s"duplicate field names: ${fields.map(_._1)}")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id") +: fields.zipWithIndex.map {
-        case ((_, sql), i) => expr(sql).cast("long").as(s"__x$i")
-      }: _*)
     val pairs = for {
       i <- fields.indices; j <- fields.indices if i <= j
     } yield (i, j)
@@ -5788,7 +5640,10 @@ object TextAnalysis {
         sum(expr(s"CAST(__x$i AS DECIMAL(38,0)) * __x$j"))
           .as(s"__p${i}_$j")
       }
-    val row = matched.join(vals, Seq("doc_id"))
+    val xs = fields.zipWithIndex.map {
+      case ((_, sql), i) => expr(sql).cast("long").as(s"__x$i")
+    }
+    val row = snap.hits(queryTerms(queryText), xs: _*)
       .agg(aggs.head, aggs.tail: _*).head()
     val n = BigInt(row.getLong(0))
     if (n == 0)
@@ -5828,12 +5683,9 @@ object TextAnalysis {
       queryText: String, latCol: String, lonCol: String,
       asOf: Option[String] = None): DataFrame = {
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"),
+    snap.hits(queryTerms(queryText),
         floor(col(latCol) * 1000000.0).cast("long").as("__lat6"),
         floor(col(lonCol) * 1000000.0).cast("long").as("__lon6"))
-    matched.join(vals, Seq("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("__lat6")).as("__slat"),
         sum(col("__lon6")).as("__slon"))
@@ -5863,10 +5715,7 @@ object TextAnalysis {
       s"grid bits per axis must be in 1..15, got $bits")
     require(topN >= 1, s"topN must be positive, got $topN")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(latCol), col(lonCol))
-    matched.join(vals, Seq("doc_id"))
+    snap.hits(queryTerms(queryText), col(latCol), col(lonCol))
       .groupBy(graft.functions.GeoFunctions
         .zorder_cell(col(lonCol), col(latCol), bits).as("cell"))
       .agg(count(lit(1)).as("n_docs"))
@@ -5894,7 +5743,6 @@ object TextAnalysis {
   def bm25CollapseTopK(spark: SparkSession, root: String,
       queryText: String, collapseCol: String, k: Int, innerK: Int = 1,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
     require(innerK >= 1, s"innerK must be positive, got $innerK")
     val terms = queryTerms(queryText)
@@ -6170,12 +6018,10 @@ object TextAnalysis {
     require(ps.nonEmpty && ps.forall(p => p >= 1 && p <= 100),
       s"percentiles must be in [1,100], got $ps")
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(valueCol).cast("long").as("__v"))
     // persisted across the rank-probe's three actions; MEMORY_ONLY —
     // the LRU-droppable tier (the collapse-serve precedent)
-    val joined = matched.join(vals, Seq("doc_id"))
+    val joined = snap.hits(queryTerms(queryText),
+        col(valueCol).cast("long").as("__v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     // n + the probe's (min, max) span in ONE action (cache-fill job)
     val st = joined.agg(count(lit(1)), min(col("__v")), max(col("__v")))
@@ -6203,11 +6049,8 @@ object TextAnalysis {
       queryText: String, facetCol: String, valueCol: String,
       asOf: Option[String] = None): DataFrame = {
     val snap = Bm25Snapshot(spark, root, asOf)
-    val matched = snap.matchedDocIds(queryTerms(queryText))
-    val vals = snap.docValues
-      .select(col("doc_id"), col(facetCol),
+    snap.hits(queryTerms(queryText), col(facetCol),
         col(valueCol).cast("long").as("__v"))
-    matched.join(vals, Seq("doc_id"))
       .groupBy(col(facetCol))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         sum(col("__v")).as("__s"))
@@ -6427,7 +6270,6 @@ object TextAnalysis {
    */
   def queryStringTopK(spark: SparkSession, root: String, query: String,
       k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     val clauses = parseQueryString(query)
     require(!clauses.exists(_.kind == "phrase"),
       "phrase clause in a non-positional query-string serve — build " +
@@ -6437,19 +6279,18 @@ object TextAnalysis {
         "queryStringFieldsTopK with a field→index registry")
     val snap = Bm25Snapshot(spark, root, asOf)
     if (snap.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     val low = lowerClauses(snap, clauses)
     // an emptied MUST group (expansion empty, or every member
     // prohibited) matches nothing — check BEFORE the scoring-clause
     // require: such a query HAD a scoring clause, it just lowered away
     if (low.groupEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "score")
+      return emptyScores(spark)
     require(low.scored.nonEmpty,
       "query string needs a scoring clause (+term or a bare term)")
     boolScoreFrame(snap, low)
-      .getOrElse(Seq.empty[(Long, Long)].toDF("doc_id", "score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .getOrElse(emptyScores(spark))
+      .transform(topKByScore(k))
   }
 
   /** The lowered term-clause algebra of a query string: literal MUSTs,
@@ -6533,9 +6374,7 @@ object TextAnalysis {
     if (!mustTerms.forall(dfc.contains)) return None
     val present = scored.filter(dfc.contains)
     if (present.isEmpty) return None
-    val spark = snap.spark
-    import spark.implicits._
-    val idf = bm25Idf(st.nDocs, dfc, present).toDF("tok", "idf")
+    val idf = bm25IdfFrame(snap.spark, st.nDocs, dfc, present)
     val alive = snap.livePostings(present)
     // MUST_NOT: anti-join before the aggregate (the NOT serve's shape)
     val admitted =
@@ -6566,21 +6405,14 @@ object TextAnalysis {
       max(when(col("tok").isin(g.keys.toSeq: _*), lit(1L))
         .otherwise(lit(0L))).as(s"_g$i")
     }
-    val aggCols =
-      Seq(sum(col("idf") * col("w")).as("score"),
-        countDistinct(when(array_contains(mustLit, col("tok")), col("tok")))
-          .as("nm")) ++ groupChecks
+    val extra =
+      countDistinct(when(array_contains(mustLit, col("tok")), col("tok")))
+        .as("nm") +: groupChecks
     val groupPass = mustGroups.indices
       .map(i => col(s"_g$i") === 1L)
       .foldLeft(lit(true))(_ && _)
     Some(restricted
-      .join(broadcast(idf), "tok")
-      .withColumn("norm1000",
-        lit(250L) + expr(s"(750 * len * 1000) div ${st.avg1000}"))
-      .withColumn("w",
-        expr("(tf * 2200 * 10000) div (tf * 1000 + (1200 * norm1000) div 1000)"))
-      .groupBy(col("doc_id"))
-      .agg(aggCols.head, aggCols.tail: _*)
+      .transform(bm25SumScores(idf, st.avg1000, extra))
       .filter(col("nm") === mustTerms.size && groupPass)
       .select(col("doc_id"), col("score")))
   }
@@ -6614,8 +6446,6 @@ object TextAnalysis {
    */
   def queryStringPhraseTopK(spark: SparkSession, root: String,
       query: String, k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     val clauses = parseQueryString(query)
     require(clauses.forall(_.field.isEmpty),
       "field-scoped clause in a single-field serve — use " +
@@ -6624,9 +6454,9 @@ object TextAnalysis {
     require(phrases.nonEmpty,
       "no phrase clause — use queryStringTopK (cheaper: no positional read)")
     val snap = Bm25Snapshot(spark, root, asOf)
-    if (snap.isEmpty) return empty
+    if (snap.isEmpty) return emptyScores(spark)
     val low = lowerClauses(snap, rest)
-    if (low.groupEmpty) return empty
+    if (low.groupEmpty) return emptyScores(spark)
     val termMust = low.mustTerms.nonEmpty || low.mustGroups.nonEmpty
     // the term-side frame (None ⇔ no scored term clause, or the term
     // musts are unsatisfiable — distinguish: unsatisfiable musts kill
@@ -6634,7 +6464,7 @@ object TextAnalysis {
     val termFrame =
       if (low.scored.isEmpty) None
       else boolScoreFrame(snap, low) match {
-        case None if termMust => return empty
+        case None if termMust => return emptyScores(spark)
         case f => f
       }
     // phrase frames by occur; a SHOULD phrase with an absent term just
@@ -6642,7 +6472,7 @@ object TextAnalysis {
     val phraseFrames: Seq[(Char, Option[DataFrame])] = phrases.map(c =>
       (c.occur, phraseScoreFrame(snap, c.text)))
     if (phraseFrames.exists { case (o, f) => o == '+' && f.isEmpty })
-      return empty
+      return emptyScores(spark)
     // prohibited TERMS mask every phrase frame too (the term frame
     // already excluded them before its aggregate)
     val exDocs: Option[DataFrame] =
@@ -6655,7 +6485,7 @@ object TextAnalysis {
     val scoringFrames = termFrame.toSeq ++ phraseFrames.collect {
       case (o, Some(f)) if o != '-' => maskEx(f)
     }
-    if (scoringFrames.isEmpty) return empty
+    if (scoringFrames.isEmpty) return emptyScores(spark)
     val summed = scoringFrames
       .map(_.select(col("doc_id"), col("score")))
       .reduce(_.unionByName(_))
@@ -6671,8 +6501,7 @@ object TextAnalysis {
       .foldLeft(enforced)((acc, f) =>
         acc.join(f.select(col("doc_id")), Seq("doc_id"), "left_anti"))
     excluded
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -6693,8 +6522,6 @@ object TextAnalysis {
   def queryStringFieldsTopK(spark: SparkSession,
       fields: Map[String, (String, Long)], defaultField: String,
       query: String, k: Int, asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     require(fields.contains(defaultField),
       s"defaultField '$defaultField' is not in the field registry")
     val clauses = parseQueryString(query)
@@ -6715,17 +6542,17 @@ object TextAnalysis {
       if (snap.isEmpty) {
         // an empty field index: its MUSTs are unsatisfiable, its
         // SHOULDs and exclusions contribute nothing
-        if (cs.exists(_.occur == '+')) return empty
+        if (cs.exists(_.occur == '+')) return emptyScores(spark)
       } else {
         val low0 = lowerClauses(snap, cs)
-        if (low0.groupEmpty) return empty
+        if (low0.groupEmpty) return emptyScores(spark)
         val termMust = low0.mustTerms.nonEmpty || low0.mustGroups.nonEmpty
         // exclusions apply to the cross-field SUM below, not here
         val frameOpt =
           if (low0.scored.isEmpty) None
           else boolScoreFrame(snap, low0.copy(exTerms = Nil))
         frameOpt match {
-          case None if termMust => return empty
+          case None if termMust => return emptyScores(spark)
           case None => ()
           case Some(fr) =>
             val boosted = fr.select(col("doc_id"),
@@ -6738,7 +6565,7 @@ object TextAnalysis {
             .distinct()
       }
     }
-    if (scoring.isEmpty) return empty
+    if (scoring.isEmpty) return emptyScores(spark)
     val summed = scoring
       .map(_.select(col("doc_id"), col("score")))
       .reduce(_.unionByName(_))
@@ -6748,8 +6575,7 @@ object TextAnalysis {
     val excluded = exSets.foldLeft(enforced)((acc, ex) =>
       acc.join(ex, Seq("doc_id"), "left_anti"))
     excluded
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 
   /**
@@ -6771,22 +6597,19 @@ object TextAnalysis {
       queryText: String, k: Int, maxExpansions: Int = 50,
       prefixBoost1000: Long = 1000L,
       asOf: Option[String] = None): DataFrame = {
-    import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
     require(maxExpansions >= 1, s"maxExpansions $maxExpansions < 1")
     require(prefixBoost1000 >= 0,
       s"prefix boost must be non-negative, got $prefixBoost1000")
-    val terms = queryText.toLowerCase.trim.split("\\s+")
-      .filter(_.nonEmpty).toSeq
+    val terms = queryTokens(queryText)
     require(terms.nonEmpty, "empty query")
     val fixed = terms.init.distinct
     val stem = terms.last
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     // one snapshot — the prefix clause must read the SAME version as
     // the fixed-term clause (review r19: the live version would surface
     // post-snapshot docs at the constant)
     val snap = Bm25Snapshot(spark, root, asOf)
-    if (snap.isEmpty) return empty
+    if (snap.isEmpty) return emptyScores(spark)
     val scored = if (fixed.isEmpty) None
       else bm25ScoreFrame(snap, fixed)
         .map(_.select(col("doc_id"), col("score")))
@@ -6797,7 +6620,7 @@ object TextAnalysis {
       else Some(snap.matchedDocIds(expansion)
         .withColumn("__pfx", lit(prefixBoost1000)))
     val merged = (scored, prefixDocs) match {
-      case (None, None) => return empty
+      case (None, None) => return emptyScores(spark)
       case (Some(s), None) => s
       case (None, Some(p)) =>
         p.select(col("doc_id"), col("__pfx").as("score"))
@@ -6807,7 +6630,7 @@ object TextAnalysis {
             (coalesce(col("score"), lit(0L)) +
               coalesce(col("__pfx"), lit(0L))).as("score"))
     }
-    merged.orderBy(col("score").desc, col("doc_id")).limit(k)
+    merged.transform(topKByScore(k))
   }
 
   /**
@@ -6828,21 +6651,19 @@ object TextAnalysis {
       queryWeight1000: Long = 1000L, rescoreWeight1000: Long = 1000L,
       asOf: Option[String] = None): DataFrame = {
     import spark.implicits._
-    def empty = Seq.empty[(Long, Long)].toDF("doc_id", "score")
     require(windowSize >= k,
       s"rescore window $windowSize smaller than k=$k — the tail of the " +
         "result would be unrescored noise")
     val terms = queryTerms(queryText)
     val snap = Bm25Snapshot(spark, root, asOf)
     val base = bm25ScoreFrame(snap, terms) match {
-      case None => return empty
+      case None => return emptyScores(spark)
       case Some(f) => f
     }
     // stage 1: the cheap window — bounded, collected (the same driver
     // step the search_after cursor and the response page take)
-    val window = base.orderBy(col("score").desc, col("doc_id"))
-      .limit(windowSize).collect()
-    if (window.isEmpty) return empty
+    val window = base.transform(topKByScore(windowSize)).collect()
+    if (window.isEmpty) return emptyScores(spark)
     val winDf = window.map(r => (r.getLong(0), r.getLong(1)))
       .toSeq.toDF("doc_id", "base")
     // stage 2: the expensive phrase over the window ids only
@@ -6857,7 +6678,6 @@ object TextAnalysis {
     joined.select(col("doc_id"),
         (expr(s"(base * ${queryWeight1000}L) div 1000") +
           expr(s"(p * ${rescoreWeight1000}L) div 1000")).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+      .transform(topKByScore(k))
   }
 }

@@ -118,6 +118,29 @@ object Exporter {
       throw new java.io.IOException(s"publish $tmp -> $finalPath failed")
   }
 
+  /** Renders every partition of `rows` on the executors into
+    * `partsDir/part-NNNNN<suffix>`, one `render(row)` after another.
+    * Nothing comes back to the driver; the bytes go to the cluster FS
+    * through an attempt-unique temp + rename ([[attemptTmp]]), so racing
+    * attempts publish whole files, never interleaved bytes. */
+  private def writeParts(rows: org.apache.spark.rdd.RDD[Row],
+      conf: Configuration, fs: FileSystem, partsDir: Path, suffix: String)
+      (render: Row => String): Unit = {
+    fs.mkdirs(partsDir)
+    val partsPath = partsDir.toString
+    val confSer = new SerializableHadoopConf(conf)
+    rows.mapPartitionsWithIndex { (pid, it) =>
+      val p = new Path(partsPath, f"part-$pid%05d$suffix")
+      val pfs = p.getFileSystem(confSer.value)
+      val tmp = attemptTmp(p)
+      val w = new java.io.OutputStreamWriter(
+        new java.io.BufferedOutputStream(pfs.create(tmp, true)), StandardCharsets.UTF_8)
+      try it.foreach(row => w.write(render(row))) finally w.close()
+      publishPart(pfs, tmp, p)
+      Iterator.empty[Int]
+    }.collect()
+  }
+
   /** S11: CSV zip — archive holds `<name>.csv` (exporter.rb:53-73);
     * geometry cells hold GeoJSON text (see `csvFrame`). */
   def exportCsv(df: DataFrame, name: String,
@@ -128,14 +151,10 @@ object Exporter {
     val zos = archiveStream(new FileOutputStream(zipFile))
     try {
       zos.putNextEntry(new ZipEntry(s"$name.csv"))
-      val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8))
-      w.println(df.columns.map(csvCell).mkString(","))
-      rows.toLocalIterator().forEachRemaining { row =>
-        w.println(df.columns.indices.map { i =>
-          val v = row.get(i)
-          if (v == null) "" else csvCell(v.toString)
-        }.mkString(","))
-      }
+      val w = new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8)
+      w.write(csvHeader(df))
+      val n = df.columns.length
+      rows.toLocalIterator().forEachRemaining(row => w.write(csvRecord(row, n)))
       w.flush()
       zos.closeEntry()
     } finally zos.close()
@@ -146,6 +165,18 @@ object Exporter {
     if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
+
+  private def csvHeader(df: DataFrame): String =
+    df.columns.map(csvCell).mkString(",") + "\n"
+
+  /** One CSV line for the first `n` cells of a row — the one row renderer
+    * of every CSV sink, so their archives hold the same bytes: null is an
+    * empty cell, anything else `csvCell(v.toString)`. */
+  private def csvRecord(row: Row, n: Int): String =
+    (0 until n).map { i =>
+      val v = row.get(i)
+      if (v == null) "" else csvCell(v.toString)
+    }.mkString("", ",", "\n")
 
   /** The rows the CSV sinks write: binary columns hold EWKB geometry,
     * written as GeoJSON text, the CartoDB export convention that the
@@ -160,10 +191,11 @@ object Exporter {
   }
 
   /**
-   * Distributed variant of the CSV export: EXECUTORS serialize the rows
-   * (`df.write.csv` part files, RFC-4180 doubled-quote style to match
-   * `csvCell`), and the driver only streams the part files' raw bytes
-   * into the single-archive contract — it never decodes a row. The zip
+   * Distributed variant of the CSV export: EXECUTORS render the rows with
+   * `exportCsv`'s own row renderer into part files ([[writeParts]]), and
+   * the driver only streams the part files' raw bytes into the
+   * single-archive contract — it never decodes a row, and the archive
+   * holds the same lines as `exportCsv`'s. The zip
    * itself is inherently a sequential artifact, so O(bytes) must pass
    * through one node either way; this removes the per-row
    * serialize-on-driver cost that `exportCsv`'s toLocalIterator funnel
@@ -172,21 +204,18 @@ object Exporter {
    */
   def exportCsvDistributed(df: DataFrame, name: String,
       dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val (fs, path) = outPathFs(hadoopConf(df), dir, name)
+    val conf = hadoopConf(df)
+    val (fs, path) = outPathFs(conf, dir, name)
     val partsDir = new Path(path.getParent, path.getName + "_parts")
-    csvFrame(df).write
-      .option("header", "false")
-      .option("emptyValue", "")
-      .option("escape", "\"") // doubled-quote escaping, like csvCell
-      .csv(partsDir.toString)
+    val n = df.columns.length
+    writeParts(csvFrame(df).rdd, conf, fs, partsDir, ".csvpart")(
+      row => csvRecord(row, n))
     val zipFile = new Path(path.getParent, path.getName + ".zip")
     val zos = archiveStream(fs.create(zipFile, true))
     try {
       zos.putNextEntry(new ZipEntry(s"$name.csv"))
-      val header = (df.columns.map(csvCell).mkString(",") + "\n")
-        .getBytes(StandardCharsets.UTF_8)
-      zos.write(header)
-      streamFilesInto(zos, fs, partsDir, ".csv")
+      zos.write(csvHeader(df).getBytes(StandardCharsets.UTF_8))
+      streamFilesInto(zos, fs, partsDir, ".csvpart")
       zos.closeEntry()
     } finally zos.close()
     fs.delete(partsDir, true)
@@ -219,8 +248,8 @@ object Exporter {
     fs.mkdirs(outDir)
     val outDirStr = outDir.toString
     val confSer = new SerializableHadoopConf(conf)
-    val header = df.columns.map(csvCell).mkString(",") + "\n"
-    val cols = df.columns
+    val header = csvHeader(df)
+    val nCols = df.columns.length
     val counts = csvFrame(df).repartition(shards).rdd.mapPartitionsWithIndex { (pid, rows) =>
       val p = new Path(outDirStr, f"$name-$pid%05d.zip")
       val pfs = p.getFileSystem(confSer.value)
@@ -231,14 +260,7 @@ object Exporter {
         zos.putNextEntry(new ZipEntry(f"$name-$pid%05d.csv"))
         val w = new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8)
         w.write(header)
-        rows.foreach { row =>
-          w.write(cols.indices.map { i =>
-            val v = row.get(i)
-            if (v == null) "" else csvCell(v.toString)
-          }.mkString(","))
-          w.write("\n")
-          n += 1
-        }
+        rows.foreach { row => w.write(csvRecord(row, nCols)); n += 1 }
         w.flush()
         zos.closeEntry()
       } finally zos.close()
@@ -327,27 +349,8 @@ object Exporter {
     val (fs, path) = outPathFs(conf, dir, name)
     val kmzFile = new Path(path.getParent, path.getName + ".kmz")
     val partsDir = new Path(path.getParent, path.getName + "_parts")
-    fs.mkdirs(partsDir)
-    val partsPath = partsDir.toString
-    val confSer = new SerializableHadoopConf(conf)
-    val attrCols = df.columns.filterNot(_ == geomCol)
-    val hasGeom = df.columns.contains(geomCol)
-    val gc = geomCol
-    // one tiny Long per partition comes back to the driver; the row bytes
-    // go to the cluster FS via attempt-unique temp + rename (attemptTmp),
-    // so racing attempts publish whole files, never interleaved bytes
-    df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val p = new Path(partsPath, f"part-$pid%05d.kmlpart")
-      val pfs = p.getFileSystem(confSer.value)
-      val tmp = attemptTmp(p)
-      val w = new java.io.OutputStreamWriter(
-        new java.io.BufferedOutputStream(pfs.create(tmp, true)), StandardCharsets.UTF_8)
-      var n = 0L
-      try rows.foreach { row => w.write(placemarkText(attrCols, hasGeom, gc)(row)); n += 1 }
-      finally w.close()
-      publishPart(pfs, tmp, p)
-      Iterator.single(n)
-    }.collect()
+    writeParts(df.rdd, conf, fs, partsDir, ".kmlpart")(placemarkText(
+      df.columns.filterNot(_ == geomCol), df.columns.contains(geomCol), geomCol))
     val zos = archiveStream(fs.create(kmzFile, true))
     try {
       zos.putNextEntry(new ZipEntry("doc.kml"))

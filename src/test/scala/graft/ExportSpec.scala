@@ -28,7 +28,11 @@ class ExportSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("distributed csv export == driver-funnel export, byte-compatible archive") {
-    val df = imported
+    import org.apache.spark.sql.functions.{lit, to_timestamp}
+    // cells a CSV writer with its own rendering would change: a padded
+    // string (trimmed) and a timestamp (ISO-formatted)
+    val df = imported.withColumn("padded", lit("  padded  "))
+      .withColumn("ts", to_timestamp(lit("2020-01-02 03:04:05")))
     val d1 = tmp
     val funnel = Exporter.exportCsv(df, "borders", d1)
     val dist = Exporter.exportCsvDistributed(df, "borders", d1)

@@ -31,6 +31,27 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     p +: kids.flatMap(allPlanNodes)
   }
 
+  /** `df`'s `explain("formatted")` text with everything that changes
+    * from run to run replaced by a fixed token: expression ids, plan and
+    * RDD ids, lambda variable names, source positions of RDD call sites,
+    * paths under the temp dir, and UUIDs (segment dirs, part files). Two
+    * builds of the same plan over equal data normalize to the same
+    * string. */
+  def normalizedPlan(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.ExplainMode
+    val tmp = java.util.regex.Pattern.quote(
+      new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath)
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .replaceAll(s"(file:)?$tmp/[^\\s,\\]\\)]*", "<tmp>")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
+        "<uuid>")
+      .replaceAll("#\\d+", "#N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("lambda (\\w)_\\d+", "lambda $1_N")
+      .replaceAll(" at \\S+\\.scala:\\d+", " at <src>")
+  }
+
   /** Spark jobs started while `body` runs, counted by a listener. The
     * listener bus delivers events in order, so once a sentinel job run
     * afterwards has been seen, every job of `body` has been too. */

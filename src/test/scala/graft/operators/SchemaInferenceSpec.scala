@@ -164,6 +164,42 @@ class SchemaInferenceSpec extends AnyFunSuite with SparkTestBase with PropHelper
     assert(sparkJobs(SchemaInference.inferTypes(df)) == 1)
   }
 
+  test("sampled inference of a typed frame reads the fold's first n rows, with no shuffle") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.functions.{col, when}
+    // 8 partitions of 10 rows in partition order: the long column
+    // overflows int32 at row 37, the double turns sci-rendered at row 20,
+    // and the string column breaks at row 55
+    val df = spark.range(0, 80, 1, 8).select(
+      when(col("id") === 37, 3000000000L).otherwise(col("id")).as("l"),
+      when(col("id") === 20, 1e9).otherwise(col("id") * 0.5).as("d"),
+      when(col("id") === 55, "abc").otherwise(col("id").cast("string")).as("s"))
+    assert(df.rdd.getNumPartitions == 8)
+    val rows = df.collect() // partition order
+    def shuffleBytes(body: => Unit): Long = {
+      val sc = spark.sparkContext
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m =>
+            bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+      sc.addSparkListener(listener)
+      try { body; sparkJobs(()) } finally sc.removeSparkListener(listener)
+      bytes.get
+    }
+    for (n <- Seq(15, 21, 37, 38, 56, 80)) {
+      var got = Map.empty[String, String]
+      val bytes = shuffleBytes {
+        got = SchemaInference.inferTypesSampled(df, n)
+      }
+      assert(bytes == 0L, s"n = $n")
+      val firstN = spark.createDataFrame(
+        java.util.Arrays.asList(rows.take(n): _*), df.schema)
+      assert(got == SchemaInference.inferTypes(firstN), s"n = $n")
+    }
+  }
+
   test("inferTypes over a real table matches expectations") {
     val types = SchemaInference.inferTypes(
       spark.read.parquet(sf("lineitem"))
