@@ -4957,7 +4957,7 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"))
       val tmp = scratchDir("graft_export_").toString
-      val r = graft.sinks.Exporter.exportCsvDistributed(sample, "lineitem_proj", tmp)
+      val r = graft.sinks.Exporter.exportCsv(sample, "lineitem_proj", tmp)
       val zf = new java.util.zip.ZipFile(r.path)
       val outCsv = java.nio.file.Paths.get(tmp, "back.csv")
       try java.nio.file.Files.copy(zf.getInputStream(zf.entries().nextElement()), outCsv)
@@ -5038,7 +5038,7 @@ object SparkEntry {
             (col("c_custkey") % 360 - 180).cast("double"),
             (col("c_custkey") % 170 - 85).cast("double")).as("the_geom"))
       val tmp = scratchDir("graft_kmlrt_").toString
-      val r = graft.sinks.Exporter.exportKmlDistributed(
+      val r = graft.sinks.Exporter.exportKml(
         sample, "cust_geo", "the_geom", tmp)
       val back = graft.Importer.importFile(s,
         graft.Importer.ImportRequest(importFromFile = Some(r.path))).df
@@ -5058,7 +5058,7 @@ object SparkEntry {
             (col("c_custkey") % 360 - 180).cast("double"),
             (col("c_custkey") % 170 - 85).cast("double")).as("the_geom"))
       val tmp = scratchDir("graft_shprt_").toString
-      val r = graft.sinks.Exporter.exportShpDistributed(
+      val r = graft.sinks.Exporter.exportShp(
         sample, "cust_shp", "the_geom", tmp)
       val back = graft.Importer.importFile(s,
         graft.Importer.ImportRequest(importFromFile = Some(r.path))).df

@@ -1,11 +1,16 @@
 package graft.sinks
 
-import java.io.{File, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, OutputStream, OutputStreamWriter}
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,20 +24,23 @@ import graft.functions.GeoFunctions.st_asgeojson
  * record mirrors the reference's {name, import_type, path}
  * (exporter.rb:67-71,88-92,155-159).
  *
- * Scale note: the reference's export contract is "one archive file", so
- * the row stream is funneled through the driver (toLocalIterator — bounded
- * memory, not collect). Multi-file distributed export is just
- * `df.write.csv(dir)`; these sinks exist for reference parity.
+ * One path per format. The reference's contract is one archive file, so
+ * each archive sink runs one Spark job in which the executors render their rows
+ * into part files ([[writePartitions]]); the driver then streams header,
+ * part bytes and footer into the archive and never decodes a row. All IO
+ * goes through the Hadoop FileSystem API, so `dir` may be any scheme the
+ * cluster mounts (hdfs://, s3a://, a plain local path). Multi-archive
+ * export is [[exportCsvSharded]].
  */
 object Exporter {
 
   final case class ExportResult(name: String, importType: String, path: String)
 
   /** Hadoop Configuration that survives the task-closure serializer —
-    * the distributed sinks ship it to executors so part files land on the
-    * CLUSTER filesystem (HDFS/S3/local-under-local[*]), not each
-    * executor's private disk. Same writeObject/readFields shape Spark
-    * uses internally. */
+    * the sinks ship it to executors so part files land on the CLUSTER
+    * filesystem (HDFS/S3/local-under-local[*]), not each executor's
+    * private disk. Same writeObject/readFields shape Spark uses
+    * internally. */
   private final class SerializableHadoopConf(@transient var value: Configuration)
       extends Serializable {
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {
@@ -45,46 +53,43 @@ object Exporter {
     }
   }
 
-  private def hadoopConf(df: DataFrame): Configuration =
-    df.sparkSession.sessionState.newHadoopConf()
+  /** The filesystem of `p`, unwrapped when it is a ChecksumFileSystem
+    * (the local FS is one): that wrapper leaves a `.crc` sidecar beside
+    * every file it creates, and an export's output is its archives alone. */
+  private def fsOf(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case fs => fs
+  }
+
+  /** The Hadoop conf, the filesystem of `dir` and a fresh
+    * `exporting_<id>_<name>` base path under it. */
+  private def target(df: DataFrame, dir: String,
+      name: String): (Configuration, FileSystem, Path) = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val d = new Path(dir)
+    val fs = fsOf(d, conf)
+    fs.mkdirs(d)
+    (conf, fs, new Path(d,
+      s"exporting_${java.util.UUID.randomUUID().toString.take(8)}_$name"))
+  }
+
+  private def sibling(p: Path, suffix: String): Path = new Path(p.getParent, p.getName + suffix)
+
+  private def partDir(partsDir: Path, pid: Int): Path = new Path(partsDir, f"part-$pid%05d")
 
   /** Archive stream with deflate at BEST_SPEED: the zip is inherently a
     * single-stream artifact, so its deflate runs on ONE driver core no
     * matter how distributed the row rendering is — at default level the
-    * compressor, not the copy, dominates the funnel stage. Level 1 keeps
-    * the archive a standard zip (entry bytes identical after inflate, so
-    * the funnel/distributed byte-identity contract is untouched) at a
-    * fraction of the CPU. */
-  private def archiveStream(out: java.io.OutputStream): ZipOutputStream = {
+    * compressor, not the copy, dominates. Level 1 keeps the archive a
+    * standard zip (entry bytes are the same after inflate) at a fraction
+    * of the CPU. */
+  private def archiveStream(out: OutputStream): ZipOutputStream = {
     val zos = new ZipOutputStream(out)
     zos.setLevel(java.util.zip.Deflater.BEST_SPEED)
     zos
   }
 
-  private def outPath(dir: String, name: String): String = {
-    new File(dir).mkdirs()
-    s"$dir/exporting_${java.util.UUID.randomUUID().toString.take(8)}_$name"
-  }
-
-  /** Hadoop-FS twin of `outPath` for the distributed sinks: `dir` may be
-    * any scheme the cluster mounts (hdfs://, s3a://, plain local path). */
-  private def outPathFs(conf: Configuration, dir: String, name: String): (FileSystem, Path) = {
-    val d = new Path(dir)
-    val fs = d.getFileSystem(conf)
-    fs.mkdirs(d)
-    (fs, new Path(d,
-      s"exporting_${java.util.UUID.randomUUID().toString.take(8)}_$name"))
-  }
-
-  /** Sorted part files under `partsDir` with the given suffix — the global
-    * record order of every distributed sink (partition id == name order). */
-  private def partFiles(fs: FileSystem, partsDir: Path, suffix: String): Seq[Path] =
-    fs.listStatus(partsDir).iterator
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-")
-        && s.getPath.getName.endsWith(suffix))
-      .map(_.getPath).toSeq.sortBy(_.getName)
-
-  private def streamFileInto(zos: ZipOutputStream, fs: FileSystem, p: Path,
+  private def copyInto(zos: ZipOutputStream, fs: FileSystem, p: Path,
       buf: Array[Byte]): Unit = {
     val in = fs.open(p)
     try {
@@ -93,72 +98,71 @@ object Exporter {
     } finally in.close()
   }
 
-  private def streamFilesInto(zos: ZipOutputStream, fs: FileSystem,
-      partsDir: Path, suffix: String): Unit = {
-    val buf = new Array[Byte](1 << 16)
-    partFiles(fs, partsDir, suffix).foreach(p => streamFileInto(zos, fs, p, buf))
-  }
-
-  /** Attempt-unique temp name for a part file. Deterministic part names
-    * alone are NOT safe: with speculative execution (or a zombie attempt
-    * racing a retry) two attempts can hold open streams on the same
-    * destination concurrently and interleave/truncate bytes. Each attempt
-    * writes its own dot-prefixed temp (invisible to `partFiles`), then
-    * `publishPart` renames it over the final name — the published part is
-    * always ONE attempt's complete bytes, whichever attempt wins. */
-  private def attemptTmp(finalPath: Path): Path = {
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId()).getOrElse(0L)
-    new Path(finalPath.getParent, s".${finalPath.getName}.attempt-$attempt.tmp")
-  }
-
-  private def publishPart(fs: FileSystem, tmp: Path, finalPath: Path): Unit = {
-    if (fs.exists(finalPath)) fs.delete(finalPath, false)
-    if (!fs.rename(tmp, finalPath))
-      throw new java.io.IOException(s"publish $tmp -> $finalPath failed")
-  }
-
-  /** Renders every partition of `rows` on the executors into
-    * `partsDir/part-NNNNN<suffix>`, one `render(row)` after another.
-    * Nothing comes back to the driver; the bytes go to the cluster FS
-    * through an attempt-unique temp + rename ([[attemptTmp]]), so racing
-    * attempts publish whole files, never interleaved bytes. */
-  private def writeParts(rows: org.apache.spark.rdd.RDD[Row],
-      conf: Configuration, fs: FileSystem, partsDir: Path, suffix: String)
-      (render: Row => String): Unit = {
-    fs.mkdirs(partsDir)
+  /**
+   * Runs `write(pid, rows, out)` over every partition of `rows` on the
+   * executors, in one Spark job, and returns its results in partition
+   * order. `out(file)` opens `file` in an attempt-unique temp directory,
+   * which is published as `partsDir/part-NNNNN` with one rename once
+   * `write` returns. Deterministic names alone are NOT safe: with
+   * speculative execution (or a zombie attempt racing a retry) two
+   * attempts can hold open streams on the same file and interleave
+   * bytes, and a partition's files are consistent only as a set (SHP's
+   * lengths index its contents). The published directory is always ONE
+   * attempt's complete files, whichever attempt wins.
+   */
+  private def writePartitions[T: ClassTag](rows: RDD[Row], conf: Configuration,
+      partsDir: Path)(write: (Int, Iterator[Row], String => OutputStream) => T): Array[T] = {
     val partsPath = partsDir.toString
     val confSer = new SerializableHadoopConf(conf)
     rows.mapPartitionsWithIndex { (pid, it) =>
-      val p = new Path(partsPath, f"part-$pid%05d$suffix")
-      val pfs = p.getFileSystem(confSer.value)
-      val tmp = attemptTmp(p)
-      val w = new java.io.OutputStreamWriter(
-        new java.io.BufferedOutputStream(pfs.create(tmp, true)), StandardCharsets.UTF_8)
-      try it.foreach(row => w.write(render(row))) finally w.close()
-      publishPart(pfs, tmp, p)
-      Iterator.empty[Int]
+      val parts = new Path(partsPath)
+      val fs = fsOf(parts, confSer.value)
+      val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
+      val tmp = new Path(parts, f".part-$pid%05d.attempt-$attempt.tmp")
+      val done = partDir(parts, pid)
+      fs.mkdirs(tmp)
+      val r = write(pid, it, f => new BufferedOutputStream(fs.create(new Path(tmp, f), true)))
+      if (fs.exists(done)) fs.delete(done, true)
+      if (!fs.rename(tmp, done))
+        throw new java.io.IOException(s"publish $tmp -> $done failed")
+      Iterator.single(r)
     }.collect()
+  }
+
+  /** The one-entry archive of the CSV and KML sinks: `<base><ext>` whose
+    * `entry` holds `header`, then every row's `render` in partition
+    * order, then `footer`. Returns the archive's path. */
+  private def textArchive(df: DataFrame, rows: RDD[Row], dir: String, name: String,
+      ext: String, entry: String, header: String, footer: String)
+      (render: Row => String): String = {
+    val (conf, fs, base) = target(df, dir, name)
+    val partsDir = sibling(base, "_parts")
+    val archive = sibling(base, ext)
+    try {
+      val parts = writePartitions(rows, conf, partsDir) { (_, it, out) =>
+        val w = new OutputStreamWriter(out("rows"), StandardCharsets.UTF_8)
+        try it.foreach(row => w.write(render(row))) finally w.close()
+      }
+      val zos = archiveStream(fs.create(archive, true))
+      try {
+        zos.putNextEntry(new ZipEntry(entry))
+        zos.write(header.getBytes(StandardCharsets.UTF_8))
+        val buf = new Array[Byte](1 << 16)
+        parts.indices.foreach(pid => copyInto(zos, fs, new Path(partDir(partsDir, pid), "rows"), buf))
+        zos.write(footer.getBytes(StandardCharsets.UTF_8))
+        zos.closeEntry()
+      } finally zos.close()
+    } finally fs.delete(partsDir, true)
+    archive.toString
   }
 
   /** S11: CSV zip — archive holds `<name>.csv` (exporter.rb:53-73);
     * geometry cells hold GeoJSON text (see `csvFrame`). */
   def exportCsv(df: DataFrame, name: String,
       dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val path = outPath(dir, name)
-    val zipFile = s"$path.zip"
-    val rows = csvFrame(df)
-    val zos = archiveStream(new FileOutputStream(zipFile))
-    try {
-      zos.putNextEntry(new ZipEntry(s"$name.csv"))
-      val w = new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8)
-      w.write(csvHeader(df))
-      val n = df.columns.length
-      rows.toLocalIterator().forEachRemaining(row => w.write(csvRecord(row, n)))
-      w.flush()
-      zos.closeEntry()
-    } finally zos.close()
-    ExportResult(name, ".csv", zipFile)
+    val n = df.columns.length
+    ExportResult(name, ".csv", textArchive(df, csvFrame(df).rdd, dir, name,
+      ".zip", s"$name.csv", csvHeader(df), "")(csvRecord(_, n)))
   }
 
   private def csvCell(s: String): String =
@@ -170,7 +174,7 @@ object Exporter {
     df.columns.map(csvCell).mkString(",") + "\n"
 
   /** One CSV line for the first `n` cells of a row — the one row renderer
-    * of every CSV sink, so their archives hold the same bytes: null is an
+    * of both CSV sinks, so their archives hold the same bytes: null is an
     * empty cell, anything else `csvCell(v.toString)`. */
   private def csvRecord(row: Row, n: Int): String =
     (0 until n).map { i =>
@@ -190,38 +194,6 @@ object Exporter {
     }: _*).toDF(df.columns.toIndexedSeq: _*)
   }
 
-  /**
-   * Distributed variant of the CSV export: EXECUTORS render the rows with
-   * `exportCsv`'s own row renderer into part files ([[writeParts]]), and
-   * the driver only streams the part files' raw bytes into the
-   * single-archive contract — it never decodes a row, and the archive
-   * holds the same lines as `exportCsv`'s. The zip
-   * itself is inherently a sequential artifact, so O(bytes) must pass
-   * through one node either way; this removes the per-row
-   * serialize-on-driver cost that `exportCsv`'s toLocalIterator funnel
-   * pays (the remaining driver work is a buffer copy). Same
-   * one-`<name>.csv`-entry archive as `exportCsv`.
-   */
-  def exportCsvDistributed(df: DataFrame, name: String,
-      dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val conf = hadoopConf(df)
-    val (fs, path) = outPathFs(conf, dir, name)
-    val partsDir = new Path(path.getParent, path.getName + "_parts")
-    val n = df.columns.length
-    writeParts(csvFrame(df).rdd, conf, fs, partsDir, ".csvpart")(
-      row => csvRecord(row, n))
-    val zipFile = new Path(path.getParent, path.getName + ".zip")
-    val zos = archiveStream(fs.create(zipFile, true))
-    try {
-      zos.putNextEntry(new ZipEntry(s"$name.csv"))
-      zos.write(csvHeader(df).getBytes(StandardCharsets.UTF_8))
-      streamFilesInto(zos, fs, partsDir, ".csvpart")
-      zos.closeEntry()
-    } finally zos.close()
-    fs.delete(partsDir, true)
-    ExportResult(name, ".csv", zipFile.toString)
-  }
-
   final case class ShardedExportResult(name: String, importType: String,
       manifestPath: String, shardPaths: Seq[String], rows: Long)
 
@@ -233,73 +205,74 @@ object Exporter {
    * both parallel, straight through the Hadoop FS API) into an
    * independently importable `<name>-NNNNN.zip` — each shard carries its
    * own header row, so any shard re-imports standalone and the union of
-   * all shards is exactly the single-archive content. The driver writes
-   * only a small JSON manifest (shard names + row counts); nothing row-
-   * or byte-proportional ever passes through it. Shard parts publish via
-   * attempt-unique temp + rename, like every distributed sink here.
-   * The single-archive sinks remain the reference-parity default.
+   * all shards is exactly the single-archive content. The driver moves
+   * each published shard into the output directory and writes a small
+   * JSON manifest (shard names + row counts); nothing row- or
+   * byte-proportional ever passes through it.
    */
   def exportCsvSharded(df: DataFrame, name: String, shards: Int,
       dir: String = System.getProperty("java.io.tmpdir")): ShardedExportResult = {
     require(shards > 0, "shards must be positive")
-    val conf = hadoopConf(df)
-    val (fs, path) = outPathFs(conf, dir, name)
-    val outDir = new Path(path.getParent, path.getName + "_shards")
-    fs.mkdirs(outDir)
-    val outDirStr = outDir.toString
-    val confSer = new SerializableHadoopConf(conf)
+    val (conf, fs, base) = target(df, dir, name)
+    val outDir = sibling(base, "_shards")
+    val partsDir = sibling(base, "_parts")
     val header = csvHeader(df)
     val nCols = df.columns.length
-    val counts = csvFrame(df).repartition(shards).rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val p = new Path(outDirStr, f"$name-$pid%05d.zip")
-      val pfs = p.getFileSystem(confSer.value)
-      val tmp = attemptTmp(p)
-      val zos = archiveStream(pfs.create(tmp, true))
-      var n = 0L
-      try {
-        zos.putNextEntry(new ZipEntry(f"$name-$pid%05d.csv"))
-        val w = new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8)
-        w.write(header)
-        rows.foreach { row => w.write(csvRecord(row, nCols)); n += 1 }
-        w.flush()
-        zos.closeEntry()
-      } finally zos.close()
-      publishPart(pfs, tmp, p)
-      Iterator.single((pid, n))
-    }.collect().sortBy(_._1) // one (pid, count) pair per shard — bounded
-    val shardPaths = counts.map(c => new Path(outDir, f"$name-${c._1}%05d.zip").toString)
-    val total = counts.map(_._2).sum
+    def shard(pid: Int) = f"$name-$pid%05d"
+    val counts = try {
+      val counts = writePartitions(csvFrame(df).repartition(shards).rdd, conf, partsDir) {
+        (pid, rows, out) =>
+          val zos = archiveStream(out(shard(pid) + ".zip"))
+          var n = 0L
+          try {
+            zos.putNextEntry(new ZipEntry(shard(pid) + ".csv"))
+            val w = new OutputStreamWriter(zos, StandardCharsets.UTF_8)
+            w.write(header)
+            rows.foreach { row => w.write(csvRecord(row, nCols)); n += 1 }
+            w.flush()
+            zos.closeEntry()
+          } finally zos.close()
+          n
+      }
+      fs.mkdirs(outDir)
+      counts.indices.foreach { pid =>
+        val from = new Path(partDir(partsDir, pid), shard(pid) + ".zip")
+        if (!fs.rename(from, new Path(outDir, shard(pid) + ".zip")))
+          throw new java.io.IOException(s"move $from -> $outDir failed")
+      }
+      counts
+    } finally fs.delete(partsDir, true)
+    val total = counts.sum
     val manifest = new Path(outDir, s"$name.manifest.json")
     val mjson = "{\"name\":\"" + name + "\",\"rows\":" + total +
-      ",\"shards\":[" + counts.map { case (pid, n) =>
-        "{\"file\":\"" + f"$name-$pid%05d.zip" + "\",\"rows\":" + n + "}"
+      ",\"shards\":[" + counts.indices.map { pid =>
+        "{\"file\":\"" + shard(pid) + ".zip\",\"rows\":" + counts(pid) + "}"
       }.mkString(",") + "]}\n"
     val mo = fs.create(manifest, true)
     try mo.write(mjson.getBytes(StandardCharsets.UTF_8)) finally mo.close()
-    ShardedExportResult(name, ".csv", manifest.toString, shardPaths.toSeq, total)
+    ShardedExportResult(name, ".csv", manifest.toString,
+      counts.indices.map(pid => new Path(outDir, shard(pid) + ".zip").toString), total)
   }
 
+  /** The position of `geomCol` (-1 when absent) and of every other
+    * column. Cells are read by position: imported tables can repeat a
+    * column name. */
+  private def layout(df: DataFrame, geomCol: String): (Int, IndexedSeq[Int]) =
+    (df.columns.indexOf(geomCol), df.columns.indices.filter(df.columns(_) != geomCol))
+
+  private def geometryAt(row: Row, i: Int): Option[Geometry] =
+    if (i < 0) None
+    else Option(row.getAs[Array[Byte]](i)).flatMap(Geometry.fromEwkb).map(_._1)
+
   /** S12: KML/KMZ — `<Placemark>` per row with ExtendedData, zipped as
-    * `doc.kml` inside a `.kmz` (exporter.rb:74-94). */
+    * `doc.kml` inside a `.kmz` (exporter.rb:74-94). Executors render the
+    * Placemarks (EWKB decode + XML escape run where the rows live). */
   def exportKml(df: DataFrame, name: String, geomCol: String = "the_geom",
       dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val path = outPath(dir, name)
-    val kmzFile = s"$path.kmz"
-    val attrCols = df.columns.filterNot(_ == geomCol)
-    val hasGeom = df.columns.contains(geomCol)
-    val zos = archiveStream(new FileOutputStream(kmzFile))
-    try {
-      zos.putNextEntry(new ZipEntry("doc.kml"))
-      val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(zos, StandardCharsets.UTF_8))
-      w.print(KmlHeader(name))
-      df.toLocalIterator().forEachRemaining { row =>
-        w.print(placemarkText(attrCols, hasGeom, geomCol)(row))
-      }
-      w.print(KmlFooter)
-      w.flush()
-      zos.closeEntry()
-    } finally zos.close()
-    ExportResult(name, ".kml", kmzFile)
+    val (geom, attrs) = layout(df, geomCol)
+    val named = attrs.map(i => (i, xmlEscape(df.columns(i))))
+    ExportResult(name, ".kml", textArchive(df, df.rdd, dir, name, ".kmz", "doc.kml",
+      KmlHeader(name), KmlFooter)(placemarkText(named, geom)))
   }
 
   private def KmlHeader(name: String): String =
@@ -309,58 +282,23 @@ object Exporter {
 
   private val KmlFooter: String = "</Document></kml>\n"
 
-  /** One row's `<Placemark>` block — the per-row unit both the funnel and
-    * the distributed KML sink emit, so the two archives are byte-equal. */
-  private def placemarkText(attrCols: Array[String], hasGeom: Boolean,
-      geomCol: String)(row: Row): String = {
+  /** One row's `<Placemark>` block; `attrs` pairs each attribute's
+    * position with its escaped name. */
+  private def placemarkText(attrs: IndexedSeq[(Int, String)], geom: Int)(row: Row): String = {
     val sb = new StringBuilder("<Placemark>\n")
-    if (attrCols.nonEmpty) {
+    if (attrs.nonEmpty) {
       sb.append("<ExtendedData>\n")
-      attrCols.foreach { c =>
-        val v = row.getAs[Any](c)
+      attrs.foreach { case (i, n) =>
+        val v = row.get(i)
         if (v != null)
-          sb.append(s"""<Data name="${xmlEscape(c)}"><value>${xmlEscape(v.toString)}</value></Data>""")
+          sb.append(s"""<Data name="$n"><value>${xmlEscape(v.toString)}</value></Data>""")
             .append('\n')
       }
       sb.append("</ExtendedData>\n")
     }
-    if (hasGeom) {
-      Option(row.getAs[Array[Byte]](geomCol))
-        .flatMap(Geometry.fromEwkb).map(_._1)
-        .foreach(g => sb.append(kmlGeometry(g)).append('\n'))
-    }
+    geometryAt(row, geom).foreach(g => sb.append(kmlGeometry(g)).append('\n'))
     sb.append("</Placemark>\n")
     sb.toString
-  }
-
-  /**
-   * Distributed KML: EXECUTORS render each row's Placemark (EWKB decode +
-   * XML escape happen in parallel, where the rows live) into per-partition
-   * part files; the driver only streams header + part bytes + footer into
-   * the single-`doc.kml` archive contract. All part-file IO goes through
-   * the Hadoop FileSystem API on both sides, so the same code runs on
-   * HDFS/S3A and local disk (under local[*] the cluster FS is the local
-   * FS). Byte-identical to `exportKml` because toLocalIterator visits
-   * partitions in the same order the part files sort.
-   */
-  def exportKmlDistributed(df: DataFrame, name: String, geomCol: String = "the_geom",
-      dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val conf = hadoopConf(df)
-    val (fs, path) = outPathFs(conf, dir, name)
-    val kmzFile = new Path(path.getParent, path.getName + ".kmz")
-    val partsDir = new Path(path.getParent, path.getName + "_parts")
-    writeParts(df.rdd, conf, fs, partsDir, ".kmlpart")(placemarkText(
-      df.columns.filterNot(_ == geomCol), df.columns.contains(geomCol), geomCol))
-    val zos = archiveStream(fs.create(kmzFile, true))
-    try {
-      zos.putNextEntry(new ZipEntry("doc.kml"))
-      zos.write(KmlHeader(name).getBytes(StandardCharsets.UTF_8))
-      streamFilesInto(zos, fs, partsDir, ".kmlpart")
-      zos.write(KmlFooter.getBytes(StandardCharsets.UTF_8))
-      zos.closeEntry()
-    } finally zos.close()
-    fs.delete(partsDir, true)
-    ExportResult(name, ".kml", kmzFile.toString)
   }
 
   private def xmlEscape(s: String): String =
@@ -370,7 +308,7 @@ object Exporter {
   private def coordText(cs: Seq[graft.core.geo.Coord]): String =
     cs.map(c => s"${c.x},${c.y}").mkString(" ")
 
-  def kmlGeometry(g: Geometry): String = g match {
+  private def kmlGeometry(g: Geometry): String = g match {
     case GPoint(c) => s"<Point><coordinates>${c.x},${c.y}</coordinates></Point>"
     case LineString(cs) =>
       s"<LineString><coordinates>${coordText(cs)}</coordinates></LineString>"
@@ -390,40 +328,7 @@ object Exporter {
       s"<MultiGeometry>${gs.map(kmlGeometry).mkString}</MultiGeometry>"
   }
 
-  /** S13: zipped shapefile set `.shp .shx .dbf .prj` (exporter.rb:95-161;
-    * the reference also lists `.sbn`, a spatial-index side file its own
-    * toolchain never produces — mirrored by omission). */
-  def exportShp(df: DataFrame, name: String, geomCol: String = "the_geom",
-      dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val path = outPath(dir, name)
-    val zipFile = s"$path.zip"
-    val attrFields = df.schema.fields.filterNot(_.name == geomCol)
-    val specs = dbfSpecs(attrFields)
-    val geoms = IndexedSeq.newBuilder[Option[Geometry]]
-    val recs = IndexedSeq.newBuilder[Seq[Any]]
-    val hasGeom = df.columns.contains(geomCol)
-    df.toLocalIterator().forEachRemaining { row =>
-      geoms += (if (hasGeom) Option(row.getAs[Array[Byte]](geomCol))
-        .flatMap(Geometry.fromEwkb).map(_._1) else None)
-      recs += attrFields.map(f => row.getAs[Any](f.name)).toSeq
-    }
-    val pair = ShpWriter.write(geoms.result())
-    val dbf = DbfWriter.write(specs, recs.result())
-    val prj = Wgs84Prj
-    val zos = archiveStream(new FileOutputStream(zipFile))
-    try {
-      def entry(ext: String, bytes: Array[Byte]): Unit = {
-        zos.putNextEntry(new ZipEntry(s"$name$ext")); zos.write(bytes); zos.closeEntry()
-      }
-      entry(".shp", pair.shp)
-      entry(".shx", pair.shx)
-      entry(".dbf", dbf)
-      entry(".prj", prj.getBytes(StandardCharsets.US_ASCII))
-    } finally zos.close()
-    ExportResult(name, ".shp", zipFile)
-  }
-
-  private def dbfSpecs(attrFields: Array[StructField]): IndexedSeq[DbfWriter.FieldSpec] =
+  private[graft] def dbfSpecs(attrFields: Seq[StructField]): IndexedSeq[DbfWriter.FieldSpec] =
     attrFields.map(f => f.dataType match {
       case LongType | IntegerType | ShortType => DbfWriter.FieldSpec(f.name, 'N', 18, 0)
       case DoubleType | FloatType => DbfWriter.FieldSpec(f.name, 'N', 24, 6)
@@ -433,155 +338,112 @@ object Exporter {
       case _ => DbfWriter.FieldSpec(f.name, 'C', 254, 0)
     }).toIndexedSeq
 
+  private def twoInts(a: Int, b: Int): Array[Byte] =
+    ByteBuffer.allocate(8).putInt(a).putInt(b).array()
+
   /**
-   * Distributed SHP: EXECUTORS serialize each row into its shapefile
-   * record-content bytes + fixed-width DBF record bytes (EWKB decode and
-   * all coordinate/number formatting run in parallel); per partition they
-   * write three part files — `.shpc` (concatenated shape contents, no
-   * record headers), `.lens` (4-byte big-endian content length per
-   * record), `.dbfr` (concatenated DBF records) — and return one small
-   * metadata tuple. The driver computes the global header (bbox, shape
-   * type, file length) from the per-partition metadata, then STREAMS part
-   * bytes into the zip, inserting only the 8-byte record headers (which
-   * need the global record number, unknowable on executors). Driver work
-   * is O(bytes copied) + 8 bytes/record — it never decodes a row or
-   * geometry. Byte-identical to `exportShp` (same record order:
-   * toLocalIterator's partition order == part-file name order).
+   * S13: zipped shapefile set `.shp .shx .dbf .prj` (exporter.rb:95-161;
+   * the reference also lists `.sbn`, a spatial-index side file its own
+   * toolchain never produces — mirrored by omission). Executors serialize
+   * each row into its shape record content and fixed-width DBF record
+   * (EWKB decode and all number formatting run in parallel); per
+   * partition they write `shpc` (the contents, no record headers), `lens`
+   * (each content's length, a 4-byte big-endian int) and `dbfr` (the DBF
+   * records), and return (records, shape type, bbox, content bytes). The
+   * driver builds the global headers from those, then streams the part
+   * bytes into the zip, inserting only the 8-byte record headers, whose
+   * global record numbers executors cannot know. The members equal
+   * `ShpWriter.write`/`DbfWriter.write` over the rows in partition order.
    */
-  def exportShpDistributed(df: DataFrame, name: String, geomCol: String = "the_geom",
+  def exportShp(df: DataFrame, name: String, geomCol: String = "the_geom",
       dir: String = System.getProperty("java.io.tmpdir")): ExportResult = {
-    val conf = hadoopConf(df)
-    val (fs, path) = outPathFs(conf, dir, name)
-    val zipFile = new Path(path.getParent, path.getName + ".zip")
-    val attrFields = df.schema.fields.filterNot(_.name == geomCol)
-    val specs = dbfSpecs(attrFields)
-    val hasGeom = df.columns.contains(geomCol)
-    val gc = geomCol
-    val partsDir = new Path(path.getParent, path.getName + "_parts")
-    fs.mkdirs(partsDir)
-    val partsPath = partsDir.toString
-    val confSer = new SerializableHadoopConf(conf)
-
-    val metas = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val pfs = new Path(partsPath).getFileSystem(confSer.value)
-      // the three per-partition files (shpc/lens/dbfr) are mutually
-      // consistent ONLY as a set — three independent renames could leave
-      // a mixed-attempt trio under speculative/zombie races (one
-      // attempt's shpc with another's lens desyncs every record offset).
-      // So the trio publishes as ONE rename: written into an
-      // attempt-unique temp directory, renamed wholesale over the final
-      // part dir — whichever attempt wins, the trio is one attempt's
-      // complete, internally consistent bytes.
-      val attempt = Option(org.apache.spark.TaskContext.get())
-        .map(_.taskAttemptId()).getOrElse(0L)
-      val finalDir = new Path(partsPath, f"part-$pid%05d.trio")
-      val tmpDir = new Path(partsPath,
-        f".part-$pid%05d.attempt-$attempt.tmpdir")
-      pfs.mkdirs(tmpDir)
-      val tmps = Seq("shpc", "lens", "dbfr").map(n => new Path(tmpDir, n))
-      def out(i: Int) = new java.io.BufferedOutputStream(pfs.create(tmps(i), true))
-      val shpc = out(0)
-      val lens = new java.io.DataOutputStream(out(1))
-      val dbfr = out(2)
-      val box = Array(Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
-      var count = 0L; var stype = 0; var contentBytes = 0L
-      try rows.foreach { row =>
-        val gOpt = if (hasGeom) Option(row.getAs[Array[Byte]](gc))
-          .flatMap(Geometry.fromEwkb).map(_._1) else None
-        gOpt.foreach { g =>
-          if (stype == 0) stype = ShpWriter.shapeTypeOf(g)
-          ShpWriter.accumBBox(g, box)
-        }
-        val content = ShpWriter.recordContent(gOpt)
-        shpc.write(content); lens.writeInt(content.length); contentBytes += content.length
-        dbfr.write(DbfWriter.recordBytes(specs, attrFields.map(f => row.getAs[Any](f.name)).toSeq))
-        count += 1
-      } finally { shpc.close(); lens.close(); dbfr.close() }
-      if (pfs.exists(finalDir)) pfs.delete(finalDir, true)
-      if (!pfs.rename(tmpDir, finalDir))
-        throw new java.io.IOException(s"publish $tmpDir -> $finalDir failed")
-      Iterator.single((pid, count, stype, box, contentBytes))
-    }.collect().sortBy(_._1) // one 5-field tuple per partition — bounded
-
-    val total = metas.map(_._2).sum
-    val shapeType = metas.map(_._3).find(_ != 0).getOrElse(0)
-    val box = Array(Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
-    metas.foreach { m =>
-      box(0) = math.min(box(0), m._4(0)); box(1) = math.min(box(1), m._4(1))
-      box(2) = math.max(box(2), m._4(2)); box(3) = math.max(box(3), m._4(3))
-    }
-    if (shapeType == 0 || box(0) > box(2)) { box(0) = 0; box(1) = 0; box(2) = 0; box(3) = 0 }
-    val bbox = (box(0), box(1), box(2), box(3))
-    val contentWords = metas.map(_._5).sum / 2
-    val shpLenWords = (50L + 4L * total + contentWords).toInt
-    val shxLenWords = (50L + 4L * total).toInt
-
-    def lensOf(pid: Int) = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      fs.open(new Path(partsDir, f"part-$pid%05d.trio/lens"))))
-
-    val zos = archiveStream(fs.create(zipFile, true))
+    val (geom, attrs) = layout(df, geomCol)
+    val specs = dbfSpecs(attrs.map(df.schema.fields(_)))
+    val (conf, fs, base) = target(df, dir, name)
+    val partsDir = sibling(base, "_parts")
+    val zipFile = sibling(base, ".zip")
     try {
-      // .shp — stream each partition's contents, prefixing record headers
-      zos.putNextEntry(new ZipEntry(s"$name.shp"))
-      zos.write(ShpWriter.fileHeader(shapeType, bbox, shpLenWords))
-      var recNum = 1
-      val buf = new Array[Byte](1 << 16)
+      val metas = writePartitions(df.rdd, conf, partsDir) { (_, rows, out) =>
+        val shpc = out("shpc")
+        val lens = new DataOutputStream(out("lens"))
+        val dbfr = out("dbfr")
+        val box = Array(Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
+        var count = 0L; var stype = 0; var contentBytes = 0L
+        try rows.foreach { row =>
+          val gOpt = geometryAt(row, geom)
+          gOpt.foreach { g =>
+            if (stype == 0) stype = ShpWriter.shapeTypeOf(g)
+            ShpWriter.accumBBox(g, box)
+          }
+          val content = ShpWriter.recordContent(gOpt)
+          shpc.write(content); lens.writeInt(content.length); contentBytes += content.length
+          dbfr.write(DbfWriter.recordBytes(specs, attrs.map(row.get)))
+          count += 1
+        } finally { shpc.close(); lens.close(); dbfr.close() }
+        (count, stype, box, contentBytes)
+      }
+
+      val total = metas.map(_._1).sum
+      val shapeType = metas.map(_._2).find(_ != 0).getOrElse(0)
+      val box = Array(Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
       metas.foreach { m =>
-        val lin = lensOf(m._1)
-        val cin = new java.io.BufferedInputStream(
-          fs.open(new Path(partsDir, f"part-${m._1}%05d.trio/shpc")))
-        try {
-          var i = 0L
-          while (i < m._2) {
-            val len = lin.readInt()
-            val hdr = java.nio.ByteBuffer.allocate(8)
-            hdr.putInt(recNum).putInt(len / 2)
-            zos.write(hdr.array())
+        box(0) = math.min(box(0), m._3(0)); box(1) = math.min(box(1), m._3(1))
+        box(2) = math.max(box(2), m._3(2)); box(3) = math.max(box(3), m._3(3))
+      }
+      if (shapeType == 0 || box(0) > box(2)) { box(0) = 0; box(1) = 0; box(2) = 0; box(3) = 0 }
+      val bbox = (box(0), box(1), box(2), box(3))
+      val shpLenWords = (50L + 4L * total + metas.map(_._4).sum / 2).toInt
+      val shxLenWords = (50L + 4L * total).toInt
+      def part(pid: Int, file: String) = new Path(partDir(partsDir, pid), file)
+      // calls `f` with each record length of partition `pid`, in order
+      def eachLen(pid: Int)(f: Int => Unit): Unit = {
+        val lin = new DataInputStream(new BufferedInputStream(fs.open(part(pid, "lens"))))
+        try { var i = 0L; while (i < metas(pid)._1) { f(lin.readInt()); i += 1 } }
+        finally lin.close()
+      }
+
+      val zos = archiveStream(fs.create(zipFile, true))
+      try {
+        zos.putNextEntry(new ZipEntry(s"$name.shp"))
+        zos.write(ShpWriter.fileHeader(shapeType, bbox, shpLenWords))
+        var recNum = 1
+        val buf = new Array[Byte](1 << 16)
+        metas.indices.foreach { pid =>
+          val cin = new BufferedInputStream(fs.open(part(pid, "shpc")))
+          try eachLen(pid) { len =>
+            zos.write(twoInts(recNum, len / 2))
             var rem = len
             while (rem > 0) {
               val n = cin.read(buf, 0, math.min(rem, buf.length))
               zos.write(buf, 0, n); rem -= n
             }
-            recNum += 1; i += 1
-          }
-        } finally { lin.close(); cin.close() }
-      }
-      zos.closeEntry()
-      // .shx — offsets reconstructed from the length streams alone
-      zos.putNextEntry(new ZipEntry(s"$name.shx"))
-      zos.write(ShpWriter.fileHeader(shapeType, bbox, shxLenWords))
-      var offsetWords = 50L
-      metas.foreach { m =>
-        val lin = lensOf(m._1)
-        try {
-          var i = 0L
-          while (i < m._2) {
-            val len = lin.readInt()
-            val e = java.nio.ByteBuffer.allocate(8)
-            e.putInt(offsetWords.toInt).putInt(len / 2)
-            zos.write(e.array())
-            offsetWords += 4 + len / 2; i += 1
-          }
-        } finally lin.close()
-      }
-      zos.closeEntry()
-      // .dbf — header on the driver, record bytes streamed verbatim
-      zos.putNextEntry(new ZipEntry(s"$name.dbf"))
-      zos.write(DbfWriter.headerBytes(specs, total.toInt))
-      val dbfBuf = new Array[Byte](1 << 16)
-      metas.foreach(m => streamFileInto(zos, fs,
-        new Path(partsDir, f"part-${m._1}%05d.trio/dbfr"), dbfBuf))
-      zos.write(0x1A)
-      zos.closeEntry()
-      zos.putNextEntry(new ZipEntry(s"$name.prj"))
-      zos.write(Wgs84Prj.getBytes(StandardCharsets.US_ASCII))
-      zos.closeEntry()
-    } finally zos.close()
-    fs.delete(partsDir, true)
+            recNum += 1
+          } finally cin.close()
+        }
+        zos.closeEntry()
+        // .shx — offsets reconstructed from the length streams alone
+        zos.putNextEntry(new ZipEntry(s"$name.shx"))
+        zos.write(ShpWriter.fileHeader(shapeType, bbox, shxLenWords))
+        var offsetWords = 50
+        metas.indices.foreach(pid => eachLen(pid) { len =>
+          zos.write(twoInts(offsetWords, len / 2))
+          offsetWords += 4 + len / 2
+        })
+        zos.closeEntry()
+        zos.putNextEntry(new ZipEntry(s"$name.dbf"))
+        zos.write(DbfWriter.headerBytes(specs, total.toInt))
+        metas.indices.foreach(pid => copyInto(zos, fs, part(pid, "dbfr"), buf))
+        zos.write(0x1A)
+        zos.closeEntry()
+        zos.putNextEntry(new ZipEntry(s"$name.prj"))
+        zos.write(Wgs84Prj.getBytes(StandardCharsets.US_ASCII))
+        zos.closeEntry()
+      } finally zos.close()
+    } finally fs.delete(partsDir, true)
     ExportResult(name, ".shp", zipFile.toString)
   }
 
   /** ESRI WKT for EPSG:4326 (public well-known text). */
-  val Wgs84Prj: String =
+  private val Wgs84Prj: String =
     """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137,298.257223563]],PRIMEM["Greenwich",0],UNIT["Degree",0.017453292519943295]]"""
 }

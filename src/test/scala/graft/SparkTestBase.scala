@@ -9,6 +9,20 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
 
+  private val suiteTempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything in
+    * it once the suite has run. */
+  def suiteTempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    suiteTempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try suiteTempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
+
   /** Every physical node of a plan, DESCENDING through the wrappers a
     * naive `plan.collect` stops at: AdaptiveSparkPlanExec (AQE hides
     * the whole query under a childless root — a structural assert on

@@ -12,8 +12,7 @@ import graft.functions.{GeoFunctions => G}
 
 class SinksSpec extends AnyFunSuite with SparkTestBase {
 
-  private def tmpDir: String =
-    java.nio.file.Files.createTempDirectory("graft_export_").toString
+  private def tmpDir: String = suiteTempDir("graft_export_")
 
   private lazy val geoDf = {
     import spark.implicits._
@@ -47,7 +46,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
     assert(manifest.contains("\"rows\":97"))
     assert((0 until 4).forall(i => manifest.contains(f"sh-$i%05d.zip")))
     // each shard is independently importable (own header), and the union
-    // of all shards is exactly the single-archive (funnel) content
+    // of all shards is exactly the single-archive content
     val rows = r.shardPaths.flatMap { p =>
       val zf = new ZipFile(new org.apache.hadoop.fs.Path(p).toUri.getPath)
       val entries = zf.entries().asScala.toSeq
@@ -58,12 +57,12 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
       assert(lines.head == "id,name")
       lines.tail
     }
-    val funnel = Exporter.exportCsv(df, "sh_one", dir)
-    val zf = new ZipFile(funnel.path)
-    val funnelLines = new String(zf.getInputStream(zf.getEntry("sh_one.csv"))
+    val single = Exporter.exportCsv(df, "sh_one", dir)
+    val zf = new ZipFile(single.path)
+    val singleLines = new String(zf.getInputStream(zf.getEntry("sh_one.csv"))
       .readAllBytes()).linesIterator.toSeq
     zf.close()
-    assert(rows.sorted == funnelLines.tail.sorted)
+    assert(rows.sorted == singleLines.tail.sorted)
   }
 
   test("KMZ export contains doc.kml with placemarks (S12)") {
@@ -83,14 +82,16 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
     assert(r.importType == ".shp")
     // unzip and re-read with the Shapefile source
     val x = graft.sources.Archive.extract(r.path)
-    val back = graft.sources.Shapefile.read(spark,
-      x.all.find(_.getName.endsWith(".shp")).get.getPath)
-    assert(back.count() == 5)
-    assert(back.columns.toSet == Set("id", "name", "the_geom"))
-    val row = back.filter(col("id") === 2)
-      .select(G.st_astext(col("the_geom")), col("name")).head()
-    assert(row.getString(0) == "POINT(2 4)")
-    assert(row.getString(1) == "row2")
+    try {
+      val back = graft.sources.Shapefile.read(spark,
+        x.all.find(_.getName.endsWith(".shp")).get.getPath)
+      assert(back.count() == 5)
+      assert(back.columns.toSet == Set("id", "name", "the_geom"))
+      val row = back.filter(col("id") === 2)
+        .select(G.st_astext(col("the_geom")), col("name")).head()
+      assert(row.getString(0) == "POINT(2 4)")
+      assert(row.getString(1) == "row2")
+    } finally graft.sources.Archive.cleanup(x.dir)
   }
 
   test("DBF writer/reader round trip incl. N/D/L types (S9)") {
@@ -122,7 +123,6 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
   test("catalog sink: staging + rename + collision + rollback (D1/D2/D6)") {
     val s = spark
     import s.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_")
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
     val r1 = CatalogTableSink.write(spark, df, "sink_test")
     assert(r1.table == "sink_test" && r1.rows == 2)
@@ -189,7 +189,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
 
   test("compaction: sprawled parquet dir rewritten to sized files, content identical") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_").toString + "/data"
+    val dir = suiteTempDir("graft_compact_") + "/data"
     // sprawl: 40 single-row-ish files (the foreachBatch / per-append shape)
     spark.range(4000).select(col("id"), concat(lit("row "), col("id")).as("s"))
       .repartition(40).write.parquet(dir)
@@ -212,7 +212,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
 
   test("selective compaction: healthy files move by rename, only sprawl is rewritten") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sel_").toString + "/data"
+    val dir = suiteTempDir("graft_sel_") + "/data"
     // 2 healthy-sized files + 30 tiny appended stragglers
     spark.range(40000).select(col("id"), concat(lit("payload "), col("id")).as("s"))
       .repartition(2).write.parquet(dir)
@@ -233,7 +233,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
 
   test("compaction refuses a hive root mixed with loose parquet files") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixed_").toString + "/data"
+    val dir = suiteTempDir("graft_mixed_") + "/data"
     spark.range(100).select(col("id"), (col("id") % 2).as("k"))
       .write.partitionBy("k").parquet(dir)
     // loose root-level file alongside the k=… dirs (malformed layout —
@@ -253,7 +253,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
     }
     // loose files at an INTERMEDIATE level of a multi-level tree are
     // refused too, not silently skipped
-    val deep = java.nio.file.Files.createTempDirectory("graft_deep_").toString + "/data"
+    val deep = suiteTempDir("graft_deep_") + "/data"
     spark.range(200).select(col("id"), (col("id") % 2).as("k"), (col("id") % 3).as("j"))
       .write.partitionBy("k", "j").parquet(deep)
     spark.range(200, 220).select(col("id"), lit(7L).as("j"))
@@ -271,7 +271,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
   test("selective compaction re-addresses healthy files in (non-hive) subdirectories") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nest_").toString + "/data"
+    val dir = suiteTempDir("graft_nest_") + "/data"
     // healthy-sized files inside a nested batch dir (streaming-sink shape),
     // sprawl at the root
     spark.range(40000).select(col("id"), concat(lit("payload "), col("id")).as("s"))
@@ -292,7 +292,7 @@ class SinksSpec extends AnyFunSuite with SparkTestBase {
   test("compaction preserves hive-partitioned layout and partition values") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hive_").toString + "/data"
+    val dir = suiteTempDir("graft_hive_") + "/data"
     // 3 partitions × ~10 sprawled files each, written the hive way
     spark.range(3000)
       .select(col("id"), (col("id") % 3).as("k"),
